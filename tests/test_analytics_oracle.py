@@ -147,3 +147,17 @@ if ROWS_ONLY:
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_view_memo_is_per_session(spark):
+    """Temp views belong to a SparkSession, not to its context: a second
+    session on the same SparkContext starts with no views, so the view
+    memo must register them again instead of reusing the first
+    session's entry."""
+    fn = entrymod.queries()["q3_shipping_priority"]
+    first = fn(spark, SF_DIR)
+    want = _row_multiset(first.columns, [tuple(r) for r in first.collect()])
+    other = spark.newSession()
+    second = fn(other, SF_DIR)
+    got = _row_multiset(second.columns, [tuple(r) for r in second.collect()])
+    assert got == want

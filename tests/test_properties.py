@@ -276,3 +276,66 @@ def test_prepared_compressed_web_parity(spark, small_corpus):
     comp_pages = [r.asDict(recursive=True) for r in comp.pages.orderBy("seq").collect()]
     assert raw_pages == comp_pages and len(raw_pages) > 10
     prep.unpersist()
+
+
+def test_writer_columns_match_read_schemas(spark, small_corpus, monkeypatch):
+    """The crawl re-reads its own snapshots with explicit schemas
+    (PAGES_SCHEMA, FRONTIER_SCHEMA_V2 [+ seq_bucket]), and an explicit
+    parquet read nulls a missing column and drops an extra one without
+    error. Pin every writer to those schemas so drift fails here: the
+    Spark round's pages and frontier writes (fused-seq path and the
+    deferral path without seq_bucket) and fastround's pyarrow writers."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from wormpy_spark.operators.fetch import PAGES_SCHEMA
+    from wormpy_spark.operators.frontier import FRONTIER_SCHEMA_V2
+    from wormpy_spark.plans.fastround import (
+        FRONTIER_ARROW_SCHEMA,
+        PAGES_ARROW_SCHEMA,
+    )
+    from wormpy_spark.sources.catalog import SnapshotCatalog
+
+    pages_schema = spark.createDataFrame([], PAGES_SCHEMA).schema
+    frontier_schema = spark.createDataFrame([], FRONTIER_SCHEMA_V2).schema
+    frontier_cols = frontier_schema.names
+
+    written: dict[str, list[list[str]]] = {"pages": [], "frontier": []}
+    stock_write = SnapshotCatalog.write_table
+
+    def recording_write(self, name, round_id, df):
+        written.setdefault(name, []).append(df.columns)
+        return stock_write(self, name, round_id, df)
+
+    monkeypatch.setattr(SnapshotCatalog, "write_table", recording_write)
+    tables = corpus_to_spark(spark, small_corpus)
+    base_cfg = dict(base_url="https://host0.test", budget=50, politeness_seed=7,
+                    fast_round_max=0)
+    run_crawl(spark, tables["web"], CrawlConfig(**base_cfg),
+              sitemaps=tables["sitemaps"])
+    run_crawl(spark, tables["web"],
+              CrawlConfig(**base_cfg, max_per_host_per_round=3),
+              sitemaps=tables["sitemaps"])
+
+    assert written["pages"]
+    assert all(cols == pages_schema.names for cols in written["pages"])
+    variants = {tuple(cols) for cols in written["frontier"]}
+    assert variants == {
+        tuple(frontier_cols), tuple(frontier_cols + ["seq_bucket"])
+    }
+
+    assert from_arrow_schema(PAGES_ARROW_SCHEMA) == pages_schema
+    assert from_arrow_schema(FRONTIER_ARROW_SCHEMA) == frontier_schema
+
+
+def test_body_codec_is_zlib_level1():
+    """The pinned fetch table's body bytes are zlib level 1 — the same
+    bytes prepare_fetch_table has always cached — and round-trip."""
+    import zlib
+
+    from wormpy_spark.operators.fetch import deflate_body, inflate_body
+
+    body = b"<html><body>" + b"wormpy " * 300 + b"</body></html>"
+    assert deflate_body(body) == zlib.compress(body, 1)
+    assert deflate_body(bytearray(body)) == zlib.compress(body, 1)
+    assert inflate_body(deflate_body(body)) == body
+    assert deflate_body(None) is None and inflate_body(None) is None

@@ -21,6 +21,12 @@ Layout
 - ``fixtures``   : deterministic synthetic corpora (web graph, images)
 - ``oracle``     : in-memory reference-semantics executor used as the
                    golden comparator in tests
+- ``_pyworker``  : per-task import-cache guard for the Python workers
+                   (installed on import, see its docstring)
 """
+
+from . import _pyworker
+
+_pyworker.install()
 
 __version__ = "0.1.0"

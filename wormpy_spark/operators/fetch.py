@@ -31,6 +31,7 @@ unit-tested offline (tests/test_live_fetch.py); deployment swaps in
 
 from __future__ import annotations
 
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -208,6 +209,26 @@ def process_row(row: dict, discovery: bool, extract_memo: dict | None = None) ->
     return out
 
 
+# Body codec of the pinned fetch table: prepare_fetch_table deflates
+# every body once, and the fetch kernel below inflates it inside the
+# Python worker. Level 1: bodies are read on every fetch, so the fast
+# level is the right trade.
+def deflate_body(b: bytes | None) -> bytes | None:
+    return None if b is None else zlib.compress(bytes(b), 1)
+
+
+def inflate_body(z: bytes | None) -> bytes | None:
+    return None if z is None else zlib.decompress(z)
+
+
+def deflate_bodies(bodies: pd.Series) -> pd.Series:
+    """Series form of deflate_body, for prepare_fetch_table's pandas
+    UDF. Module-level, so it pickles by reference and a worker running
+    it imports the package (and with it the per-task import-cache
+    guard, wormpy_spark/_pyworker.py)."""
+    return pd.Series([deflate_body(v) for v in bodies], dtype=object)
+
+
 def make_fetch_extract(
     discovery: bool, scope_base: str | None = None, probe_skip_bc=None
 ):
@@ -247,8 +268,6 @@ def make_fetch_extract(
     ``RecordBatch.to_pylist``/``pa.array`` move the same data through
     pyarrow's C paths, and left-join NULLs arrive as None instead of
     pandas NaN-coerced floats."""
-    import zlib
-
     import pyarrow as pa
 
     from ..functions.urlnorm import normalize_url
@@ -275,7 +294,7 @@ def make_fetch_extract(
                     z = r.pop(f"{col}_z", "__absent__")
                     if z == "__absent__":
                         continue
-                    r[col] = None if z is None else zlib.decompress(z)
+                    r[col] = inflate_body(z)
             rows = [
                 process_row(r, discovery, extract_memo) for r in rows_in
             ]

@@ -56,6 +56,7 @@ from ..functions.urlnorm import (
 from ..operators.fetch import (
     PAGES_SCHEMA,
     PAGES_SCHEMA_EXPAND,
+    deflate_bodies,
     make_fetch_extract,
 )
 from ..operators.frontier import (
@@ -168,21 +169,10 @@ def prepare_fetch_table(
     parity-tested against the uncompressed path."""
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if compress_bodies:
-        import zlib as _zlib
-
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf as _pandas_udf
-
-        @_pandas_udf("binary")
-        def _deflate(b: pd.Series) -> pd.Series:
-            return pd.Series(
-                [None if v is None else _zlib.compress(bytes(v), 1) for v in b],
-                dtype=object,
-            )
-
+        deflate = F.pandas_udf(deflate_bodies, "binary")
         for col in ("body", "dynamic_body"):
             if col in web.columns:
-                web = web.withColumn(f"{col}_z", _deflate(F.col(col))).drop(col)
+                web = web.withColumn(f"{col}_z", deflate(F.col(col))).drop(col)
     # sortWithinPartitions: hash partitioning (the join contract) is
     # preserved, and the columnar cache's per-batch min/max statistics
     # become range-tight — a literal IN filter over the cache (the
