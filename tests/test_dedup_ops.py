@@ -18,7 +18,12 @@ from pyspark.sql import functions as F
 
 from wormpy_spark.operators.dedup import minhash_lsh_jaccard_pairs
 from wormpy_spark.operators.multimodal import phash_neardup_pairs
-from wormpy_spark.operators.seen import Bloom, anti_join_seen, build_bloom_shards
+from wormpy_spark.operators.seen import (
+    Bloom,
+    add_bloom_delta,
+    anti_join_seen,
+    build_bloom_shards_sized,
+)
 
 
 def test_minhash_lsh_short_docs_no_crash(spark):
@@ -106,7 +111,9 @@ def test_anti_join_seen_bloom_branch_executes(spark):
 
     seen = keyed(spark.createDataFrame([(i,) for i in range(0, 100, 2)], "k long"))
     cand = keyed(spark.createDataFrame([(i,) for i in range(100)], "k long"))
-    shards = build_bloom_shards(seen, "url_hash", "host_shard", expected_per_shard=64)
+    shards = build_bloom_shards_sized(
+        seen, "url_hash", "host_shard", {}, default_expected=64
+    )
     assert set(shards) == {0, 2}  # even keys → even shards only
     assert all(isinstance(b, Bloom) for b in shards.values())
     bc = spark.sparkContext.broadcast(shards)
@@ -115,6 +122,14 @@ def test_anti_join_seen_bloom_branch_executes(spark):
     assert "maybe_seen" in plan, "bloom pre-filter branch did not execute"
     got = sorted(int(r["url_norm"]) for r in out.collect())
     assert got == sorted(range(1, 100, 2))
+
+    # folding the odd keys in must leave no false negative in any shard
+    odd = cand.filter(F.col("url_norm").cast("long") % 2 == 1)
+    add_bloom_delta(shards, odd, "url_hash", "host_shard", default_expected=64)
+    assert set(shards) == {0, 1, 2, 3}
+    keys = cand.select("url_hash", "host_shard").toPandas()
+    for shard, grp in keys.groupby("host_shard"):
+        assert shards[int(shard)].might_contain(grp["url_hash"].to_numpy(np.int64)).all()
 
 
 def test_cuckoo_filter_contract():

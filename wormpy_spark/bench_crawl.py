@@ -20,8 +20,11 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import sys
+import tempfile
 import time
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -88,16 +91,20 @@ def _skew_ratio(spark, min_stage_id: int = -1) -> float | None:
 
 _U64 = (1 << 64) - 1
 
+# Most verified rows the verify tail collects and pair-counts on the
+# driver; neardup_count_driver's temporaries are 1024×n uint64 blocks
+NEARDUP_DRIVER_MAX = 4096
+
 
 def neardup_count_driver(phashes: list[int], max_hamming: int = 6) -> int:
     """Driver-side equivalent of ``phash_neardup_pairs(...).count()``
     for tiny inputs: number of unordered pairs with hamming ≤
     ``max_hamming``. Spark phashes are SIGNED int64 — view them as
     uint64 before the XOR (two's complement reinterpretation is exact).
-    Vectorized: byte-wise popcount lookup over the full n×n XOR matrix
-    (n ≤ 4096 ⇒ ≤ 134 MB transient) — the previous pure-Python
-    bin().count() pair loop cost several seconds near the gate
-    boundary (round-5 ADVICE)."""
+    Vectorized: SWAR popcount over 1024×n XOR blocks (n ≤
+    NEARDUP_DRIVER_MAX ⇒ ≤ 34 MB per temporary) — the previous
+    pure-Python bin().count() pair loop cost several seconds near the
+    gate boundary (round-5 ADVICE)."""
     import numpy as np
 
     n = len(phashes)
@@ -124,6 +131,29 @@ def neardup_count_driver(phashes: list[int], max_hamming: int = 6) -> int:
         rows = np.arange(i0, min(i0 + block, n))[:, None]
         total += int((close & (np.arange(n)[None, :] > rows)).sum())
     return total
+
+
+def verify_counts(ver: DataFrame, max_hamming: int = 6) -> tuple[int, int, int]:
+    """(verified, failed, near-dup pairs) over ``decode_verify`` rows.
+
+    Up to NEARDUP_DRIVER_MAX rows come back in one bounded collect of
+    three narrow columns and are counted on the driver. Above it, a
+    distributed agg and ``phash_neardup_pairs(...).count()`` keep the
+    driver's memory flat. A row fails when sha_ok or caption_ok is
+    false: SQL three-valued ~(a AND b), NULLs excluded from the sum."""
+    from .operators.multimodal import phash_neardup_pairs
+
+    rows = ver.select("sha_ok", "caption_ok", "phash").limit(NEARDUP_DRIVER_MAX + 1).collect()
+    if len(rows) <= NEARDUP_DRIVER_MAX:
+        n_bad = sum(r["sha_ok"] is False or r["caption_ok"] is False for r in rows)
+        phashes = [r["phash"] for r in rows if r["phash"] is not None]
+        return len(rows), n_bad, neardup_count_driver(phashes, max_hamming)
+    agg = ver.agg(
+        F.count("*").alias("n"),
+        F.sum((~(F.col("sha_ok") & F.col("caption_ok"))).cast("int")).alias("bad"),
+    ).first()
+    n_pairs = phash_neardup_pairs(ver, max_hamming=max_hamming).count()
+    return agg["n"], agg["bad"] or 0, n_pairs
 
 
 def run(cpus: int, corpus_dir: str, budget: int) -> dict:
@@ -174,9 +204,6 @@ def run(cpus: int, corpus_dir: str, budget: int) -> dict:
     web = prepare_fetch_table(spark, spark.read.parquet(f"{corpus_dir}/web"))
     images = spark.read.parquet(f"{corpus_dir}/images")
     truth = spark.read.parquet(f"{corpus_dir}/images_truth")
-    import tempfile
-
-    import pandas as pd  # noqa: F401
 
     def _noop(batches):
         for b in batches:
@@ -189,10 +216,8 @@ def run(cpus: int, corpus_dir: str, budget: int) -> dict:
     # snapshot commits go to tmpfs when available: a cluster writes
     # snapshots to distributed storage (per-executor-parallel), so a
     # single shared local disk would measure the box, not the engine
-    import tempfile as _tf
-
     ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    ckpt = _tf.mkdtemp(prefix="bench_ckpt_", dir=ckpt_base)
+    ckpt = tempfile.mkdtemp(prefix="bench_ckpt_", dir=ckpt_base)
 
     t0 = time.time()
     stage_fence = _max_stage_id(spark)
@@ -210,8 +235,6 @@ def run(cpus: int, corpus_dir: str, budget: int) -> dict:
         cfg.bloom_min_seen = int(os.environ["SPARK_GRAFT_BLOOM_MIN"])
     res = run_crawl(spark, web, cfg)
     n_pages = res.processed  # exact by construction; no extra scan
-    import sys
-
     t_crawl = time.time()
     print(f"[bench_crawl] crawl_s={t_crawl - t0:.2f}", file=sys.stderr)
 
@@ -233,33 +256,10 @@ def run(cpus: int, corpus_dir: str, budget: int) -> dict:
     # the decode stage becomes embarrassingly parallel.
     img_subset = img_subset.repartition(fixed_partitions, "image_id")
     ver = decode_verify(img_subset, truth)
-    # ONE job for the whole verification tail: the decode stage runs
-    # distributed, and only the three narrow flag/hash columns come
-    # back (the bench corpus fetches a few hundred images; the
-    # distributed agg + phash_neardup_pairs operator path remains the
-    # scale answer and is parity-tested in tests/test_dedup_ops.py —
-    # the previous cache + agg job + collect job cost ~2 extra job
-    # floors per parallelism level).
-    probe = ver.select("sha_ok", "caption_ok", "phash").collect()
-    n_verified = len(probe)
-
-    def _bad(r) -> int:
-        # SQL three-valued ~(a AND b): NULL conjuncts stay NULL and are
-        # excluded from the sum, exactly like the previous agg
-        a, b = r["sha_ok"], r["caption_ok"]
-        if a is False or b is False:
-            return 1
-        if a is None or b is None:
-            return 0
-        return 0
-
-    n_bad = sum(_bad(r) for r in probe)
-    t_ver = time.time()
-    print(f"[bench_crawl] verify_s={t_ver - t_crawl:.2f}", file=sys.stderr)
-    n_neardup = neardup_count_driver(
-        [r["phash"] for r in probe if r["phash"] is not None]
-    )
-    print(f"[bench_crawl] neardup_s={time.time() - t_ver:.2f}", file=sys.stderr)
+    # the bench corpus verifies a few hundred images: one bounded
+    # collect, counted on the driver (verify_counts)
+    n_verified, n_bad, n_neardup = verify_counts(ver)
+    print(f"[bench_crawl] verify_s={time.time() - t_crawl:.2f}", file=sys.stderr)
     wall = time.time() - t0
     skew_ratio = _skew_ratio(spark, stage_fence)  # after the clock: diagnostics
 

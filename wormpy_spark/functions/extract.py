@@ -14,13 +14,13 @@ stdlib ``html.parser`` mini-DOM (bs4 is not in the environment):
   og:* pairs, ld+json as 'schema_org')
 
 Pure-Python cores are shared by the golden oracle and the engine's
-pandas UDFs so extraction parity is by construction; the ported
-reference unit cases (tests/test_scraper.py:80-96) pin the semantics
-against the reference itself.
+fetch/extract kernel so extraction parity is by construction; the
+ported reference unit cases (tests/test_scraper.py:80-96) pin the
+semantics against the reference itself.
 
-Scale note: these run as Arrow-batched pandas UDFs inside
-``mapInPandas``/``withColumn`` — one Python invocation per ~2048-row
-batch, never per row.
+Scale note: the engine calls them from the fetch kernel
+(``operators/fetch.py:make_fetch_extract``) inside ``mapInArrow`` —
+one Python invocation per Arrow batch, never per row.
 """
 
 from __future__ import annotations
@@ -28,10 +28,6 @@ from __future__ import annotations
 import json
 import re
 from html.parser import HTMLParser
-
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, MapType, StringType
 
 from .urlnorm import resolve_link
 
@@ -511,33 +507,3 @@ def is_dynamic_content(html: str, threshold: int = DYNAMIC_THRESHOLD) -> bool:
     (content_processor.py:270-287)."""
     return len(extract_text(html)) < threshold
 
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized engine UDFs
-# ---------------------------------------------------------------------------
-
-@pandas_udf(ArrayType(StringType()))
-def extract_links_udf(htmls: pd.Series, base_urls: pd.Series, ctypes: pd.Series) -> pd.Series:
-    out = []
-    for html, base, ct in zip(htmls, base_urls, ctypes):
-        if html is None or ct is None:
-            out.append([])
-        else:
-            out.append(sorted(extract_links(html, base, ct)))
-    return pd.Series(out)
-
-
-@pandas_udf(StringType())
-def extract_text_udf(htmls: pd.Series) -> pd.Series:
-    return htmls.map(lambda h: extract_text(h) if h is not None else None)
-
-
-@pandas_udf(MapType(StringType(), StringType()))
-def extract_meta_udf(htmls: pd.Series, ctypes: pd.Series, urls: pd.Series) -> pd.Series:
-    out = []
-    for html, ct, url in zip(htmls, ctypes, urls):
-        if ct is None:
-            out.append(None)
-        else:
-            out.append(extract_meta(html or "", ct, url))
-    return pd.Series(out)

@@ -74,70 +74,45 @@ class Bloom:
         return Bloom(self.n_bits, self.n_hashes, self.bits | other.bits)
 
 
-def build_bloom(seen: DataFrame, hash_col: str, expected: int, fpp: float = 0.01) -> Bloom:
-    """Distributed build: each partition computes a partial bitmap via
-    mapInPandas (map-side combine); partials are OR-ed on the driver.
-    Only ceil(n_bits/8) bytes per partition cross the wire, never keys."""
-    proto = Bloom.sized(expected, fpp)
-    n_bits, n_hashes = proto.n_bits, proto.n_hashes
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b = Bloom(n_bits, n_hashes)
-        any_rows = False
-        for pdf in batches:
-            if len(pdf):
-                any_rows = True
-                b.add(pdf[hash_col].to_numpy(np.int64))
-        if any_rows:
-            yield pd.DataFrame({"bits": [b.bits.tobytes()]})
-
-    parts = seen.select(hash_col).mapInPandas(partial, "bits binary").collect()
-    out = Bloom(n_bits, n_hashes)
-    for row in parts:
-        out.bits |= np.frombuffer(row["bits"], np.uint8)
-    return out
-
-
-def build_bloom_shards(
-    seen: DataFrame,
+def _fold_shards(
+    blooms: dict[int, Bloom],
+    keys: DataFrame,
     hash_col: str,
     shard_col: str,
-    expected_per_shard: int,
-    fpp: float = 0.01,
+    dims: dict[int, tuple[int, int]],
+    default_dims: tuple[int, int],
 ) -> dict[int, Bloom]:
-    """Per-host-shard sidecar build: each partition emits one partial
-    bitmap PER SHARD it holds; the driver ORs partials shard-wise. No
-    bitmap ever covers more than one shard's keys, so the per-object
-    memory stays bounded no matter the total seen count (the 10^9-key
-    posture: ~1.2 GB total splits into n_shards independently
-    broadcastable pieces)."""
-    proto = Bloom.sized(expected_per_shard, fpp)
-    n_bits, n_hashes = proto.n_bits, proto.n_hashes
+    """OR ``keys`` into ``blooms`` shard-wise; returns the same dict,
+    mutated. Each partition emits one partial bitmap PER SHARD it holds
+    (mapInPandas, map-side combine) and the driver ORs the partials, so
+    only bitmaps cross the wire, never keys, and no bitmap covers more
+    than one shard's keys. A shard new to ``blooms`` gets a bitmap of
+    ``dims.get(shard, default_dims)`` (n_bits, n_hashes)."""
+
+    def get(acc: dict[int, Bloom], shard: int) -> Bloom:
+        b = acc.get(shard)
+        if b is None:
+            b = acc[shard] = Bloom(*dims.get(shard, default_dims))
+        return b
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: dict[int, Bloom] = {}
         for pdf in batches:
             for shard, grp in pdf.groupby(shard_col):
-                b = acc.setdefault(int(shard), Bloom(n_bits, n_hashes))
-                b.add(grp[hash_col].to_numpy(np.int64))
+                get(acc, int(shard)).add(grp[hash_col].to_numpy(np.int64))
         if acc:
-            yield pd.DataFrame(
-                {
-                    "shard": list(acc),
-                    "bits": [b.bits.tobytes() for b in acc.values()],
-                }
-            )
+            bits = [b.bits.tobytes() for b in acc.values()]
+            yield pd.DataFrame({"shard": list(acc), "bits": bits})
 
-    parts = (
-        seen.select(hash_col, shard_col)
-        .mapInPandas(partial, "shard int, bits binary")
-        .collect()
-    )
-    out: dict[int, Bloom] = {}
-    for row in parts:
-        b = out.setdefault(int(row["shard"]), Bloom(n_bits, n_hashes))
-        b.bits |= np.frombuffer(row["bits"], np.uint8)
-    return out
+    parts = keys.select(hash_col, shard_col).mapInPandas(partial, "shard int, bits binary")
+    for row in parts.collect():
+        get(blooms, int(row["shard"])).bits |= np.frombuffer(row["bits"], np.uint8)
+    return blooms
+
+
+def _dims(expected: int, fpp: float) -> tuple[int, int]:
+    b = Bloom.sized(expected, fpp)
+    return b.n_bits, b.n_hashes
 
 
 def build_bloom_shards_sized(
@@ -148,53 +123,22 @@ def build_bloom_shards_sized(
     default_expected: int,
     fpp: float = 0.01,
 ) -> dict[int, Bloom]:
-    """Like build_bloom_shards but with PER-SHARD sizing. Uniform
-    sizing (total/n_shards) saturates the hot shard of a skewed (or
-    single-host) crawl — at 16x skew the hot shard gets ~0.6 bits/key
-    and its FPP approaches 1, sending every candidate to the exact
-    anti-join while still paying the bitmap build. Callers size each
-    shard from its observed key share extrapolated to the full crawl
-    budget, so one sizing lasts the whole crawl and the bitmaps can be
-    grown incrementally (add_bloom_delta) instead of rebuilt."""
-    sizing = {
-        int(s): Bloom.sized(max(e, 64), fpp)
-        for s, e in expected_by_shard.items()
-    }
-    dims = {s: (b.n_bits, b.n_hashes) for s, b in sizing.items()}
-    proto_default = Bloom.sized(max(default_expected, 64), fpp)
-    default_dims = (proto_default.n_bits, proto_default.n_hashes)
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[int, Bloom] = {}
-        for pdf in batches:
-            for shard, grp in pdf.groupby(shard_col):
-                b = acc.get(int(shard))
-                if b is None:
-                    n_bits, n_hashes = dims.get(int(shard), default_dims)
-                    b = acc.setdefault(int(shard), Bloom(n_bits, n_hashes))
-                b.add(grp[hash_col].to_numpy(np.int64))
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "shard": list(acc),
-                    "bits": [b.bits.tobytes() for b in acc.values()],
-                }
-            )
-
-    parts = (
-        seen.select(hash_col, shard_col)
-        .mapInPandas(partial, "shard int, bits binary")
-        .collect()
+    """Per-host-shard sidecar build with PER-SHARD sizing. No bitmap
+    ever covers more than one shard's keys, so the per-object memory
+    stays bounded no matter the total seen count (the 10^9-key posture:
+    ~1.2 GB total splits into n_shards independently broadcastable
+    pieces). Uniform sizing (total/n_shards) would saturate the hot
+    shard of a skewed (or single-host) crawl — at 16x skew the hot
+    shard gets ~0.6 bits/key and its FPP approaches 1, sending every
+    candidate to the exact anti-join while still paying the bitmap
+    build. Callers size each shard from its observed key share
+    extrapolated to the full crawl budget, so one sizing lasts the
+    whole crawl and the bitmaps can be grown incrementally
+    (add_bloom_delta) instead of rebuilt."""
+    dims = {int(s): _dims(e, fpp) for s, e in expected_by_shard.items()}
+    return _fold_shards(
+        {}, seen, hash_col, shard_col, dims, _dims(default_expected, fpp)
     )
-    out: dict[int, Bloom] = {}
-    for row in parts:
-        s = int(row["shard"])
-        b = out.get(s)
-        if b is None:
-            n_bits, n_hashes = dims.get(s, default_dims)
-            b = out.setdefault(s, Bloom(n_bits, n_hashes))
-        b.bits |= np.frombuffer(row["bits"], np.uint8)
-    return out
 
 
 def add_bloom_delta(
@@ -215,39 +159,9 @@ def add_bloom_delta(
     mutated, with bitmaps for previously-unseen shards created at
     ``default_expected`` sizing."""
     dims = {s: (b.n_bits, b.n_hashes) for s, b in blooms.items()}
-    proto_default = Bloom.sized(max(default_expected, 64), fpp)
-    default_dims = (proto_default.n_bits, proto_default.n_hashes)
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[int, Bloom] = {}
-        for pdf in batches:
-            for shard, grp in pdf.groupby(shard_col):
-                b = acc.get(int(shard))
-                if b is None:
-                    n_bits, n_hashes = dims.get(int(shard), default_dims)
-                    b = acc.setdefault(int(shard), Bloom(n_bits, n_hashes))
-                b.add(grp[hash_col].to_numpy(np.int64))
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "shard": list(acc),
-                    "bits": [b.bits.tobytes() for b in acc.values()],
-                }
-            )
-
-    parts = (
-        delta.select(hash_col, shard_col)
-        .mapInPandas(partial, "shard int, bits binary")
-        .collect()
+    return _fold_shards(
+        blooms, delta, hash_col, shard_col, dims, _dims(default_expected, fpp)
     )
-    for row in parts:
-        s = int(row["shard"])
-        b = blooms.get(s)
-        if b is None:
-            n_bits, n_hashes = default_dims
-            b = blooms.setdefault(s, Bloom(n_bits, n_hashes))
-        b.bits |= np.frombuffer(row["bits"], np.uint8)
-    return blooms
 
 
 def anti_join_seen(
@@ -272,7 +186,7 @@ def anti_join_seen(
       join entirely (no shuffle), bloom-positives take the exact
       shuffle anti-join — the bitmap broadcast is ~1 MB/450k keys vs
       tens of MB for raw keys. The sidecar is a dict of per-host-shard
-      bitmaps (build_bloom_shards); candidates must carry ``shard_col``;
+      bitmaps (build_bloom_shards_sized); candidates must carry ``shard_col``;
     - fallback: plain shuffle anti-join.
     """
     seen_keys = seen.select(hash_col, key_col)

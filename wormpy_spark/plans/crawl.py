@@ -75,7 +75,7 @@ from ..operators.seen import (
     build_bloom_shards_sized,
 )
 from ..sources.catalog import SnapshotCatalog
-from ..sources.sitemap import expand_sitemaps
+from ..sources import sitemap
 from .fastround import (
     run_fast_round,
     write_frontier_parquet,
@@ -403,9 +403,7 @@ def run_crawl(
         seen = _empty(spark, SEEN_SCHEMA)
         seed_rows = [(base, 0, -1, 0, base)]
         if config.discovery and sitemaps is not None:
-            bases = spark.createDataFrame([(base,)], "base_url string")
-            found = expand_sitemaps(spark, sitemaps, bases)
-            sitemap_urls = sorted(r["url"] for r in found.collect())
+            sitemap_urls = sitemap.sitemap_urls(sitemaps, base)
             # sorted(set(...)) seeding order (sitemap_parser.py:22,
             # main.py:52-58): base first, then sitemap URLs by rank.
             # Seeds are the only rows canonicalized here (driver-side,

@@ -12,9 +12,9 @@ Reference behavior:
 - R3 rows have ONLY the content key (scraper.py:130)
 
 Two paths:
-- ``write_*_distributed``: df.write.json()/csv() — row-per-line shapes
-  for cluster-scale output (sorted via orderBy; Spark writes one file
-  per partition, ordering preserved across sorted partitions)
+- ``write_csv_distributed``: df.write.csv() — row-per-line shape for
+  cluster-scale output (sorted via orderBy; Spark writes one file per
+  partition, ordering preserved across sorted partitions)
 - ``collect_*``: driver-side golden shape, byte-compatible with the
   reference's single-file output (used by tests and small runs)
 """
@@ -63,23 +63,6 @@ def collect_csv(pages: DataFrame, sitemap_urls: list[str]) -> list[list[str]]:
             ]
         )
     return out
-
-
-def write_json_distributed(pages: DataFrame, path: str) -> None:
-    """Scale path: sorted row-per-line JSON (url, metadata, content,
-    discovered_urls) — the same row shape, one object per line."""
-    (
-        pages.orderBy("url_norm")
-        .select(
-            F.col("url_norm").alias("url"),
-            "metadata",
-            F.col("text").alias("content"),
-            "discovered_urls",
-            "error",
-        )
-        .write.mode("overwrite")
-        .json(path)
-    )
 
 
 def write_csv_distributed(pages: DataFrame, path: str) -> None:

@@ -1,4 +1,4 @@
-"""Sitemap scan + recursive parse as DataFrame transforms (S2/S3).
+"""Sitemap scan + one-level parse for one base URL (S2/S3).
 
 Reference behavior (modules/utils/sitemap_parser.py):
 - probe 9 well-known locations in order, first response whose
@@ -7,10 +7,14 @@ Reference behavior (modules/utils/sitemap_parser.py):
   into sub-sitemaps; other locs pass is_valid_url (:69-114)
 - result: sorted(set(...)) (:22)
 
-This implementation is multi-host: seeding a crawl over thousands of
-hosts is one DataFrame job (probe-join → first-hit window → XML-parse
-pandas UDF → explode → sub-sitemap join → second parse pass), not a
-per-host Python loop. XML parsing runs inside Arrow batches.
+A crawl is seeded from one base, and its sitemaps are a handful of XML
+rows (13 URLs on the benchmark corpus). So this is a driver-side
+lookup, like the reference's loop: the 9 probe URLs are a pure function
+of the base, one literal-IN filter on the sitemaps table fetches them,
+and a second one fetches the sub-sitemaps the winner names. The XML is
+parsed on the driver. At most two small collects, no Python worker: a
+UDF plan would pay a Python boundary crossing and several job floors
+for a few rows.
 """
 
 from __future__ import annotations
@@ -18,11 +22,8 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 from urllib.parse import urljoin
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BooleanType, StringType
 
 from ..functions.urlnorm import is_valid_url
 
@@ -33,82 +34,45 @@ SITEMAP_LOCATIONS = [  # sitemap_parser.py:49-53
 ]
 
 
-@pandas_udf(ArrayType(StringType()))
-def _parse_locs_udf(xmls: pd.Series) -> pd.Series:
+def _parse_locs(xml: str | None) -> list[str]:
     """All <loc> texts in document order; [] on parse error
     (sitemap_parser.py:90-93)."""
-    out = []
-    for xml in xmls:
-        if xml is None:
-            out.append([])
-            continue
-        try:
-            root = ET.fromstring(xml)
-            out.append([e.text.strip() for e in root.iter() if "loc" in e.tag and e.text])
-        except ET.ParseError:
-            out.append([])
-    return pd.Series(out)
+    if xml is None:
+        return []
+    try:
+        root = ET.fromstring(xml)
+    except ET.ParseError:
+        return []
+    return [e.text.strip() for e in root.iter() if "loc" in e.tag and e.text]
 
 
-@pandas_udf(ArrayType(StringType()))
-def _probe_urls_udf(bases: pd.Series) -> pd.Series:
-    return bases.map(lambda b: [urljoin(b, loc) for loc in SITEMAP_LOCATIONS])
-
-
-@pandas_udf(BooleanType())
-def _is_valid_vs_base_udf(urls: pd.Series, bases: pd.Series) -> pd.Series:
-    return pd.Series([is_valid_url(u, b) for u, b in zip(urls, bases)])
-
-
-def expand_sitemaps(
-    spark: SparkSession, sitemaps: DataFrame, bases: DataFrame
-) -> DataFrame:
-    """bases(base_url) → (base_url, url) of sitemap-discovered URLs.
-
-    ``sitemaps`` is the fixture table (url, content_type, xml); on a
-    live crawl the same plan applies with the probe join replaced by a
-    mapInPandas HTTP fetch.
-    """
-    # probe_rank = position in the locations list (posexplode keeps order)
-    probes = bases.select(
-        "base_url", F.posexplode(_probe_urls_udf(F.col("base_url"))).alias("probe_rank", "probe_url")
+def _lookup(sitemaps: DataFrame, urls: list[str]) -> dict[str, tuple]:
+    """url → (content_type, xml) for the listed URLs found in the table."""
+    rows = (
+        sitemaps.filter(F.col("url").isin(urls))
+        .select("url", "content_type", "xml")
+        .collect()
     )
-    hits = probes.join(
-        sitemaps.select(F.col("url").alias("probe_url"), "content_type", "xml"),
-        on="probe_url",
-        how="inner",
-    ).filter(F.col("content_type").contains("xml"))
-    first_hit = (
-        hits.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("base_url").orderBy("probe_rank")
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("base_url", "xml")
-    )
-    locs = first_hit.select(
-        "base_url", F.explode(_parse_locs_udf(F.col("xml"))).alias("loc")
-    )
-    direct = locs.filter(~F.col("loc").endswith(".xml")).filter(
-        _is_valid_vs_base_udf(F.col("loc"), F.col("base_url"))
-    )
+    return {r["url"]: (r["content_type"], r["xml"]) for r in rows}
+
+
+def sitemap_urls(sitemaps: DataFrame, base: str) -> list[str]:
+    """Sorted sitemap-discovered URLs of ``base``.
+
+    ``sitemaps`` is the fixture table (url, content_type, xml)."""
+    probes = [urljoin(base, loc) for loc in SITEMAP_LOCATIONS]
+    found = _lookup(sitemaps, probes)
+    for probe in probes:
+        content_type, xml = found.get(probe, (None, None))
+        if "xml" in (content_type or ""):
+            break
+    else:
+        return []
+    locs = _parse_locs(xml)
+    urls = {u for u in locs if not u.endswith(".xml") and is_valid_url(u, base)}
     # one-level recursion into sub-sitemaps (sitemap_parser.py:95-114)
-    subs = (
-        locs.filter(F.col("loc").endswith(".xml"))
-        .join(
-            sitemaps.select(F.col("url").alias("loc"), F.col("xml").alias("sub_xml")),
-            on="loc",
-            how="inner",
-        )
-        .select(
-            "base_url", F.explode(_parse_locs_udf(F.col("sub_xml"))).alias("loc")
-        )
-        .filter(_is_valid_vs_base_udf(F.col("loc"), F.col("base_url")))
-    )
-    return (
-        direct.select("base_url", F.col("loc").alias("url"))
-        .unionByName(subs.select("base_url", F.col("loc").alias("url")))
-        .distinct()
-    )
+    subs = [u for u in locs if u.endswith(".xml")]
+    if subs:
+        for _, xml in _lookup(sitemaps, subs).values():
+            urls.update(u for u in _parse_locs(xml) if is_valid_url(u, base))
+    return sorted(urls)
