@@ -5,25 +5,20 @@
 - phash band LSH must find pairs whose differing bits are SPREAD across
   bands (ADVICE r1: 4x16-bit bands only guaranteed recall for
   hamming<=3; now 8x8-bit bands cover the default max_hamming=6)
-- the bloom sidecar branch of anti_join_seen must genuinely execute
-  when configured on (ADVICE r1: the broadcast short-circuit made it
-  unreachable below 100k seen keys)
+- both rungs of anti_join_seen (broadcast below BROADCAST_SEEN_MAX,
+  shuffled at or above it) must plan a plain LeftAnti join and return
+  the exact anti-join
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
 from wormpy_spark.operators.dedup import minhash_lsh_jaccard_pairs
 from wormpy_spark.operators.multimodal import phash_neardup_pairs
-from wormpy_spark.operators.seen import (
-    Bloom,
-    add_bloom_delta,
-    anti_join_seen,
-    build_bloom_shards_sized,
-)
+from wormpy_spark.operators import seen as seen_mod
+from wormpy_spark.operators.seen import anti_join_seen
 
 
 def test_minhash_lsh_short_docs_no_crash(spark):
@@ -97,63 +92,42 @@ def test_phash_neardup_spread_bits_exact_recall(spark):
     assert neardup_count_driver(signed, max_hamming=6) == len(want)
 
 
-def test_anti_join_seen_bloom_branch_executes(spark):
-    """With broadcast_below=0 + a sharded bloom sidecar, the bloom
-    pre-filter branch must be the one that runs (plan contains the
-    maybe_seen UDF), per-shard bitmaps must be built and consulted, and
-    the result must equal the exact anti-join."""
+def test_anti_join_seen_rungs_plan_exact_left_anti(spark, monkeypatch):
+    """Below BROADCAST_SEEN_MAX the seen keys broadcast; at 0 the join
+    is shuffled. Both rungs plan one LeftAnti join with no Python eval
+    node and no checkpoint, and both return the exact anti-join."""
     def keyed(df):
         return df.select(
             F.xxhash64(F.col("k").cast("string")).alias("url_hash"),
             F.col("k").cast("string").alias("url_norm"),
-            F.pmod(F.col("k"), F.lit(4)).cast("int").alias("host_shard"),
         )
 
-    seen = keyed(spark.createDataFrame([(i,) for i in range(0, 100, 2)], "k long"))
-    cand = keyed(spark.createDataFrame([(i,) for i in range(100)], "k long"))
-    shards = build_bloom_shards_sized(
-        seen, "url_hash", "host_shard", {}, default_expected=64
-    )
-    assert set(shards) == {0, 2}  # even keys → even shards only
-    assert all(isinstance(b, Bloom) for b in shards.values())
-    bc = spark.sparkContext.broadcast(shards)
-    out = anti_join_seen(cand, seen, bc, seen_count=50, broadcast_below=0)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "maybe_seen" in plan, "bloom pre-filter branch did not execute"
-    got = sorted(int(r["url_norm"]) for r in out.collect())
-    assert got == sorted(range(1, 100, 2))
+    seen = keyed(spark.range(0, 100, 2).withColumnRenamed("id", "k"))
+    cand = keyed(spark.range(100).withColumnRenamed("id", "k"))
 
-    # folding the odd keys in must leave no false negative in any shard
-    odd = cand.filter(F.col("url_norm").cast("long") % 2 == 1)
-    add_bloom_delta(shards, odd, "url_hash", "host_shard", default_expected=64)
-    assert set(shards) == {0, 1, 2, 3}
-    keys = cand.select("url_hash", "host_shard").toPandas()
-    for shard, grp in keys.groupby("host_shard"):
-        assert shards[int(shard)].might_contain(grp["url_hash"].to_numpy(np.int64)).all()
+    def run():
+        out = anti_join_seen(cand, seen, 50)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "LeftAnti" in plan
+        assert "EvalPython" not in plan and "ExistingRDD" not in plan
+        return plan, sorted(int(r["url_norm"]) for r in out.collect())
 
+    plan, got = run()
+    assert "BroadcastHashJoin" in plan
+    assert got == list(range(1, 100, 2))
 
-def test_cuckoo_filter_contract():
-    """Cuckoo sidecar (north-rule 'bloom/cuckoo'): no false negatives,
-    sane FPP, and DELETION — the capability the Bloom variant lacks."""
-    from wormpy_spark.operators.seen import Cuckoo
-
-    rng = np.random.Generator(np.random.PCG64(3))
-    keys = rng.integers(-(2**62), 2**62, size=20_000, dtype=np.int64)
-    keys = np.unique(keys)
-    c = Cuckoo.sized(len(keys))
-    c.add(keys)
-    assert c.might_contain(keys).all(), "false negative"
-
-    other = rng.integers(-(2**62), 2**62, size=20_000, dtype=np.int64)
-    other = np.setdiff1d(other, keys)
-    fpp = c.might_contain(other).mean()
-    assert fpp < 0.01, f"fpp too high: {fpp}"
-
-    # delete half, they must disappear; the rest must remain
-    half = keys[: len(keys) // 2]
-    assert c.delete(half).all()
-    assert c.might_contain(keys[len(keys) // 2 :]).all()
-    assert c.might_contain(half).mean() < 0.01  # only residual FPP left
+    monkeypatch.setattr(seen_mod, "BROADCAST_SEEN_MAX", 0)
+    # the inputs are tiny: keep Spark's own size-based broadcast off so
+    # the plan shows the rung anti_join_seen chose
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan, got = run()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert "BroadcastHashJoin" not in plan
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+    assert got == list(range(1, 100, 2))
 
 
 def test_connected_components_chain_and_clusters(spark):
@@ -304,88 +278,3 @@ def test_asof_join_payload_collision_raises(spark):
     right = spark.createDataFrame([(5, "a", 1.0)], "rt long, k string, v double")
     with pytest.raises(ValueError, match="collide"):
         asof_join_backward(left, right, "k", "t", "rt", ["v"])
-
-
-def test_asof_join_forward_vs_duckdb(spark):
-    """direction='forward': smallest right_time >= left_time, verified
-    against DuckDB ASOF JOIN with the reversed inequality."""
-    import duckdb
-
-    from wormpy_spark.operators.asof import asof_join
-
-    lrows = [(i, (i * 37) % 100, ["a", "b", "c"][i % 3]) for i in range(60)]
-    rrows = [((j * 13) % 100, ["a", "b", "c"][j % 2], float(j)) for j in range(30)]
-    left = spark.createDataFrame(lrows, "id long, t long, k string")
-    right = (
-        spark.createDataFrame(rrows, "rt long, k string, v double")
-        # make (k, rt) unique — the tie contract both engines share
-        .groupBy("k", "rt").agg(F.min("v").alias("v"))
-    )
-    got = {
-        r["id"]: r["v"]
-        for r in asof_join(
-            left, right, "k", "t", "rt", ["v"], direction="forward"
-        ).collect()
-    }
-    con = duckdb.connect()
-    con.register("l", pd.DataFrame(lrows, columns=["id", "t", "k"]))
-    rp = (
-        pd.DataFrame(rrows, columns=["rt", "k", "v"])
-        .groupby(["k", "rt"], as_index=False)["v"].min()
-    )
-    con.register("r", rp)
-    want = {
-        int(row[0]): (None if row[1] is None or row[1] != row[1] else float(row[1]))
-        for row in con.execute(
-            "SELECT l.id, r.v FROM l ASOF LEFT JOIN r "
-            "ON l.k = r.k AND l.t <= r.rt"
-        ).fetchall()
-    }
-    assert got == want
-
-
-def test_asof_join_nearest_vs_pandas(spark):
-    """direction='nearest' matches pandas merge_asof(direction='nearest')
-    on tie-free data; the documented tie rule (equal distance -> the
-    backward match) is pinned separately."""
-    from wormpy_spark.operators.asof import asof_join
-
-    # odd left times vs even right times: no equal-distance ties, so
-    # pandas (which resolves ties forward) and this engine agree
-    lrows = [(i, 2 * ((i * 7) % 50) + 1, ["a", "b"][i % 2]) for i in range(40)]
-    rrows = [(2 * ((j * 11) % 50), ["a", "b"][j % 2], float(j)) for j in range(20)]
-    left = spark.createDataFrame(lrows, "id long, t long, k string")
-    right = (
-        spark.createDataFrame(rrows, "rt long, k string, v double")
-        .groupBy("k", "rt").agg(F.min("v").alias("v"))
-    )
-    got = {
-        r["id"]: r["v"]
-        for r in asof_join(
-            left, right, "k", "t", "rt", ["v"], direction="nearest"
-        ).collect()
-    }
-    lp = pd.DataFrame(lrows, columns=["id", "t", "k"]).sort_values("t")
-    rp = (
-        pd.DataFrame(rrows, columns=["rt", "k", "v"])
-        .groupby(["k", "rt"], as_index=False)["v"].min()
-        .sort_values("rt")
-    )
-    merged = pd.merge_asof(
-        lp, rp, left_on="t", right_on="rt", by="k", direction="nearest"
-    )
-    want = {
-        int(r.id): (None if r.v != r.v else float(r.v))
-        for r in merged.itertuples()
-    }
-    assert got == want
-
-    # tie rule: t=10 with right rows at 5 and 15 -> backward (5) wins
-    tie = asof_join(
-        spark.createDataFrame([(1, 10, "a")], "id long, t long, k string"),
-        spark.createDataFrame(
-            [(5, "a", 1.0), (15, "a", 2.0)], "rt long, k string, v double"
-        ),
-        "k", "t", "rt", ["v"], direction="nearest",
-    ).collect()
-    assert tie[0]["v"] == 1.0

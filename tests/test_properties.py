@@ -1,18 +1,16 @@
 """Property-based + invariance tests (SURVEY.md §5.3-4/5):
 
 - canonicalize idempotence over adversarial URL-ish strings
-- Bloom filter: never a false negative (correctness of the sidecar)
 - distribution invariance: the crawl's (seq, url) sequence must be
   IDENTICAL at different partition counts — the core property that
   makes the ordering claim survive a 1000-executor cluster
-- checkpoint resume ≡ uninterrupted run
+- checkpoint resume ≡ uninterrupted run, at every round boundary
 - skewed corpus (one host holding ~2/3 of pages) crawls identically
   to the oracle
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import functions as F
 import pytest
 from hypothesis import given, settings
@@ -21,7 +19,6 @@ from hypothesis import strategies as st
 from wormpy_spark.fixtures.spark_tables import corpus_to_spark
 from wormpy_spark.fixtures.webgen import generate_corpus
 from wormpy_spark.functions.urlnorm import normalize_url
-from wormpy_spark.operators.seen import Bloom
 from wormpy_spark.oracle import crawl_oracle
 from wormpy_spark.plans.crawl import CrawlConfig, run_crawl
 
@@ -40,15 +37,6 @@ def test_canonicalize_idempotent(u):
     except ValueError:
         return  # urlparse rejects some garbage; the engine sees pre-parsed URLs
     assert normalize_url(once) == once
-
-
-@given(st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1), min_size=1, max_size=500))
-@settings(max_examples=50, deadline=None)
-def test_bloom_no_false_negatives(keys):
-    b = Bloom.sized(len(keys), fpp=0.01)
-    arr = np.array(keys, dtype=np.int64)
-    b.add(arr)
-    assert b.might_contain(arr).all()
 
 
 @pytest.fixture(scope="module")
@@ -144,26 +132,42 @@ def test_host_throttle_mode(spark, small_corpus):
     assert order_capped == order_free
 
 
-def test_bloom_engaged_parity(spark, small_corpus):
-    """Force the bloom sidecar on from the first round: results must be
-    identical to the bloom-off run (false positives only re-route rows
-    through the exact anti-join, never drop them)."""
+def test_shuffle_anti_join_parity(spark, small_corpus, monkeypatch):
+    """The admission anti-join's shuffled rung (seen at or above
+    BROADCAST_SEEN_MAX) must crawl exactly like the broadcast rung:
+    same order, seen set and page rows."""
+    import wormpy_spark.plans.crawl as crawl_mod
+    from wormpy_spark.operators import seen as seen_mod
+
     tables = corpus_to_spark(spark, small_corpus)
-    # fast_round_max=0: the bloom branch only exists on the Spark path
-    base_cfg = dict(base_url="https://host0.test", budget=50, politeness_seed=7,
-                    fast_round_max=0)
-    off = run_crawl(
-        spark, tables["web"], CrawlConfig(**base_cfg, use_bloom=False),
-        sitemaps=tables["sitemaps"],
+    # fast_round_max=0: admission anti-joins run only on the Spark path
+    broadcast = _full_outputs(spark, tables, fast_round_max=0)
+
+    plans = []
+    stock = crawl_mod.anti_join_seen
+
+    def recording(*args):
+        out = stock(*args)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(seen_mod, "BROADCAST_SEEN_MAX", 0)
+    monkeypatch.setattr(crawl_mod, "anti_join_seen", recording)
+    # the seen snapshots are tiny, so without this Spark's planner would
+    # broadcast them on its own and the shuffled join would never run
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        shuffled = _full_outputs(spark, tables, fast_round_max=0)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    # the anti-join's own plan line (upstream cached stages keep their
+    # own broadcast joins, e.g. the fetch's due-key semi-join)
+    anti = [ln for p in plans for ln in p.splitlines() if "LeftAnti" in ln]
+    assert anti and all(
+        "SortMergeJoin" in ln or "ShuffledHashJoin" in ln for ln in anti
     )
-    on = run_crawl(
-        spark, tables["web"],
-        CrawlConfig(**base_cfg, use_bloom=True, bloom_min_seen=0),
-        sitemaps=tables["sitemaps"],
-    )
-    assert [r["url_norm"] for r in on.order.collect()] == [
-        r["url_norm"] for r in off.order.collect()
-    ]
+    assert shuffled[:3] == broadcast[:3]
 
 
 def test_probe_fast_and_join_paths_agree(spark, small_corpus):
@@ -339,3 +343,84 @@ def test_body_codec_is_zlib_level1():
     assert deflate_body(bytearray(body)) == zlib.compress(body, 1)
     assert inflate_body(deflate_body(body)) == body
     assert deflate_body(None) is None and inflate_body(None) is None
+
+
+def _outputs(res):
+    """(order, seen, pages, host_state) of one crawl result."""
+    return (
+        [(r["seq"], r["url_norm"]) for r in res.order.collect()],
+        sorted(r["url_norm"] for r in res.seen.collect()),
+        {r["seq"]: r.asDict(recursive=True) for r in res.pages.collect()},
+        {
+            r["host"]: (r["next_ix"], round(r["clock_s"], 6), r["attempts"])
+            for r in res.host_state.collect()
+        },
+    )
+
+
+RESUME_BASE = dict(base_url="https://host0.test", politeness_seed=7)
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, small_corpus):
+    """Uninterrupted crawls shared by the resume cases, keyed on
+    (budget, per-host throttle): every crawl path is output-identical,
+    so fast_round_max does not change the reference. The web table is
+    prepared once (prepare_fetch_table) for every crawl of the cases."""
+    from wormpy_spark.plans.crawl import prepare_fetch_table
+
+    tables = corpus_to_spark(spark, small_corpus)
+    tables["web"] = prepare_fetch_table(spark, tables["web"])
+    refs = {}
+
+    def get(budget, throttle):
+        if (budget, throttle) not in refs:
+            res = run_crawl(
+                spark, tables["web"],
+                CrawlConfig(**RESUME_BASE, budget=budget,
+                            max_per_host_per_round=throttle),
+                sitemaps=tables["sitemaps"],
+            )
+            refs[budget, throttle] = (len(res.metrics_rows), _outputs(res))
+        return refs[budget, throttle]
+
+    yield tables, get
+    tables["web"].unpersist()
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        # the 12 seeds take a fast round; with the throttle, round 1's
+        # frontier (deferred + expanded rows) exceeds 12 and the crawl
+        # hands over to Spark rounds, whose max_rounds stops carry
+        # deferred rows that cannot be rebuilt from pages
+        dict(budget=12, max_per_host_per_round=3, fast_round_max=12),
+        dict(budget=50, fast_round_max=0),  # Spark rounds only
+        dict(budget=12, max_per_host_per_round=3),  # fast rounds only
+    ],
+    ids=["handover", "spark", "throttled"],
+)
+def test_resume_at_every_round_boundary(spark, uninterrupted, tmp_path, cfg):
+    """Stop after each committed round k (max_rounds=k), then resume:
+    the result must equal the uninterrupted crawl in order, seen set,
+    every page row and host_state. A resumed round never re-checks its
+    frontier against seen, so this is the evidence that admission alone
+    keeps seen exact across a restart."""
+    tables, get = uninterrupted
+    n_rounds, ref = get(cfg["budget"], cfg.get("max_per_host_per_round"))
+    assert n_rounds > 1
+    for k in range(1, n_rounds):
+        ckpt = str(tmp_path / f"k{k}")
+        first = run_crawl(
+            spark, tables["web"],
+            CrawlConfig(**RESUME_BASE, **cfg, checkpoint_dir=ckpt, max_rounds=k),
+            sitemaps=tables["sitemaps"],
+        )
+        assert first.rounds == k
+        resumed = run_crawl(
+            spark, tables["web"],
+            CrawlConfig(**RESUME_BASE, **cfg, checkpoint_dir=ckpt, resume=True),
+            sitemaps=tables["sitemaps"],
+        )
+        assert _outputs(resumed) == ref, f"resume after round {k} diverged"

@@ -12,8 +12,8 @@ Layout
 - ``functions``  : scalar/vector functions (URL canonicalization,
                    HTML extraction, image codecs, text analysis)
 - ``operators``  : relational operators (frontier priority, seen-set
-                   anti-join + bloom sidecar, politeness schedule,
-                   dedup families, similarity search)
+                   anti-join, politeness schedule, dedup families,
+                   similarity search)
 - ``sources``    : sources/sinks (snapshot catalog shim, sitemap parsing,
                    JSON/CSV sinks with reference-identical shapes)
 - ``plans``      : the BSP crawl driver loop

@@ -178,11 +178,6 @@ def run(cpus: int, corpus_dir: str, budget: int) -> dict:
         # shuffle scratch on tmpfs — per-executor local NVMe on a real
         # cluster; one shared spinning /tmp here would measure the disk
         extra["spark.local.dir"] = "/dev/shm/spark_local"
-    # experiment knob: extra spark conf as "k=v;k=v" (measurement only)
-    for kv in os.environ.get("SPARK_GRAFT_BENCH_CONF", "").split(";"):
-        if "=" in kv:
-            k, v = kv.split("=", 1)
-            extra[k] = v
     evdir = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
     if evdir:
         os.makedirs(evdir, exist_ok=True)
@@ -225,14 +220,8 @@ def run(cpus: int, corpus_dir: str, budget: int) -> dict:
         base_url="https://host0.test",
         budget=budget,
         politeness_seed=42,
-        use_bloom=True,
         checkpoint_dir=ckpt,
     )
-    # experiment knob: seen-count threshold where the bloom sidecar
-    # (overlapped build, scalable per-row check) replaces the per-round
-    # driver-serial broadcast build of the seen keys
-    if os.environ.get("SPARK_GRAFT_BLOOM_MIN"):
-        cfg.bloom_min_seen = int(os.environ["SPARK_GRAFT_BLOOM_MIN"])
     res = run_crawl(spark, web, cfg)
     n_pages = res.processed  # exact by construction; no extra scan
     t_crawl = time.time()
@@ -268,7 +257,7 @@ def run(cpus: int, corpus_dir: str, budget: int) -> dict:
     shutil.rmtree(ckpt, ignore_errors=True)  # free tmpfs
     round_walls = [
         {k: m[k] for k in ("round", "fetched", "wall_s", "seq_s", "fetch_s",
-                           "bloom_s", "expand_s") if k in m}
+                           "expand_s") if k in m}
         for m in (getattr(res, "metrics_rows", None) or [])
     ]
     return {

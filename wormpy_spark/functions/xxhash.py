@@ -2,8 +2,8 @@
 
 The crawl loop's driver fast path (plans/crawl.py) computes the same
 ``host_shard = pmod(xxhash64(host), n_host_shards)`` values the Spark
-path computes, so pages snapshots written driver-side stay bit-
-compatible with the bloom sidecar's shard routing. Spark's xxhash64 is
+path computes, so pages and frontier snapshots written driver-side
+carry the same lineage column as Spark-written ones. Spark's xxhash64 is
 XXH64 (Yann Collet's public xxHash spec) with seed 42 over the UTF-8
 bytes of the string, returned as a SIGNED 64-bit long — parity is
 property-tested against the Spark expression in tests/test_urlnorm.py.

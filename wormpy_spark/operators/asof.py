@@ -5,9 +5,7 @@ semantics).
 
 For every left row, attach the right row with the LARGEST
 ``right_time`` <= ``left_time`` within the same key (inclusive,
-"backward" direction — the default), the SMALLEST ``right_time`` >=
-``left_time`` ("forward"), or whichever of the two is closer
-("nearest"; equal distance resolves backward).
+"backward" direction — the one the query registry uses).
 
 Spark-first shape: tag both sides, union, and run ONE window pass per
 key ordered by (time, origin) that carries the last non-null right
@@ -19,9 +17,6 @@ per-partition sort:
 - no per-key collect, no driver state — scales to arbitrarily many
   keys, and a skewed key costs one partition's sort, which AQE's
   skew-split handles like any other window;
-- "nearest" adds a second Sort+Window over the SAME exchange (the
-  planner reuses the hash partitioning; only the per-partition sort
-  runs twice) — still one shuffle total;
 - ties: a right row AT the left timestamp matches (origin orders the
   right row first); callers must make (key, right_time) unique
   (pre-aggregate duplicates) or the matched payload among equal
@@ -33,10 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_INTERNAL = ("_t", "_o", "_p", "_m", "_mb", "_mf")
+_INTERNAL = ("_t", "_o", "_p", "_mb")
 
 
-def asof_join(
+def asof_join_backward(
     left: DataFrame,
     right: DataFrame,
     on: str,
@@ -44,24 +39,17 @@ def asof_join(
     right_time: str,
     payload_cols: list[str],
     tolerance=None,
-    direction: str = "backward",
 ) -> DataFrame:
-    """Left as-of join: all ``left`` columns plus ``payload_cols`` from
-    the matched right row (null when no right row matches under
-    ``direction``/``tolerance``).
+    """Left backward as-of join: all ``left`` columns plus
+    ``payload_cols`` from the matched right row (null when no right row
+    matches under ``tolerance``).
 
     ``tolerance`` (optional): a Column/literal in the time column's
     difference domain — a match further than ``tolerance`` from
     ``left_time`` is nulled out, like pandas
     ``merge_asof(tolerance=...)``. The matched right_time rides the
     payload struct, so the bound is a post-window projection: no extra
-    shuffle.
-
-    ``direction``: "backward" (default), "forward", or "nearest"
-    (pandas ``merge_asof`` parity; "nearest" resolves equal-distance
-    ties backward)."""
-    if direction not in ("backward", "forward", "nearest"):
-        raise ValueError(f"unknown direction {direction!r}")
+    shuffle."""
     for c in _INTERNAL:
         if c in left.columns:
             raise ValueError(f"left side already has internal column {c}")
@@ -90,68 +78,21 @@ def asof_join(
     )
     u = l_side.unionByName(r, allowMissingColumns=True)
 
-    # at equal _t the right row (_o=0) precedes the left row in both
-    # traversal directions, so an exact-timestamp right row matches
+    # at equal _t the right row (_o=0) precedes the left row, so an
+    # exact-timestamp right row matches
     wb = (
         Window.partitionBy(on)
         .orderBy("_t", "_o")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    wf = (
-        Window.partitionBy(on)
-        .orderBy(F.desc("_t"), "_o")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-
-    m = u
-    if direction in ("backward", "nearest"):
-        m = m.withColumn("_mb", F.last("_p", ignorenulls=True).over(wb))
-    if direction in ("forward", "nearest"):
-        m = m.withColumn("_mf", F.last("_p", ignorenulls=True).over(wf))
-    out = m.filter(F.col("_o") == 1)
-
-    lt = F.col(left_time)
-    if direction in ("backward", "nearest"):
-        mb = F.col("_mb")
-        if tolerance is not None:
-            mb = F.when(F.col("_mb._rt") >= lt - tolerance, mb)
-        out = out.withColumn("_mb", mb)
-    if direction in ("forward", "nearest"):
-        mf = F.col("_mf")
-        if tolerance is not None:
-            mf = F.when(F.col("_mf._rt") <= lt + tolerance, mf)
-        out = out.withColumn("_mf", mf)
-
-    if direction == "backward":
-        out = out.withColumn("_m", F.col("_mb"))
-    elif direction == "forward":
-        out = out.withColumn("_m", F.col("_mf"))
-    else:  # nearest: closer of the two; tie -> backward
-        both = F.col("_mb").isNotNull() & F.col("_mf").isNotNull()
-        back_wins = (lt - F.col("_mb._rt")) <= (F.col("_mf._rt") - lt)
+    out = u.withColumn("_mb", F.last("_p", ignorenulls=True).over(wb))
+    out = out.filter(F.col("_o") == 1)
+    if tolerance is not None:
         out = out.withColumn(
-            "_m",
-            F.when(both & back_wins, F.col("_mb"))
-            .when(both, F.col("_mf"))
-            .otherwise(F.coalesce(F.col("_mb"), F.col("_mf"))),
+            "_mb",
+            F.when(F.col("_mb._rt") >= F.col(left_time) - tolerance, F.col("_mb")),
         )
 
     for c in payload_cols:
-        out = out.withColumn(c, F.col(f"_m.{c}"))
+        out = out.withColumn(c, F.col(f"_mb.{c}"))
     return out.drop(*[c for c in _INTERNAL if c in out.columns])
-
-
-def asof_join_backward(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    payload_cols: list[str],
-    tolerance=None,
-) -> DataFrame:
-    """Backward as-of join (original entry point) — see asof_join."""
-    return asof_join(
-        left, right, on, left_time, right_time, payload_cols,
-        tolerance=tolerance, direction="backward",
-    )

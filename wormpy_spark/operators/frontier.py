@@ -168,9 +168,9 @@ def expand_frontier(
     """J4/O4: per-page outlinks → normalized, scope-filtered, per-parent
     distinct, sibling-ranked candidate frontier rows for the next round.
 
-    The admission anti-join vs the seen set (J2) is applied by the
-    caller (operators.seen.anti_join_seen) so it can use the round's
-    refreshed bloom sidecar.
+    The admission anti-join vs the seen set (J1) is applied by the
+    caller (operators.seen.anti_join_seen) against the seen set that
+    includes this round's pages.
 
     Fast path: when the pages carry ``discovered_norm`` (the fetch
     kernel's pre-canonicalized, scope-filtered, per-parent

@@ -4,7 +4,6 @@ Each round is one Catalyst-optimizable batch job over the whole
 frontier:
 
     frontier → canonicalize/hash/host → scope filter (P4)
-             → ANTI JOIN seen [bloom pre-filter] (J1)
              → within-round first-occurrence dedup (J2 equivalence)
              → HEAD-model probe join dropping suspicious image/* (P5/P6)
              → [robots filter — north_rule option]
@@ -12,7 +11,7 @@ frontier:
              → budget cut seq < B (P9/O7)
              → GET-model join vs web + one mapInPandas extract pass
              → politeness schedule (applyInPandas per host, T1/T2)
-             → expansions (J4/O4) → anti-join seen → next frontier
+             → expansions (J4/O4) → ANTI JOIN seen (J1) → next frontier
              → snapshot commit {frontier, seen, pages, host_state,
                metrics} (T6 — resumable, per-partition lineage)
 
@@ -28,14 +27,22 @@ against the golden oracle in tests/test_golden.py):
   engine therefore retries in-round and only accounts the extra
   politeness draws;
 - expansions admitted against end-of-round seen ≡ admission-time seen
-  (a dupe admitted mid-round is pop-skipped later either way).
+  (a dupe admitted mid-round is pop-skipped later either way);
+- J1 runs once per URL, at admission: every frontier row was anti-
+  joined against seen when its frontier was written (expansion
+  admission, fastround's driver seen_set, or the resume rebuild of a
+  deferred expansion; seeds meet an empty seen), and seen has grown
+  since only by rows fetched from EARLIER frontiers, so a round never
+  re-checks its own frontier.
 
 Scale posture: frontier/seen/pages are parquet snapshots (Iceberg when
 the jar is present — sources.catalog shim), re-read each round, so
 lineage never grows; the global sequence is the range-partition rank
-pattern (no one-task sort); the seen anti-join gets a bloom sidecar
-pre-filter; hosts shard by pmod(xxhash64(host), n_host_shards) and AQE
-splits skewed joins at runtime.
+pattern (no one-task sort); the seen anti-join broadcasts the seen
+keys while they are small and shuffles above
+operators.seen.BROADCAST_SEEN_MAX; hosts shard by
+pmod(xxhash64(host), n_host_shards) and AQE splits skewed joins at
+runtime.
 """
 
 from __future__ import annotations
@@ -69,11 +76,7 @@ from ..operators.frontier import (
 )
 from ..operators.politeness import SCHEDULE_SCHEMA, make_schedule_fn
 from ..operators.robots import RobotsCache, robots_allows_udf
-from ..operators.seen import (
-    add_bloom_delta,
-    anti_join_seen,
-    build_bloom_shards_sized,
-)
+from ..operators.seen import anti_join_seen
 from ..sources.catalog import SnapshotCatalog
 from ..sources import sitemap
 from .fastround import (
@@ -82,7 +85,7 @@ from .fastround import (
     write_pages_parquet,
 )
 
-SEEN_SCHEMA = "url_hash long, url_norm string, host_shard int"
+SEEN_SCHEMA = "url_hash long, url_norm string"
 HOST_STATE_SCHEMA = "host string, next_ix long, clock_s double, attempts long"
 
 
@@ -96,19 +99,7 @@ class CrawlConfig:
     checkpoint_dir: str | None = None
     resume: bool = False
     max_rounds: int = 256
-    use_bloom: bool = True
     n_host_shards: int = 64
-    # below this, the seen keys broadcast whole (anti_join_seen); above
-    # it the bloom sidecar takes over as the no-shuffle pre-filter —
-    # its bitmap broadcast is ~30x smaller than the raw keys. The
-    # broadcast anti-join is ONE plan subtree; the bloom path's
-    # definite-new ∪ checked-suspects union evaluates its upstream
-    # (explode + dedup + UDF flag) once per branch unless checkpointed
-    # (see anti_join_seen), so prefer the broadcast ladder rung while
-    # the keys fit: 2M keys ≈ 140 MB of (hash, url) broadcast — fine
-    # under the 24g bench driver; size DOWN on small drivers. At 10^9+
-    # seen the sidecar takes over regardless.
-    bloom_min_seen: int = 2_000_000
     # max suspicious-image rows collectable for the probe fast path
     # (above this the per-round probe semi-join runs instead); 0
     # forces the join path (used by parity tests)
@@ -322,20 +313,8 @@ def run_crawl(
         if not rounds_list:
             return _empty(spark, SEEN_SCHEMA)
         paths = [f"{catalog.root}/pages/snap-{rr:06d}" for rr in sorted(set(rounds_list))]
-        df = read_pages_snaps(paths)
-        if "host_shard" in df.columns:
-            shard = F.col("host_shard")
-        else:
-            # pre-host_shard checkpoint (resume compatibility): backfill
-            # the shard from url_norm — same formula the loop uses
-            shard = F.pmod(
-                F.xxhash64(host_udf(F.col("url_norm"))),
-                F.lit(config.n_host_shards),
-            ).cast("int")
-        return df.select(
-            F.xxhash64("url_norm").alias("url_hash"),
-            "url_norm",
-            shard.alias("host_shard"),
+        return read_pages_snaps(paths).select(
+            F.xxhash64("url_norm").alias("url_hash"), "url_norm"
         )
 
     if config.resume and catalog.latest_round() is not None:
@@ -343,8 +322,9 @@ def run_crawl(
         assert state["base"] == base, "resume with a different base URL"
         ck_shards = state.get("n_host_shards")
         if ck_shards is not None and ck_shards != config.n_host_shards:
-            # a different shard count would mis-route bloom lookups for
-            # keys seen before the resume — refuse rather than corrupt
+            # pages and frontier rows written before the resume carry
+            # host_shard under the old count; mixing counts would give
+            # one host two shard ids — refuse rather than corrupt
             raise ValueError(
                 f"resume with n_host_shards={config.n_host_shards} but the "
                 f"checkpoint was written with {ck_shards}; use the same value"
@@ -356,7 +336,6 @@ def run_crawl(
         # (loose bounds skew buckets, never ordering)
         parent_bounds = tuple(state.get("parent_bounds", (-1, processed)))
         sitemap_urls = state.get("sitemap_urls", [])
-        seen = seen_from_pages(catalog.rounds())
         pending_round = state.get("expansion_pending")
         if pending_round is not None:
             # the final committed round deferred its expansion (its
@@ -381,16 +360,16 @@ def run_crawl(
                 )
             )
             frontier = anti_join_seen(
-                cand, seen, None,
-                seen_count=processed,
-                broadcast_below=config.bloom_min_seen,
+                cand, seen_from_pages(catalog.rounds()), processed
             ).select(
                 "url", "round_enqueued", "parent_seq", "sibling_rank",
                 "url_norm", "host", "url_hash", "host_shard"
             )
         else:
             frontier = catalog.read(spark, "frontier")
-        resume_frontier_exact = pending_round is not None
+        # the rebuilt frontier went through the dedup above; a read one
+        # (writer config unknown) keeps the loop's dedup
+        frontier_deduped = pending_round is not None
         metrics_rows = state.get("metrics_rows", [])
         # resume always re-enters on the Spark path (frontier/seen are
         # snapshot-resident); tiny post-resume rounds still work, they
@@ -400,7 +379,6 @@ def run_crawl(
     else:
         start_round = 0
         processed = 0
-        seen = _empty(spark, SEEN_SCHEMA)
         seed_rows = [(base, 0, -1, 0, base)]
         if config.discovery and sitemaps is not None:
             sitemap_urls = sitemap.sitemap_urls(sitemaps, base)
@@ -413,36 +391,24 @@ def run_crawl(
                 for i, u in enumerate(sitemap_urls)
             ]
         frontier = spark.createDataFrame(seed_rows, FRONTIER_SCHEMA)
-        resume_frontier_exact = False
+        frontier_deduped = False  # base may repeat in the sitemap list
         frontier_rows = list(seed_rows)
         seen_set = set()
         parent_bounds = (-1, 0)  # seeds carry parent_seq = -1
 
     pages_rounds: list[int] = catalog.rounds() if config.resume else []
-    bloom_bc = None
-    bloom_state = None  # incremental sharded-bloom sidecar (built once,
-    # grown by per-round deltas — see the engagement block below)
     seen_cache = None  # persisted incremental seen set (guide §2.4: the
     # admission anti-join's seen side was re-derived from EVERY pages
     # snapshot every round — an O(total-seen) parquet re-read + re-hash
     # per round; the cache makes it O(delta): cached seen ∪ this
     # round's snapshot)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # True when the current frontier is KNOWN globally dedup'd at write
-    # time (expansion/fastround output with no per-host deferral in
-    # play): the loop's J2 dedup shuffle is then an identity and is
-    # skipped — one full frontier exchange per round saved. Seeds (base
-    # may repeat in the sitemap list) and resumed frontiers (writer
-    # config unknown) keep the dedup.
-    frontier_deduped = False
-    # True when the current frontier's ADMISSION already anti-joined
-    # every row against the complete seen set at write time (expansion
-    # with the fresh-at-admission bloom + exact suspects join, or
-    # fastround's driver seen_set) — the loop's J1 re-check (a bloom
-    # UDF pass + exact anti-join over the whole frontier, the biggest
-    # fixed cost of a big round's seq phase) is then an identity and is
-    # skipped. Seeds and resumed frontiers keep it.
-    frontier_admission_exact = False
+    # frontier_deduped (set above, updated each round): True when the
+    # current frontier is KNOWN globally dedup'd at write time
+    # (expansion/fastround output with no per-host deferral in play):
+    # the loop's J2 dedup shuffle is then an identity and is skipped —
+    # one full frontier exchange per round saved.
+
     # Fused-seq state: when the expansion ALSO applied the probe-skip
     # (P5/P6) and robots filters at admission — provably output-
     # identical, a skipped URL never gets a seq and never enters seen
@@ -455,11 +421,6 @@ def run_crawl(
     # a pure per-round floor, ~1s + planning per round at any core
     # count). Seeds, resumed frontiers and deferral rounds fall back.
     fused_counts: dict[int, int] | None = None
-    if resume_frontier_exact:
-        # the resume-rebuilt frontier went through dedup + the exact
-        # admission anti-join just above
-        frontier_deduped = True
-        frontier_admission_exact = True
 
     sc = spark.sparkContext
     # loop-invariant expression trees, built once: Column/Window
@@ -532,7 +493,6 @@ def run_crawl(
                     "wall_s": time.time() - t0,
                     "seq_s": fr.seq_s,
                     "fetch_s": fr.fetch_s,
-                    "bloom_s": 0.0,
                     "expand_s": fr.expand_s,
                 }
             )
@@ -560,11 +520,8 @@ def run_crawl(
                 frontier = spark.read.parquet(frontier_path)
                 # fastround's frontier_next is globally first-wins
                 # dedup'd (best-dict, fastround.py) unless deferral
-                # rows were unioned in; its admission is exact (driver
-                # seen_set membership)
+                # rows were unioned in
                 frontier_deduped = config.max_per_host_per_round is None
-                frontier_admission_exact = True
-                seen = seen_from_pages(pages_rounds)
                 fused_counts = fast_counts
             r += 1
             continue
@@ -623,20 +580,10 @@ def run_crawl(
                         ).cast("int"),
                     )
                 )
+            # J1 ran when this frontier was admitted (module docstring)
             in_scope = f.filter(F.col("url_norm").startswith(base))  # P4
-            if frontier_admission_exact:
-                # J1 already applied exactly at admission (fresh bloom +
-                # exact suspects join, or fastround's driver set) and seen
-                # only grows by rows FETCHED since — which are disjoint
-                # from this frontier by construction
-                not_seen = in_scope
-            else:
-                not_seen = anti_join_seen(  # J1
-                    in_scope, seen, bloom_bc,
-                    seen_count=processed, broadcast_below=config.bloom_min_seen,
-                )
             deduped = (                                               # J2 equiv.
-                not_seen if frontier_deduped else dedup_within_round(not_seen)
+                in_scope if frontier_deduped else dedup_within_round(in_scope)
             )
 
             # P5/P6 — HEAD-model probe: only suspicious URLs consult the
@@ -777,9 +724,7 @@ def run_crawl(
         # eviction can never re-trigger the fetch kernel.
         pages_rounds.append(r)
         delta = spark.read.schema(PAGES_SCHEMA).parquet(pages_r_path).select(
-            F.xxhash64("url_norm").alias("url_hash"),
-            "url_norm",
-            F.col("host_shard"),
+            F.xxhash64("url_norm").alias("url_hash"), "url_norm"
         )
         if seen_cache is not None:
             seen_next = seen_cache.unionByName(delta)
@@ -792,85 +737,23 @@ def run_crawl(
         else:
             seen_next = delta
         processed_next = processed + due_count
-        will_expand = (
-            processed_next < budget and (r + 1) < config.max_rounds
-        )
-        if will_expand:
-            # materialized by the admission job below; the previous
-            # cache is released after the frontier write
-            seen_next = seen_next.persist()
-        seen = seen_next
-
-        # bloom sidecar (covering seen through round r) builds BEFORE
-        # the expansion admission, so admission sees a FRESH bitmap and
-        # (bloom prefilter + exact suspects anti-join) is EXACT wrt
-        # seen-through-r. That exactness is what lets the NEXT round
-        # skip re-checking its whole frontier against seen (the
-        # admission-exact fast path above) — the biggest fixed cost of
-        # a big round's seq phase. (The former side-thread overlap
-        # saved ~1s/round of bloom-build wall but handed admission a
-        # stale bitmap, whose repair — a full-frontier re-check next
-        # round — cost far more at scale.)
         # After the crawl's LAST round (budget exhausted or max_rounds
-        # reached) the expansion — and the bloom refresh that only
-        # feeds its admission — would build a frontier no round ever
+        # reached) the expansion would build a frontier no round ever
         # consumes. Defer it: commit the pages snapshot with an
         # expansion_pending flag; a resume rebuilds the frontier
         # deterministically from that snapshot (same expansion, same
         # admission), so resumability is unchanged while every
-        # non-resumed crawl saves a full expansion's work.
-        final_round = not will_expand
-        if (
-            config.use_bloom
-            and not final_round
-            and processed_next >= config.bloom_min_seen
-        ):
-            sc.setJobDescription(f"crawl r{r}: bloom sidecar")
-            if bloom_state is None:
-                # first engagement: ONE per-shard counts job sizes each
-                # shard's bitmap from its observed key share
-                # extrapolated to the full crawl budget (2x margin) —
-                # uniform total/n_shards sizing saturates the hot shard
-                # of a skewed crawl (FPP → 1: the sidecar then costs a
-                # build + UDF pass and filters nothing). One sizing
-                # lasts the whole crawl, so later rounds only FOLD IN
-                # their delta: O(new pages) per round, not O(total).
-                shard_counts = {
-                    int(row["host_shard"]): int(row["cnt"])
-                    for row in seen.groupBy("host_shard")
-                    .agg(F.count("*").alias("cnt"))
-                    .collect()
-                }
-                total_seen = sum(shard_counts.values()) or 1
-                horizon = max(budget, total_seen)
-                expected = {
-                    s: int(c / total_seen * horizon * 2)
-                    for s, c in shard_counts.items()
-                }
-                bloom_state = build_bloom_shards_sized(
-                    seen,
-                    "url_hash",
-                    "host_shard",
-                    expected,
-                    default_expected=max(
-                        horizon * 2 // config.n_host_shards, 1024
-                    ),
-                )
-            else:
-                add_bloom_delta(
-                    bloom_state,
-                    pages_r.select(
-                        F.xxhash64("url_norm").alias("url_hash"),
-                        F.col("host_shard"),
-                    ),
-                    "url_hash",
-                    "host_shard",
-                    default_expected=max(
-                        budget * 2 // config.n_host_shards, 1024
-                    ),
-                )
-            bloom_bc = spark.sparkContext.broadcast(bloom_state)
-        t_bloom = time.time()
+        # non-resumed crawl saves a full expansion's work. Per-host
+        # deferred rows exist only in the next frontier and cannot be
+        # rebuilt from pages, so a max_rounds stop that has them still
+        # writes it.
+        final_round = processed_next >= budget or (
+            r + 1 >= config.max_rounds and deferred is None
+        )
+        if not final_round:
+            # materialized by the admission job below; the previous
+            # cache is released after the frontier write
+            seen_next = seen_next.persist()
 
         # expansions → next frontier (J2/J4/O4). Candidates are deduped
         # GLOBALLY (first occurrence by priority — the same rule
@@ -878,7 +761,7 @@ def run_crawl(
         # unchanged) BEFORE hashing/sharding/admission: with ~300
         # outlinks/page the raw candidate stream is ~50x larger than
         # its distinct set, and everything downstream of this dedup
-        # (anti-join UDF, frontier write, next round's whole filter
+        # (anti-join, frontier write, next round's whole filter
         # chain) now runs on the small side.
         if config.discovery and not final_round:
             cand = expand_frontier(pages_r, base, next_round=r + 1)
@@ -902,10 +785,7 @@ def run_crawl(
                     ).cast("int"),
                 )
             )
-            admitted = anti_join_seen(
-                cand, seen, bloom_bc,
-                seen_count=processed_next, broadcast_below=config.bloom_min_seen,
-            )
+            admitted = anti_join_seen(cand, seen_next, processed_next)  # J1
             frontier_next = admitted.select(
                 F.col("url_norm").alias("url"),
                 "round_enqueued", "parent_seq", "sibling_rank",
@@ -980,10 +860,6 @@ def run_crawl(
         # admitted is dedup_within_round output; deferral union may
         # reintroduce a URL the expansion also discovered
         frontier_deduped = config.max_per_host_per_round is None
-        # admission above used the FRESH bloom + exact suspects join
-        # (or the exact broadcast path below bloom_min_seen): next
-        # round's J1 re-check is an identity
-        frontier_admission_exact = True
         if seq_cache is not None:
             seq_cache.unpersist()
         pages_r.unpersist()
@@ -1004,8 +880,7 @@ def run_crawl(
                 # phase walls (driver-observed job boundaries)
                 "seq_s": round(t_seq - t0, 2),
                 "fetch_s": round(t_fetch - t_seq, 2),
-                "bloom_s": round(t_bloom - t_fetch, 2),
-                "expand_s": round(t_expand - t_bloom, 2),
+                "expand_s": round(t_expand - t_fetch, 2),
             }
         )
         commit_tables = {"pages": pages_r_path}
@@ -1073,7 +948,7 @@ def run_crawl(
             spark,
             "round int, frontier_size long, fetched long, errors long, "
             "processed_total long, wall_s double, seq_s double, "
-            "fetch_s double, bloom_s double, expand_s double",
+            "fetch_s double, expand_s double",
         )
     )
     return CrawlResult(

@@ -14,15 +14,15 @@ everything else is plain Python over a few hundred rows.
 Parity obligations (tested: tests/test_golden.py runs entirely through
 this path with default config, and test_properties.py asserts
 fast-vs-Spark equality including a mid-crawl transition):
-- identical filter-chain semantics (scope → seen anti-join → in-round
-  first-occurrence dedup → probe skip → robots → per-host deferral →
-  global seq → budget cut) — same pure predicates the Spark path's
-  column expressions mirror;
+- identical filter-chain semantics (scope → in-round first-occurrence
+  dedup → probe skip → robots → per-host deferral → global seq →
+  budget cut, with the seen check at admission) — same pure predicates
+  the Spark path's column expressions mirror;
 - identical pages rows: the very same ``make_fetch_extract`` Arrow
   kernel produces them;
 - bit-identical ``host_shard``: pure-Python XXH64 (functions.xxhash)
-  matches Spark's ``xxhash64``, so snapshots written here stay
-  compatible with the sharded bloom sidecar built later;
+  matches Spark's ``xxhash64``, so the per-partition lineage column
+  of snapshots written here equals the Spark path's;
 - snapshot-compatible parquet: pyarrow writes the exact PAGES_SCHEMA /
   FRONTIER_SCHEMA arrow types, so Spark unions fast-round and
   Spark-round snapshot files transparently (resume, seen derivation,
@@ -161,11 +161,12 @@ def run_fast_round(
     keys (J3), exactly as the Spark path's seen derivation would.
     """
     t0 = time.time()
-    # P4 scope + J1 seen anti-join, then J2 first-occurrence-by-priority
+    # P4 scope, then J2 first-occurrence-by-priority; J1 ran when the
+    # rows were admitted (seeds meet an empty seen_set)
     work = sorted(
         (renq, pseq, srank, url, un)
         for (url, renq, pseq, srank, un) in frontier_rows
-        if un.startswith(base) and un not in seen_set
+        if un.startswith(base)
     )
     in_round: set[str] = set()
     eligible: list[tuple] = []
