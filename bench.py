@@ -46,10 +46,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from wormpy_spark.session import local_cpus  # noqa: E402
+
 T_START = time.time()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = local_cpus()
 # Scaling levels: N vs 4N. Both rows use the 2 -> 8 core pair — the
 # HARSHER framing (round-4 verdict): the small level already has
 # intra-level parallel overhead in its denominator, so nothing about

@@ -202,20 +202,39 @@ def _full_outputs(spark, tables, **cfg_kwargs):
     return order, seen, pages, errors
 
 
-def test_driver_fast_path_equals_spark_path(spark, small_corpus):
+def test_driver_fast_path_equals_spark_path(spark, small_corpus, monkeypatch):
     """The driver fast path (plans/fastround.py) must be output-
     identical to the Spark path — order, seen set, every page row, and
     per-round error counts — both when the whole crawl fits in fast
     mode and when it transitions to the Spark path mid-crawl."""
+    import wormpy_spark.plans.crawl as crawl_mod
+
+    fast_rounds = []
+    real = crawl_mod.run_fast_round
+
+    def spy(r, *args, **kwargs):
+        fast_rounds.append(r)
+        return real(r, *args, **kwargs)
+
+    monkeypatch.setattr(crawl_mod, "run_fast_round", spy)
     tables = corpus_to_spark(spark, small_corpus)
     spark_path = _full_outputs(spark, tables, fast_round_max=0)
     all_fast = _full_outputs(spark, tables, fast_round_max=4096)
-    # fast_round_max=10: early rounds driver-side, later rounds hand
-    # over to the Spark path mid-crawl (snapshot-mediated transition)
-    mixed = _full_outputs(spark, tables, fast_round_max=10)
     assert all_fast == spark_path
-    assert mixed == spark_path
     assert len(spark_path[0]) > 5
+
+    # the 12 seeds take a fast round; with the throttle, round 1's
+    # frontier (deferred + expanded rows) exceeds 12 and the crawl
+    # hands over to the Spark path (snapshot-mediated transition)
+    throttle = dict(max_per_host_per_round=3)
+    fast_rounds.clear()
+    throttled_spark = _full_outputs(spark, tables, fast_round_max=0, **throttle)
+    assert fast_rounds == []
+    mixed = _full_outputs(spark, tables, fast_round_max=12, **throttle)
+    assert fast_rounds, "no fast round ran"
+    # mixed[3] holds one error count per round
+    assert len(mixed[3]) > len(fast_rounds), "no Spark round ran"
+    assert mixed == throttled_spark
 
 
 def test_assign_global_seq_bucket_path_equals_sampling(spark):

@@ -5,13 +5,42 @@ Scale posture: every knob here is chosen so the same code runs on a
 splitting), Arrow on (all Python logic rides vectorized batches, never
 per-row), shuffle partitions sized to the local core count but
 overridable via ``SPARK_GRAFT_CPUS`` / explicit args for cluster runs.
+
+JIT posture: the driver JVM keeps HotSpot's tiered compilation but
+hands a method to C2 only at ten times the default tier-4 thresholds
+(``JIT_OPTIONS``). Most of what a crawl runs in the JVM is lukewarm
+Spark plumbing; C2 compiling it burns more CPU than its faster code
+saves back within the JVM's life. Truly hot loops, such as a query's
+generated operators over millions of rows, still reach C2. C1 only
+(``-XX:TieredStopAtLevel=1``) saves more compile CPU, but it made
+``bench.py``'s headline query sweep about half again as slow; both
+trades are measured in ``BENCH_r07_jit.json``. The flags are set through
+``spark.driver.defaultJavaOptions``, which spark-submit puts before
+``spark.driver.extraJavaOptions``, so a caller's own JVM flags add to
+them. They are left out when the site's ``spark-defaults.conf`` sets
+that key, so an administrator's driver flags are never replaced. They
+reach only a driver JVM that ``get_spark`` itself starts, which in
+``local[n]`` also runs the tasks: a cluster's executors keep HotSpot's
+defaults, and under ``spark-submit`` the driver JVM is already running.
+To get the defaults back, pass
+``extra_conf={"spark.driver.defaultJavaOptions": ""}`` (or any flags of
+your own under that key).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+# HotSpot's defaults are 5000, 600, 15000 and 40000.
+JIT_OPTIONS = " ".join([
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=150000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+])
 
 
 def iceberg_conf(
@@ -55,6 +84,36 @@ def select_catalog_backend(spark: SparkSession) -> str:
     return "iceberg" if iceberg_available(spark) else "shim"
 
 
+def local_cpus() -> int:
+    """Cores for the default ``local[n]`` master: ``$SPARK_GRAFT_CPUS``
+    when set, else the cores this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def site_conf(key: str) -> str | None:
+    """``key``'s value in the ``spark-defaults.conf`` that spark-submit
+    reads when ``get_spark`` starts the JVM (``$SPARK_CONF_DIR``, else
+    ``$SPARK_HOME/conf``), or None when that file does not set it."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        _find_spark_home(), "conf"
+    )
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return None
+    value = None
+    for line in lines:
+        # java.util.Properties syntax: "key value", "key=value", "key:value"
+        m = re.match(r"([^\s=:#!][^\s=:]*)\s*[=:\s]?\s*(.*)$", line.strip())
+        if m and m.group(1) == key:
+            value = m.group(2)
+    return value
+
+
 def get_spark(
     app_name: str = "wormpy_spark",
     master: str | None = None,
@@ -65,11 +124,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard conf.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox;
+    ``master`` defaults to ``local[n]`` with n from :func:`local_cpus`;
     on a real cluster spark-submit supplies the master and these
     settings remain valid.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -104,6 +163,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    # late C2 (see the module docstring); extraJavaOptions adds to it.
+    if site_conf("spark.driver.defaultJavaOptions") is None:
+        builder = builder.config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
     if iceberg:
         for k, v in iceberg_conf(warehouse=iceberg_warehouse).items():
             builder = builder.config(k, v)
