@@ -52,17 +52,28 @@ T_START = time.time()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = local_cpus()
+
+
+def _level(var: str, default: int) -> int:
+    """A scaling level's core count from ``$var``, clamped to the cores
+    this process may use: on a smaller host a level pinned to more
+    cores still runs on the host's cores only, so the scaling row must
+    report (and divide by) the cores the level really gets."""
+    return min(int(os.environ.get(var, default)), CPUS)
+
+
 # Scaling levels: N vs 4N. Both rows use the 2 -> 8 core pair — the
 # HARSHER framing (round-4 verdict): the small level already has
 # intra-level parallel overhead in its denominator, so nothing about
 # the ratio leans on a serial baseline. local[k] pinned to k cores
 # emulates k single-core executors (spark.executor.cores=1, the
 # standard production unit). The full pinned curve (1/2/4/8/16) and
-# all observed walls are disclosed in BENCH/BASELINE.md.
-CPUS_BIG = int(os.environ.get("SPARK_GRAFT_BENCH_BIG", "8"))
-CPUS_SMALL = int(os.environ.get("SPARK_GRAFT_BENCH_SMALL", "2"))
-S2_BIG = int(os.environ.get("SPARK_GRAFT_BENCH_S2_BIG", "8"))
-S2_SMALL = int(os.environ.get("SPARK_GRAFT_BENCH_S2_SMALL", "2"))
+# all observed walls are disclosed in BENCH/BASELINE.md. Each level is
+# clamped to this host's cores (_level).
+CPUS_BIG = _level("SPARK_GRAFT_BENCH_BIG", 8)
+CPUS_SMALL = _level("SPARK_GRAFT_BENCH_SMALL", 2)
+S2_BIG = _level("SPARK_GRAFT_BENCH_S2_BIG", 8)
+S2_SMALL = _level("SPARK_GRAFT_BENCH_S2_SMALL", 2)
 CRAWL_BUDGET = int(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "450000"))
 # repeat each level and take the MINIMUM wall: this box shows ~10%
 # hypervisor steal with high variance, and min-of-k is the standard
@@ -267,8 +278,9 @@ def _scaling_dict(
     trials: dict[int, list[dict]], n_small: int, n_big: int
 ) -> dict | None:
     """Best (min-wall) result per level -> scaling row. None until both
-    levels have at least one trial."""
-    if not trials.get(n_small) or not trials.get(n_big):
+    levels have at least one trial, and None when clamping left both
+    levels with the same core count (no scaling was measured)."""
+    if n_small >= n_big or not trials.get(n_small) or not trials.get(n_big):
         return None
     small = min(trials[n_small], key=lambda r: r["wall_s"])
     big = min(trials[n_big], key=lambda r: r["wall_s"])

@@ -191,8 +191,8 @@ def test_probe_fast_and_join_paths_agree(spark, small_corpus):
     ]
 
 
-def _full_outputs(spark, tables, **cfg_kwargs):
-    cfg = CrawlConfig(base_url="https://host0.test", budget=50,
+def _full_outputs(spark, tables, base_url="https://host0.test", **cfg_kwargs):
+    cfg = CrawlConfig(base_url=base_url, budget=50,
                       politeness_seed=7, **cfg_kwargs)
     res = run_crawl(spark, tables["web"], cfg, sitemaps=tables["sitemaps"])
     order = [(r["seq"], r["url_norm"]) for r in res.order.collect()]
@@ -223,25 +223,26 @@ def test_driver_fast_path_equals_spark_path(spark, small_corpus, monkeypatch):
     assert all_fast == spark_path
     assert len(spark_path[0]) > 5
 
-    # the 12 seeds take a fast round; with the throttle, round 1's
-    # frontier (deferred + expanded rows) exceeds 12 and the crawl
-    # hands over to the Spark path (snapshot-mediated transition)
-    throttle = dict(max_per_host_per_round=3)
+    # host1 has no sitemap: its one seed and round 1's 3 rows take fast
+    # rounds; with the throttle, round 2's frontier (deferred + expanded
+    # rows) holds 11 and the crawl hands over to the Spark path
+    # (snapshot-mediated transition)
+    throttle = dict(base_url="https://host1.test", max_per_host_per_round=3)
     fast_rounds.clear()
     throttled_spark = _full_outputs(spark, tables, fast_round_max=0, **throttle)
     assert fast_rounds == []
-    mixed = _full_outputs(spark, tables, fast_round_max=12, **throttle)
+    mixed = _full_outputs(spark, tables, fast_round_max=3, **throttle)
     assert fast_rounds, "no fast round ran"
     # mixed[3] holds one error count per round
     assert len(mixed[3]) > len(fast_rounds), "no Spark round ran"
     assert mixed == throttled_spark
 
 
-def test_assign_global_seq_bucket_path_equals_sampling(spark):
-    """The deterministic-bucket seq path (driver-known parent_seq
-    bounds, no sampling job) must assign the exact same dense sequence
-    as the range-partition sampling path — with tight bounds, loose
-    bounds, bounds clamping (rows outside [lo, hi]), and empty input."""
+def test_assign_global_seq_matches_sorted_reference(spark):
+    """The dense global sequence equals a plain Python sort of the
+    priority triple, offset by ``start`` — over rows that span several
+    round_enqueued values (the shape a per-host throttle's deferred rows
+    give a frontier) — and an empty input yields no rows."""
     import random
 
     from wormpy_spark.operators.frontier import (
@@ -251,35 +252,117 @@ def test_assign_global_seq_bucket_path_equals_sampling(spark):
     )
 
     rng = random.Random(31337)
-    rows = []
-    for i in range(5000):
-        parent = rng.randrange(1000, 9000)
-        rows.append(
-            (f"https://h.test/p/{i}", 7, parent, rng.randrange(1, 300),
-             f"https://h.test/p/{i}")
+    triples = set()
+    while len(triples) < 5000:
+        triples.add(
+            (rng.randrange(3, 7), rng.randrange(1000, 9000), rng.randrange(1, 300))
         )
+    rows = [
+        (f"https://h.test/p/{i}", renq, pseq, srank, f"https://h.test/p/{i}")
+        for i, (renq, pseq, srank) in enumerate(triples)
+    ]
     df = spark.createDataFrame(rows, FRONTIER_SCHEMA)
-
-    def run(**kw):
-        out, total, handle = assign_global_seq(df, PRIORITY_COLS, start=123, **kw)
-        got = [
-            (r["seq"], r["url"]) for r in out.select("seq", "url").collect()
-        ]
-        handle.unpersist()
-        return total, sorted(got)
-
-    base_total, base = run()
-    assert base_total == 5000
-    for bounds in [(1000, 9000), (0, 100000), (2000, 3000)]:  # tight/loose/clamped
-        t, got = run(range_bucket=("parent_seq", *bounds))
-        assert t == 5000 and got == base, f"bounds {bounds} diverged"
+    out, total, handle = assign_global_seq(df, PRIORITY_COLS, start=123)
+    got = sorted((r["seq"], r["url"]) for r in out.select("seq", "url").collect())
+    handle.unpersist()
+    want = [
+        (123 + i, row[0])
+        for i, row in enumerate(sorted(rows, key=lambda row: row[1:4]))
+    ]
+    assert total == 5000 and got == want
 
     empty = spark.createDataFrame([], FRONTIER_SCHEMA)
-    out, total, handle = assign_global_seq(
-        empty, PRIORITY_COLS, start=0, range_bucket=("parent_seq", -1, 0)
-    )
+    out, total, handle = assign_global_seq(empty, PRIORITY_COLS, start=7)
     assert total == 0 and out.count() == 0
     handle.unpersist()
+
+
+# host1 has no sitemap: 1 seed, then throttled frontiers of 3 and 11
+HANDOVER = dict(base_url="https://host1.test", budget=12,
+                max_per_host_per_round=3, fast_round_max=3)
+ADMISSION_SHAPES = {
+    "handover": HANDOVER,
+    "spark": dict(base_url="https://host1.test", budget=50, fast_round_max=0),
+    "throttled": dict(budget=15, max_per_host_per_round=3, fast_round_max=0),
+    # fastround's own frontier: deferred rows and expansions meet there
+    "fast-throttled": dict(budget=12, max_per_host_per_round=3),
+    "probe-join": dict(base_url="https://host1.test", budget=50,
+                       fast_round_max=0, probe_broadcast_max=0),
+}
+
+
+@pytest.mark.parametrize("shape", list(ADMISSION_SHAPES))
+def test_every_frontier_is_admitted_once(spark, small_corpus, tmp_path,
+                                         monkeypatch, shape):
+    """Every frontier snapshot holds distinct url_norm values, none of
+    them in any earlier pages snapshot: the round that pops it applies
+    no dedup or seen check of its own. Unthrottled Spark rounds after
+    round 0 take the fused seq path under both probe strategies, so
+    assign_global_seq runs for round 0 only."""
+    import wormpy_spark.plans.crawl as crawl_mod
+    from wormpy_spark.sources.catalog import SnapshotCatalog
+
+    starts = []
+    stock = crawl_mod.assign_global_seq
+
+    def spy(df, order_cols=None, start=0, **kw):
+        starts.append(start)
+        return stock(df, order_cols, start=start, **kw)
+
+    monkeypatch.setattr(crawl_mod, "assign_global_seq", spy)
+    tables = corpus_to_spark(spark, small_corpus)
+    ckpt = str(tmp_path / "ckpt")
+    res = run_crawl(
+        spark, tables["web"],
+        CrawlConfig(**{**RESUME_BASE, **ADMISSION_SHAPES[shape]},
+                    checkpoint_dir=ckpt),
+        sitemaps=tables["sitemaps"],
+    )
+    assert res.rounds > 2
+
+    history = SnapshotCatalog(ckpt).read_manifest()["history"]
+    fetched: set[str] = set()
+    n_frontiers = 0
+    for rec in history:
+        fetched |= {
+            r["url_norm"]
+            for r in spark.read.parquet(rec["tables"]["pages"]).collect()
+        }
+        if "frontier" not in rec["tables"]:
+            continue
+        urls = [
+            r["url_norm"]
+            for r in spark.read.parquet(rec["tables"]["frontier"]).collect()
+        ]
+        n_frontiers += 1
+        assert len(urls) == len(set(urls)), f"round {rec['round']}: duplicates"
+        assert not fetched & set(urls), f"round {rec['round']}: already fetched"
+    assert n_frontiers > 1
+
+    if shape in ("spark", "probe-join"):
+        assert starts == [0]
+
+
+def test_resume_refuses_unadmitted_checkpoint(spark, small_corpus, tmp_path):
+    """A checkpoint whose state lacks ``frontier_admitted`` was written
+    by an engine that filtered at pop time: resuming it is refused."""
+    import json
+
+    from wormpy_spark.sources.catalog import SnapshotCatalog
+
+    tables = corpus_to_spark(spark, small_corpus)
+    ckpt = str(tmp_path / "ckpt")
+    cfg = dict(RESUME_BASE, budget=50, checkpoint_dir=ckpt)
+    run_crawl(spark, tables["web"], CrawlConfig(**cfg, max_rounds=1),
+              sitemaps=tables["sitemaps"])
+    catalog = SnapshotCatalog(ckpt)
+    manifest = catalog.read_manifest()
+    assert manifest["state"].pop("frontier_admitted") is True
+    with open(catalog._manifest_path(), "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="admission"):
+        run_crawl(spark, tables["web"], CrawlConfig(**cfg, resume=True),
+                  sitemaps=tables["sitemaps"])
 
 
 def test_prepared_compressed_web_parity(spark, small_corpus):
@@ -383,7 +466,7 @@ RESUME_BASE = dict(base_url="https://host0.test", politeness_seed=7)
 @pytest.fixture(scope="module")
 def uninterrupted(spark, small_corpus):
     """Uninterrupted crawls shared by the resume cases, keyed on
-    (budget, per-host throttle): every crawl path is output-identical,
+    (base, budget, per-host throttle): every crawl path is output-identical,
     so fast_round_max does not change the reference. The web table is
     prepared once (prepare_fetch_table) for every crawl of the cases."""
     from wormpy_spark.plans.crawl import prepare_fetch_table
@@ -392,16 +475,16 @@ def uninterrupted(spark, small_corpus):
     tables["web"] = prepare_fetch_table(spark, tables["web"])
     refs = {}
 
-    def get(budget, throttle):
-        if (budget, throttle) not in refs:
+    def get(base_url, budget, throttle):
+        if (base_url, budget, throttle) not in refs:
             res = run_crawl(
                 spark, tables["web"],
-                CrawlConfig(**RESUME_BASE, budget=budget,
-                            max_per_host_per_round=throttle),
+                CrawlConfig(**{**RESUME_BASE, "base_url": base_url},
+                            budget=budget, max_per_host_per_round=throttle),
                 sitemaps=tables["sitemaps"],
             )
-            refs[budget, throttle] = (len(res.metrics_rows), _outputs(res))
-        return refs[budget, throttle]
+            refs[base_url, budget, throttle] = (len(res.metrics_rows), _outputs(res))
+        return refs[base_url, budget, throttle]
 
     yield tables, get
     tables["web"].unpersist()
@@ -410,15 +493,16 @@ def uninterrupted(spark, small_corpus):
 @pytest.mark.parametrize(
     "cfg",
     [
-        # the 12 seeds take a fast round; with the throttle, round 1's
-        # frontier (deferred + expanded rows) exceeds 12 and the crawl
-        # hands over to Spark rounds, whose max_rounds stops carry
-        # deferred rows that cannot be rebuilt from pages
-        dict(budget=12, max_per_host_per_round=3, fast_round_max=12),
+        # two fast rounds, then the throttled frontier hands over to
+        # Spark rounds, whose max_rounds stops carry deferred rows that
+        # cannot be rebuilt from pages
+        HANDOVER,
         dict(budget=50, fast_round_max=0),  # Spark rounds only
         dict(budget=12, max_per_host_per_round=3),  # fast rounds only
+        # probe semi-join at admission, fused seq in every later round
+        dict(budget=50, fast_round_max=0, probe_broadcast_max=0),
     ],
-    ids=["handover", "spark", "throttled"],
+    ids=["handover", "spark", "throttled", "probe-join"],
 )
 def test_resume_at_every_round_boundary(spark, uninterrupted, tmp_path, cfg):
     """Stop after each committed round k (max_rounds=k), then resume:
@@ -427,19 +511,22 @@ def test_resume_at_every_round_boundary(spark, uninterrupted, tmp_path, cfg):
     frontier against seen, so this is the evidence that admission alone
     keeps seen exact across a restart."""
     tables, get = uninterrupted
-    n_rounds, ref = get(cfg["budget"], cfg.get("max_per_host_per_round"))
+    cfg = {**RESUME_BASE, **cfg}
+    n_rounds, ref = get(
+        cfg["base_url"], cfg["budget"], cfg.get("max_per_host_per_round")
+    )
     assert n_rounds > 1
     for k in range(1, n_rounds):
         ckpt = str(tmp_path / f"k{k}")
         first = run_crawl(
             spark, tables["web"],
-            CrawlConfig(**RESUME_BASE, **cfg, checkpoint_dir=ckpt, max_rounds=k),
+            CrawlConfig(**cfg, checkpoint_dir=ckpt, max_rounds=k),
             sitemaps=tables["sitemaps"],
         )
         assert first.rounds == k
         resumed = run_crawl(
             spark, tables["web"],
-            CrawlConfig(**RESUME_BASE, **cfg, checkpoint_dir=ckpt, resume=True),
+            CrawlConfig(**cfg, checkpoint_dir=ckpt, resume=True),
             sitemaps=tables["sitemaps"],
         )
         assert _outputs(resumed) == ref, f"resume after round {k} diverged"

@@ -55,8 +55,9 @@ FRONTIER_SCHEMA = (
 # v2: admission-derived columns ride the frontier file so no round ever
 # re-derives them — host (a pandas-UDF urlparse pass over the engine's
 # biggest row stream), url_hash, host_shard are computed exactly once,
-# at admission. Readers stay compatible with v1 files (seeds, old
-# checkpoints): the crawl loop backfills the columns when absent.
+# at admission (plans/crawl.py ``_admit``, fastround's pyarrow writer).
+# Every frontier the crawl writes is v2; only seeds are built as v1 rows,
+# and they pass admission before any round reads them.
 FRONTIER_SCHEMA_V2 = FRONTIER_SCHEMA + ", host string, url_hash long, host_shard int"
 
 
@@ -66,7 +67,6 @@ def assign_global_seq(
     start: int = 0,
     seq_col: str = "seq",
     n_partitions: int | None = None,
-    range_bucket: tuple[str, int, int] | None = None,
 ) -> tuple[DataFrame, int, DataFrame]:
     """Dense 0-based global sequence in (order_cols) order, offset by
     ``start``. Scales: range partition → local rank → offset map.
@@ -74,52 +74,26 @@ def assign_global_seq(
     by construction). Returns (df_with_seq, row_count, cache_handle) —
     the count is a free by-product of the offset computation.
 
-    Default (sampling) path — TWO caches bundled into the handle:
+    TWO caches are bundled into the handle:
     - the INPUT is persisted because repartitionByRange's range
       partitioner runs a separate SAMPLING job over its child — without
-      the cache every caller's upstream chain (the crawl's whole
-      filter pipeline) is computed twice per call;
+      the cache every caller's upstream chain is computed twice per
+      call;
     - the ranged output is persisted because repartitionByRange samples
       its boundaries per execution (RDD-id-seeded), so without it the
       counts job and the downstream job could place a boundary row in
       different partitions, corrupting the offsets.
-
-    ``range_bucket=(col, lo, hi)`` path — when the CALLER already knows
-    value bounds of a column such that (a) ``col`` rides ``order_cols``'
-    total order (every earlier order_cols prefix is constant across the
-    input, as the crawl frontier's ``round_enqueued`` is whenever no
-    per-host deferral is configured) and (b) all values fall in
-    [lo, hi], bucket boundaries are DETERMINISTIC arithmetic — no
-    sampling job, no second cache, ONE blocking action instead of two
-    per call. Bounds need not be tight (looser bounds only skew bucket
-    sizes, never ordering): bucketing is a monotone map, so
-    cross-bucket order is exact and the within-bucket window restores
-    the full total order.
-    The counts collect materializes the cache(s); the caller must
+    The counts collect materializes both caches; the caller must
     unpersist the handle once downstream results are materialized."""
     order_cols = order_cols or PRIORITY_COLS
     spark = df.sparkSession
     if n_partitions is None:
         n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if range_bucket is not None:
-        col, lo, hi = range_bucket
-        span = max(int(hi) - int(lo), 1)
-        # integer DIV keeps the map exactly monotone at any magnitude
-        bucket = F.expr(
-            f"CAST((({col} - {int(lo)}L) * {n_partitions}L) DIV {span}L AS INT)"
-        )
-        bucket = F.least(
-            F.lit(n_partitions - 1), F.greatest(F.lit(0), bucket)
-        )
-        ranged = df.withColumn("_pid", bucket).persist()
-        handle_dfs = (ranged,)
-    else:
-        src = df.persist()
-        ranged = src.repartitionByRange(
-            n_partitions, *[F.col(c) for c in order_cols]
-        )
-        ranged = ranged.withColumn("_pid", F.spark_partition_id()).persist()
-        handle_dfs = (src, ranged)
+    src = df.persist()
+    ranged = src.repartitionByRange(
+        n_partitions, *[F.col(c) for c in order_cols]
+    )
+    ranged = ranged.withColumn("_pid", F.spark_partition_id()).persist()
     counts = {r["_pid"]: r["cnt"] for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
     offsets: dict[int, int] = {}
     acc = start
@@ -127,7 +101,7 @@ def assign_global_seq(
         offsets[pid] = acc
         acc += counts[pid]
     total = acc - start
-    handle = _SeqCaches(*handle_dfs)
+    handle = _SeqCaches(src, ranged)
     if not offsets:  # empty input — keep the schema, no rows
         return ranged.drop("_pid").withColumn(seq_col, F.lit(0).cast("long")), 0, handle
     mapping = F.create_map(

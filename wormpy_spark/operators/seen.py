@@ -3,10 +3,10 @@
 The reference keeps an in-memory ``set`` of normalized URLs checked at
 pop time (url_tracker.py:27,42). At 10^10-URL scale the engine keeps
 the seen set as a table of (url_hash, url_norm) and checks each URL
-against it ONCE, when it is admitted to a frontier (the expansion's
-admission, or the resume rebuild of a deferred expansion). Every later
-round's frontier is therefore already disjoint from seen: seen grows
-only by rows fetched from earlier frontiers.
+against it ONCE, when it is admitted to a frontier (plans/crawl.py
+``_admit``: the seeds, each expansion, the resume rebuild of a deferred
+expansion). Every later round's frontier is therefore already disjoint
+from seen: seen grows only by rows fetched from earlier frontiers.
 """
 
 from __future__ import annotations

@@ -1,19 +1,30 @@
 """The BSP crawl driver loop (T4; SURVEY.md §3.2 engine lifecycle).
 
-Each round is one Catalyst-optimizable batch job over the whole
-frontier:
+Every frontier is written ADMITTED by one step, ``_admit``, which the
+seeds, each round's expansions and the resume rebuild all go through:
 
-    frontier → canonicalize/hash/host → scope filter (P4)
-             → within-round first-occurrence dedup (J2 equivalence)
-             → HEAD-model probe join dropping suspicious image/* (P5/P6)
+    candidates (in scope, P4: seeds filtered on the driver, expansions
+                by expand_frontier / the fetch kernel)
+             → first-occurrence dedup by priority (J2 equivalence)
+             → host / url_hash / host_shard, derived once (v2 frontier)
+             → ANTI JOIN seen (J1)
+             → HEAD-model probe dropping suspicious image/* (P5/P6)
              → [robots filter — north_rule option]
+             → seq_bucket stamp + per-bucket counts (unthrottled only)
+
+Each round then pops its frontier as-is (one Catalyst-optimizable batch
+job over the whole frontier):
+
+    frontier → [per-host throttle window — deferred rows are re-admitted
+                with the next round's expansions]
              → global seq on (round, parent_seq, sibling_rank) (O1-O4)
              → budget cut seq < B (P9/O7)
-             → GET-model join vs web + one mapInPandas extract pass
-             → politeness schedule (applyInPandas per host, T1/T2)
-             → expansions (J4/O4) → ANTI JOIN seen (J1) → next frontier
-             → snapshot commit {frontier, seen, pages, host_state,
-               metrics} (T6 — resumable, per-partition lineage)
+             → GET-model join vs web + one mapInArrow extract pass
+             → expansions (J4/O4) → admission → next frontier
+             → snapshot commit {pages, frontier} + manifest state (T6 —
+               resumable, per-partition lineage); seen is derived from
+               the pages snapshots, and the politeness clocks (T1/T2)
+               once, after the last round
 
 Ordering-parity proof obligations (vs the sequential reference; tested
 against the golden oracle in tests/test_golden.py):
@@ -29,17 +40,19 @@ against the golden oracle in tests/test_golden.py):
 - expansions admitted against end-of-round seen ≡ admission-time seen
   (a dupe admitted mid-round is pop-skipped later either way);
 - J1 runs once per URL, at admission: every frontier row was anti-
-  joined against seen when its frontier was written (expansion
-  admission, fastround's driver seen_set, or the resume rebuild of a
-  deferred expansion; seeds meet an empty seen), and seen has grown
-  since only by rows fetched from EARLIER frontiers, so a round never
-  re-checks its own frontier.
+  joined against seen when its frontier was written (``_admit``, or
+  fastround's driver seen_set; seeds meet an empty seen), and seen has
+  grown since only by rows fetched from EARLIER frontiers, so a round
+  never re-checks its own frontier. Probe-skipped and robots-disallowed
+  URLs never get a seq on either side, so filtering them at admission
+  instead of pop changes no output.
 
 Scale posture: frontier/seen/pages are parquet snapshots (Iceberg when
 the jar is present — sources.catalog shim), re-read each round, so
 lineage never grows; the global sequence is the range-partition rank
-pattern (no one-task sort); the seen anti-join broadcasts the seen
-keys while they are small and shuffles above
+pattern (no one-task sort), or driver-known bucket offsets when the
+frontier write published its bucket counts; the seen anti-join
+broadcasts the seen keys while they are small and shuffles above
 operators.seen.BROADCAST_SEEN_MAX; hosts shard by
 pmod(xxhash64(host), n_host_shards) and AQE splits skewed joins at
 runtime.
@@ -101,7 +114,7 @@ class CrawlConfig:
     max_rounds: int = 256
     n_host_shards: int = 64
     # max suspicious-image rows collectable for the probe fast path
-    # (above this the per-round probe semi-join runs instead); 0
+    # (above this admission runs the probe semi-join instead); 0
     # forces the join path (used by parity tests)
     probe_broadcast_max: int = 2_000_000
     # production politeness throttle: at most k fetches per host per
@@ -281,11 +294,11 @@ def run_crawl(
     # in round-1 event logs). On a cluster this is the bucketed-table
     # layout of the web snapshot; callers may prepare it once up front
     # with prepare_fetch_table() and reuse it across crawls.
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     prepared = getattr(web, "_wormpy_prepared", False)
     if prepared:
         web_fetch = web.drop("url", "host", "links")
     else:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
         web_fetch = (
             web.drop("url", "host", "links")
             .repartition(n_part, "url_norm")
@@ -317,6 +330,88 @@ def run_crawl(
             F.xxhash64("url_norm").alias("url_hash"), "url_norm"
         )
 
+    # loop-invariant expression trees, built once: Column/Window
+    # objects are immutable and reusable, and rebuilding the 32
+    # per-bucket observation metrics plus the bucket window costs a
+    # few hundred py4j round-trips per round otherwise
+    bucket_metrics = [
+        F.sum((F.col("seq_bucket") == i).cast("long")).alias(f"b{i}")
+        for i in range(n_part)
+    ]
+    bucket_window = Window.partitionBy("seq_bucket").orderBy(
+        *[F.col(c) for c in PRIORITY_COLS]
+    )
+
+    def _admit(
+        cand: DataFrame,
+        seen: DataFrame,
+        seen_count: int,
+        probe_filter: bool,
+        parents: tuple[int, int] | None = None,
+    ) -> tuple[DataFrame, Observation | None]:
+        """The one admission every frontier row passes, once, so a round
+        pops its frontier as-is (module docstring). ``cand`` is in scope
+        (P4) and canonical already.
+
+        ``probe_filter``: apply the P5/P6 probe here. Off only where the
+        fetch kernel already dropped the probe-skip URLs from
+        ``discovered_norm`` (expansions under the skip-set fast path).
+
+        ``parents``: the seq range [lo, hi) of the candidates' parents.
+        Without a per-host throttle every candidate then shares
+        round_enqueued, so parent_seq alone orders the frontier: stamp
+        its deterministic range bucket (``seq_bucket``) and return an
+        Observation of the per-bucket counts, which rides the frontier
+        write. The next round knows its seq offsets driver-side and
+        assigns seq inside the fetch job: no standalone action."""
+        # ``url`` is url_norm verbatim past admission: drop the copy
+        # BEFORE the dedup exchange (the round's biggest shuffle — with
+        # ~300 outlinks/page the raw candidate stream is ~50x its
+        # distinct set) and re-alias it at the end
+        f = dedup_within_round(cand.drop("url"))                   # J2
+        f = (
+            f.withColumn("host", host_udf(F.col("url_norm")))
+            .withColumn("url_hash", F.xxhash64(F.col("url_norm")))
+            .withColumn(
+                "host_shard",
+                F.pmod(
+                    F.xxhash64(F.col("host")), F.lit(config.n_host_shards)
+                ).cast("int"),
+            )
+        )
+        f = anti_join_seen(f, seen, seen_count)                     # J1
+        if probe_filter and probe_skip_bc is not None:
+            # the skip set holds suspicious URLs only (P5/P6)
+            f = f.filter(~_probe_skips(F.col("url_norm")))
+        elif probe_filter:
+            # scale path: semi-prune the probe table by the (small)
+            # suspicious key set first — otherwise the planner
+            # broadcasts the full probe projection
+            susp = f.filter(suspicious_pred(F.col("url_norm"))).select("url_norm")
+            skipped = probe.filter(F.col("_probe_ct").startswith("image/")).join(
+                F.broadcast(susp), on="url_norm", how="left_semi"
+            )
+            f = f.join(
+                F.broadcast(skipped.select("url_norm")), on="url_norm", how="left_anti"
+            )
+        if robots_filter is not None:
+            f = f.filter(robots_filter(F.col("url_norm")))
+        f = f.select(
+            F.col("url_norm").alias("url"),
+            "round_enqueued", "parent_seq", "sibling_rank",
+            "url_norm", "host", "url_hash", "host_shard",
+        )
+        if parents is None or config.max_per_host_per_round is not None:
+            return f, None
+        lo, hi = parents
+        # integer DIV keeps the bucket map exactly monotone in parent_seq
+        bucket = F.expr(
+            f"CAST(((parent_seq - {lo}L) * {n_part}L) DIV {max(hi - lo, 1)}L AS INT)"
+        )
+        bucket = F.least(F.lit(n_part - 1), F.greatest(F.lit(0), bucket))
+        obs = Observation()
+        return f.withColumn("seq_bucket", bucket).observe(obs, *bucket_metrics), obs
+
     if config.resume and catalog.latest_round() is not None:
         state = catalog.state()
         assert state["base"] == base, "resume with a different base URL"
@@ -329,47 +424,34 @@ def run_crawl(
                 f"resume with n_host_shards={config.n_host_shards} but the "
                 f"checkpoint was written with {ck_shards}; use the same value"
             )
+        if not state.get("frontier_admitted"):
+            # older writers left the probe/robots filters and J2 to pop
+            # time, and wrote v1 frontiers; no round re-applies them now
+            raise ValueError(
+                "the checkpoint's frontier was not admitted by this "
+                "engine's admission step; start the crawl afresh"
+            )
         start_round = state["round"] + 1
         processed = state["processed"]
-        # frontier parent_seq bounds for the bucketed seq path; old
-        # checkpoints lack the key — (-1, processed) is always valid
-        # (loose bounds skew buckets, never ordering)
-        parent_bounds = tuple(state.get("parent_bounds", (-1, processed)))
         sitemap_urls = state.get("sitemap_urls", [])
         pending_round = state.get("expansion_pending")
         if pending_round is not None:
             # the final committed round deferred its expansion (its
             # frontier would only ever be read by a resume like this
             # one): rebuild it deterministically from the committed
-            # pages snapshot — same expansion, same dedup, same
-            # admission anti-join the eager path would have run
-            pages_prev = catalog.read(spark, "pages")
-            cand = expand_frontier(
-                pages_prev, base, next_round=pending_round + 1
-            )
-            cand = dedup_within_round(cand)
-            cand = (
-                cand.withColumn("host", host_udf(F.col("url_norm")))
-                .withColumn("url_hash", F.xxhash64(F.col("url_norm")))
-                .withColumn(
-                    "host_shard",
-                    F.pmod(
-                        F.xxhash64(F.col("host")),
-                        F.lit(config.n_host_shards),
-                    ).cast("int"),
-                )
-            )
-            frontier = anti_join_seen(
-                cand, seen_from_pages(catalog.rounds()), processed
-            ).select(
-                "url", "round_enqueued", "parent_seq", "sibling_rank",
-                "url_norm", "host", "url_hash", "host_shard"
+            # pages snapshot — the same expansion and admission the
+            # eager path would have run. Snapshot pages carry no
+            # kernel-filtered discovered_norm, so the probe applies.
+            frontier, _ = _admit(
+                expand_frontier(
+                    catalog.read(spark, "pages"), base,
+                    next_round=pending_round + 1,
+                ),
+                seen_from_pages(catalog.rounds()), processed,
+                probe_filter=True,
             )
         else:
             frontier = catalog.read(spark, "frontier")
-        # the rebuilt frontier went through the dedup above; a read one
-        # (writer config unknown) keeps the loop's dedup
-        frontier_deduped = pending_round is not None
         metrics_rows = state.get("metrics_rows", [])
         # resume always re-enters on the Spark path (frontier/seen are
         # snapshot-resident); tiny post-resume rounds still work, they
@@ -384,17 +466,21 @@ def run_crawl(
             sitemap_urls = sitemap.sitemap_urls(sitemaps, base)
             # sorted(set(...)) seeding order (sitemap_parser.py:22,
             # main.py:52-58): base first, then sitemap URLs by rank.
-            # Seeds are the only rows canonicalized here (driver-side,
-            # handful of rows); expansions arrive pre-canonicalized.
+            # Seeds are the only rows canonicalized and scope-filtered
+            # (P4) here (driver-side, handful of rows); expansions
+            # arrive pre-canonicalized and in scope.
             seed_rows += [
                 (u, 0, -1, i + 1, normalize_url(u))
                 for i, u in enumerate(sitemap_urls)
             ]
-        frontier = spark.createDataFrame(seed_rows, FRONTIER_SCHEMA)
-        frontier_deduped = False  # base may repeat in the sitemap list
-        frontier_rows = list(seed_rows)
+            seed_rows = [row for row in seed_rows if row[4].startswith(base)]
+        # seeds meet an empty seen; a fast round 0 admits them itself
+        frontier, _ = _admit(
+            spark.createDataFrame(seed_rows, FRONTIER_SCHEMA),
+            _empty(spark, SEEN_SCHEMA), 0, probe_filter=True,
+        )
+        frontier_rows = seed_rows
         seen_set = set()
-        parent_bounds = (-1, 0)  # seeds carry parent_seq = -1
 
     pages_rounds: list[int] = catalog.rounds() if config.resume else []
     seen_cache = None  # persisted incremental seen set (guide §2.4: the
@@ -402,39 +488,28 @@ def run_crawl(
     # snapshot every round — an O(total-seen) parquet re-read + re-hash
     # per round; the cache makes it O(delta): cached seen ∪ this
     # round's snapshot)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # frontier_deduped (set above, updated each round): True when the
-    # current frontier is KNOWN globally dedup'd at write time
-    # (expansion/fastround output with no per-host deferral in play):
-    # the loop's J2 dedup shuffle is then an identity and is skipped —
-    # one full frontier exchange per round saved.
 
-    # Fused-seq state: when the expansion ALSO applied the probe-skip
-    # (P5/P6) and robots filters at admission — provably output-
-    # identical, a skipped URL never gets a seq and never enters seen
-    # on either path — and stamped each row's deterministic range
-    # bucket (``seq_bucket``), the per-bucket row counts ride the
-    # frontier WRITE job as an Observation. The next round then knows
-    # its offsets (and n_eligible) driver-side: the whole filter chain
-    # is an identity and the seq assignment fuses into the fetch job —
-    # zero extra Spark jobs per round (guide §2.4: the counts job was
-    # a pure per-round floor, ~1s + planning per round at any core
-    # count). Seeds, resumed frontiers and deferral rounds fall back.
+    # Fused-seq state: the per-bucket counts of the current frontier,
+    # published by its write (``_admit``'s Observation, or fastround's
+    # driver-side counts). None for round 0 on seeds, the first resumed
+    # round and throttled rounds, which pop through assign_global_seq.
     fused_counts: dict[int, int] | None = None
 
-    sc = spark.sparkContext
-    # loop-invariant expression trees, built once: Column/Window
-    # objects are immutable and reusable, and rebuilding the 32
-    # per-bucket observation metrics plus the bucket window costs a
-    # few hundred py4j round-trips per round otherwise
-    bucket_metrics = [
-        F.sum((F.col("seq_bucket") == i).cast("long")).alias(f"b{i}")
-        for i in range(n_part)
-    ]
-    bucket_window = Window.partitionBy("seq_bucket").orderBy(
-        *[F.col(c) for c in PRIORITY_COLS]
-    )
+    def commit(r: int, tables: dict[str, str], **extra) -> None:
+        """Publish round r's snapshots with the resume state."""
+        catalog.commit(r, tables, state={
+            "base": base,
+            "processed": processed,
+            "round": r,
+            "budget": budget,
+            "sitemap_urls": sitemap_urls,
+            "metrics_rows": metrics_rows,
+            "n_host_shards": config.n_host_shards,
+            "frontier_admitted": True,
+            **extra,
+        })
 
+    sc = spark.sparkContext
     r = start_round
     while r < config.max_rounds and processed < budget:
         t0 = time.time()
@@ -460,7 +535,7 @@ def run_crawl(
             pages_r_path = catalog.table_path("pages", r)
             write_pages_parquet(pages_r_path, fr.pages)
             frontier_path = catalog.table_path("frontier", r)
-            # fused-seq info, driver-side (mirrors the Spark expansion's
+            # fused-seq info, driver-side (mirrors _admit's
             # Observation): fastround admission already applied probe/
             # robots filters, so bucket counts here let a handover round
             # take the fused path with zero standalone actions
@@ -482,7 +557,6 @@ def run_crawl(
             )
             pages_rounds.append(r)
             processed += fr.due_count
-            parent_bounds = (processed - fr.due_count, processed)
             metrics_rows.append(
                 {
                     "round": r,
@@ -496,20 +570,7 @@ def run_crawl(
                     "expand_s": fr.expand_s,
                 }
             )
-            catalog.commit(
-                r,
-                {"pages": pages_r_path, "frontier": frontier_path},
-                state={
-                    "base": base,
-                    "processed": processed,
-                    "round": r,
-                    "budget": budget,
-                    "sitemap_urls": sitemap_urls,
-                    "metrics_rows": metrics_rows,
-                    "n_host_shards": config.n_host_shards,
-                "parent_bounds": list(parent_bounds),
-                },
-            )
+            commit(r, {"pages": pages_r_path, "frontier": frontier_path})
             if len(fr.frontier_next) <= config.fast_round_max:
                 frontier_rows = fr.frontier_next
             else:
@@ -518,25 +579,19 @@ def run_crawl(
                 frontier_rows = None
                 seen_set = None
                 frontier = spark.read.parquet(frontier_path)
-                # fastround's frontier_next is globally first-wins
-                # dedup'd (best-dict, fastround.py) unless deferral
-                # rows were unioned in
-                frontier_deduped = config.max_per_host_per_round is None
                 fused_counts = fast_counts
             r += 1
             continue
         frontier_rows = None
         seen_set = None
 
-        # ---- fused-seq fast path: the previous round's expansion
-        # already applied the complete filter chain at admission and
-        # published per-bucket counts via its write-job Observation, so
-        # this round needs NO standalone action before the fetch: the
-        # offsets are driver arithmetic and the bucket-window seq
-        # assignment rides the fetch job itself. ----
+        # the frontier was admitted when it was written (_admit): pop it
+        # as-is. With published bucket counts (fused-seq) the offsets are
+        # driver arithmetic and the bucket-window seq assignment rides
+        # the fetch job itself; otherwise assign_global_seq ranks it.
+        deferred = None
+        seq_cache = None
         if fused_counts is not None:
-            deferred = None
-            seq_cache = None
             n_eligible = sum(fused_counts.values())
             t_seq = time.time()
             if n_eligible == 0:
@@ -558,61 +613,8 @@ def run_crawl(
                     - 1
                 ).cast("long"),
             )
-            due = seqd.filter(F.col("seq") < budget).withColumn(
-                "round", F.lit(r).cast("int")
-            )
         else:
-            # url_norm is carried by the frontier (seeds canonicalized at
-            # seeding, expansions at discovery), and v2 frontiers also
-            # carry (host, url_hash, host_shard) from admission — no
-            # per-round UDF/hash re-derivation. v1 frontiers (seeds, old
-            # checkpoints) are backfilled here.
-            if "host" in frontier.columns:
-                f = frontier
-            else:
-                f = (
-                    frontier.withColumn("host", host_udf(F.col("url_norm")))
-                    .withColumn("url_hash", F.xxhash64(F.col("url_norm")))
-                    .withColumn(
-                        "host_shard",
-                        F.pmod(
-                            F.xxhash64(F.col("host")), F.lit(config.n_host_shards)
-                        ).cast("int"),
-                    )
-                )
-            # J1 ran when this frontier was admitted (module docstring)
-            in_scope = f.filter(F.col("url_norm").startswith(base))  # P4
-            deduped = (                                               # J2 equiv.
-                in_scope if frontier_deduped else dedup_within_round(in_scope)
-            )
-
-            # P5/P6 — HEAD-model probe: only suspicious URLs consult the
-            # content type; image/* are skipped (scraper.py:81-84).
-            susp = deduped.filter(suspicious_pred(F.col("url_norm")))
-            rest = deduped.filter(~suspicious_pred(F.col("url_norm")))
-            if probe_skip_bc is not None:
-                # fast path: membership in the once-collected skip set
-                susp_kept = susp.filter(~_probe_skips(F.col("url_norm")))
-            else:
-                # scale path: semi-prune the probe table by the (tiny)
-                # suspicious key set first — otherwise the planner
-                # broadcasts the full probe projection every round
-                probe_small = probe.join(
-                    F.broadcast(susp.select("url_norm")), on="url_norm", how="left_semi"
-                )
-                susp_kept = (
-                    susp.join(F.broadcast(probe_small), on="url_norm", how="left")
-                    .filter(
-                        F.col("_probe_ct").isNull()
-                        | ~F.col("_probe_ct").startswith("image/")
-                    )
-                    .drop("_probe_ct")
-                )
-            eligible = rest.unionByName(susp_kept)
-            if robots_filter is not None:
-                eligible = eligible.filter(robots_filter(F.col("url_norm")))
-
-            deferred = None
+            eligible = frontier
             if config.max_per_host_per_round is not None:
                 hw = Window.partitionBy("host").orderBy(
                     *[F.col(c) for c in PRIORITY_COLS]
@@ -621,39 +623,25 @@ def run_crawl(
                 deferred = (
                     ranked.filter(F.col("_hr") > config.max_per_host_per_round)
                     .select("url", "round_enqueued", "parent_seq", "sibling_rank",
-                            "url_norm", "host", "url_hash", "host_shard")
+                            "url_norm")
                 )
                 eligible = ranked.filter(
                     F.col("_hr") <= config.max_per_host_per_round
                 ).drop("_hr")
-
-            # one computation of the whole filter chain per round: the seq
-            # assignment persists its range-partitioned output (also pinning
-            # the partitioning so offsets stay valid — see assign_global_seq),
-            # its count collect materializes the cache, and the fetch reuses it.
-            # Without deferral every frontier row shares round_enqueued, and
-            # parent_seq is bounded by the previous round's seq range (driver-
-            # known) — deterministic bucket boundaries, which drops the range
-            # partitioner's per-round SAMPLING job (half the seq phase's fixed
-            # job cost). Deferral mixes round_enqueued values, where parent_seq
-            # alone is not monotone in the priority order → sampling path.
-            bucket_hint = (
-                ("parent_seq", parent_bounds[0], parent_bounds[1])
-                if config.max_per_host_per_round is None
-                else None
-            )
+            # the seq assignment persists its range-partitioned output;
+            # its count collect materializes the cache, and the fetch
+            # reuses it (see assign_global_seq)
             sc.setJobDescription(f"crawl r{r}: global seq")
             seqd, n_eligible, seq_cache = assign_global_seq(
-                eligible, PRIORITY_COLS, start=processed, range_bucket=bucket_hint
+                eligible, PRIORITY_COLS, start=processed
             )
             t_seq = time.time()
             if n_eligible == 0:
                 seq_cache.unpersist()
                 break
-            due = seqd.filter(F.col("seq") < budget).withColumn(
-                "round", F.lit(r).cast("int")
-            )
-
+        due = seqd.filter(F.col("seq") < budget).withColumn(
+            "round", F.lit(r).cast("int")
+        )
         due_count = min(n_eligible, budget - processed)
 
         # only the columns the fetch kernel consumes cross the exchange
@@ -755,86 +743,22 @@ def run_crawl(
             # cache is released after the frontier write
             seen_next = seen_next.persist()
 
-        # expansions → next frontier (J2/J4/O4). Candidates are deduped
-        # GLOBALLY (first occurrence by priority — the same rule
-        # dedup_within_round applies next round, so semantics are
-        # unchanged) BEFORE hashing/sharding/admission: with ~300
-        # outlinks/page the raw candidate stream is ~50x larger than
-        # its distinct set, and everything downstream of this dedup
-        # (anti-join, frontier write, next round's whole filter
-        # chain) now runs on the small side.
-        if config.discovery and not final_round:
-            cand = expand_frontier(pages_r, base, next_round=r + 1)
-            # ``url`` is url_norm verbatim for every expansion row
-            # (expand_frontier selects url_norm twice) — drop the copy
-            # BEFORE the dedup exchange so each candidate row carries
-            # one string, not two, through the round's biggest shuffle;
-            # re-aliased after admission (guide §2.3: shuffle fewer
-            # bytes).
-            cand = dedup_within_round(cand.drop("url"))
-            # derive (host, url_hash, host_shard) ONCE — they ride the
-            # v2 frontier file so no later round recomputes them
-            cand = (
-                cand.withColumn("host", host_udf(F.col("url_norm")))
-                .withColumn("url_hash", F.xxhash64(F.col("url_norm")))
-                .withColumn(
-                    "host_shard",
-                    F.pmod(
-                        F.xxhash64(F.col("host")),
-                        F.lit(config.n_host_shards),
-                    ).cast("int"),
-                )
-            )
-            admitted = anti_join_seen(cand, seen_next, processed_next)  # J1
-            frontier_next = admitted.select(
-                F.col("url_norm").alias("url"),
-                "round_enqueued", "parent_seq", "sibling_rank",
-                "url_norm", "host", "url_hash", "host_shard"
-            )
-        else:
-            frontier_next = _empty(spark, FRONTIER_SCHEMA_V2)
-        if deferred is not None:
-            # deferred rows keep their original priority, so they sort
-            # ahead of this round's expansions next round
-            frontier_next = deferred.unionByName(frontier_next)
-        # ---- fused-seq instrumentation for the NEXT round: the fetch
-        # kernel already dropped probe-skip URLs (P5/P6) from
-        # discovered_norm at discovery (set lookups on strings already
-        # in the Python worker — no UDF pass here), robots (when on)
-        # filters here, the deterministic parent_seq range bucket is
-        # stamped, and the per-bucket counts ride the write job as an
-        # Observation. Next round then assigns seq with driver-known
-        # offsets inside the fetch job: no standalone action at all.
+        # expansions → next frontier (J4/O4 → _admit). Under the
+        # throttle the deferred rows join the candidates BEFORE the
+        # dedup: they keep their original (earlier) priority, so the
+        # frontier stays globally first-wins
         obs_f = None
-        if (
-            config.discovery
-            and not final_round
-            and deferred is None
-            and config.max_per_host_per_round is None
-            and probe_skip_bc is not None
-        ):
-            if robots_filter is not None:
-                frontier_next = frontier_next.filter(
-                    robots_filter(F.col("url_norm"))
-                )
-            # candidates' parent_seq ∈ [processed, processed_next) by
-            # construction (parents are this round's due pages); integer
-            # DIV keeps the bucket map exactly monotone (same contract
-            # as assign_global_seq's range_bucket path)
-            lo = processed
-            span = max(processed_next - processed, 1)
-            bucket = F.expr(
-                f"CAST(((parent_seq - {lo}L) * {n_part}L) DIV {span}L AS INT)"
-            )
-            bucket = F.least(
-                F.lit(n_part - 1), F.greatest(F.lit(0), bucket)
-            )
-            frontier_next = frontier_next.withColumn("seq_bucket", bucket)
-            obs_f = Observation(f"frontier_{r}")
-            frontier_next = frontier_next.observe(obs_f, *bucket_metrics)
         if final_round:
             frontier_path = None
         else:
+            cand = expand_frontier(pages_r, base, next_round=r + 1)
+            if deferred is not None:
+                cand = deferred.unionByName(cand)
+            frontier_next, obs_f = _admit(
+                cand, seen_next, processed_next,
+                probe_filter=probe_skip_bc is None,
+                parents=(processed, processed_next),
+            )
             sc.setJobDescription(f"crawl r{r}: expand+admit+frontier-write")
             frontier_path = catalog.write_table("frontier", r, frontier_next)
             # the writer's schema is known exactly (v2 + seq_bucket iff
@@ -850,24 +774,17 @@ def run_crawl(
             if seen_cache is not None:
                 seen_cache.unpersist()
             seen_cache = seen_next
+        fused_counts = None
         if obs_f is not None:
             counts_row = obs_f.get  # free: rode the write job
             fused_counts = {
                 i: int(counts_row[f"b{i}"] or 0) for i in range(n_part)
             }
-        else:
-            fused_counts = None
-        # admitted is dedup_within_round output; deferral union may
-        # reintroduce a URL the expansion also discovered
-        frontier_deduped = config.max_per_host_per_round is None
         if seq_cache is not None:
             seq_cache.unpersist()
         pages_r.unpersist()
         t_expand = time.time()
 
-        # next frontier's parents are this round's pages (seq range
-        # [processed, processed_next)) — the bucketed seq path's bounds
-        parent_bounds = (processed, processed_next)
         processed = processed_next
         metrics_rows.append(
             {
@@ -883,22 +800,10 @@ def run_crawl(
                 "expand_s": round(t_expand - t_fetch, 2),
             }
         )
-        commit_tables = {"pages": pages_r_path}
-        commit_state = {
-            "base": base,
-            "processed": processed,
-            "round": r,
-            "budget": budget,
-            "sitemap_urls": sitemap_urls,
-            "metrics_rows": metrics_rows,
-            "n_host_shards": config.n_host_shards,
-            "parent_bounds": list(parent_bounds),
-        }
-        if frontier_path is not None:
-            commit_tables["frontier"] = frontier_path
+        if frontier_path is None:
+            commit(r, {"pages": pages_r_path}, expansion_pending=r)
         else:
-            commit_state["expansion_pending"] = r
-        catalog.commit(r, commit_tables, state=commit_state)
+            commit(r, {"pages": pages_r_path, "frontier": frontier_path})
 
         r += 1
 

@@ -258,11 +258,11 @@ def run_fast_round(
         seen_set.add(p["url_norm"])
 
     # J4/O4 expansion → J2 global first-occurrence → J1 admission.
-    # The probe-skip (P5/P6) and robots filters apply at ADMISSION,
-    # mirroring the Spark kernel's discovered_norm filter: a dropped
-    # URL would be filtered before seq assignment at pop time anyway,
-    # so pages/order/seen are identical — and the pop-time checks
-    # above stay as identities for rows admitted here.
+    # The probe-skip (P5/P6) and robots filters apply at ADMISSION, as
+    # in the Spark path (plans/crawl.py ``_admit``): a dropped URL never
+    # gets a seq on either path, so pages/order/seen are identical. The
+    # pop-time checks above admit the seeds, and are identities for
+    # rows admitted here.
     frontier_next: list[tuple] = list(deferred)
     if config.discovery:
         best: dict[str, tuple] = {}
@@ -288,10 +288,14 @@ def run_fast_round(
                 prev = best.get(nn)
                 if prev is None or cand[:3] < prev[:3]:
                     best[nn] = cand
+        # a URL still deferred keeps its earlier-priority deferred copy:
+        # a Spark round pops a handed-over frontier without a J2 pass
+        deferred_urls = {row[4] for row in deferred}
         admitted = sorted(
             c
             for un, c in best.items()
             if un not in seen_set
+            and un not in deferred_urls
             and (robots_cache is None or robots_cache.allows(un))
         )
         frontier_next += admitted
