@@ -170,9 +170,24 @@ def test_shuffle_anti_join_parity(spark, small_corpus, monkeypatch):
     assert shuffled[:3] == broadcast[:3]
 
 
-def test_probe_fast_and_join_paths_agree(spark, small_corpus):
+def _probe_cap(cfg: dict, monkeypatch) -> dict:
+    """Crawl shapes name ``crawl.PROBE_BROADCAST_MAX`` (a module
+    constant) beside the CrawlConfig fields: set it, return the fields."""
+    import wormpy_spark.plans.crawl as crawl_mod
+
+    cfg = dict(cfg)
+    if "PROBE_BROADCAST_MAX" in cfg:
+        monkeypatch.setattr(
+            crawl_mod, "PROBE_BROADCAST_MAX", cfg.pop("PROBE_BROADCAST_MAX")
+        )
+    return cfg
+
+
+def test_probe_fast_and_join_paths_agree(spark, small_corpus, monkeypatch):
     """P5/P6 probe: the broadcast skip-set fast path and the per-round
     semi-join scale path must produce identical crawls."""
+    import wormpy_spark.plans.crawl as crawl_mod
+
     tables = corpus_to_spark(spark, small_corpus)
     # fast_round_max=0: compare the two SPARK probe strategies (the
     # driver fast path has its own skip-set check, tested separately)
@@ -181,10 +196,9 @@ def test_probe_fast_and_join_paths_agree(spark, small_corpus):
     fast = run_crawl(
         spark, tables["web"], CrawlConfig(**base_cfg), sitemaps=tables["sitemaps"]
     )
+    monkeypatch.setattr(crawl_mod, "PROBE_BROADCAST_MAX", 0)
     joined = run_crawl(
-        spark, tables["web"],
-        CrawlConfig(**base_cfg, probe_broadcast_max=0),
-        sitemaps=tables["sitemaps"],
+        spark, tables["web"], CrawlConfig(**base_cfg), sitemaps=tables["sitemaps"]
     )
     assert [r["url_norm"] for r in fast.order.collect()] == [
         r["url_norm"] for r in joined.order.collect()
@@ -240,41 +254,56 @@ def test_driver_fast_path_equals_spark_path(spark, small_corpus, monkeypatch):
 
 def test_assign_global_seq_matches_sorted_reference(spark):
     """The dense global sequence equals a plain Python sort of the
-    priority triple, offset by ``start`` — over rows that span several
-    round_enqueued values (the shape a per-host throttle's deferred rows
-    give a frontier) — and an empty input yields no rows."""
+    priority triple, offset by ``start``, over rows that span several
+    round_enqueued values, each with its own disjoint, increasing
+    parent_seq range — the shape every frontier has (seq is assigned in
+    round order; a throttle's deferred rows sit below the newest
+    parents and clamp to bucket 0). Counting the buckets (counts=None)
+    and passing the true counts give the same seq; an empty input
+    yields no rows."""
     import random
+    from collections import Counter
 
     from wormpy_spark.operators.frontier import (
         FRONTIER_SCHEMA,
-        PRIORITY_COLS,
         assign_global_seq,
+        seq_bucket,
+        seq_bucket_col,
     )
 
     rng = random.Random(31337)
     triples = set()
     while len(triples) < 5000:
-        triples.add(
-            (rng.randrange(3, 7), rng.randrange(1000, 9000), rng.randrange(1, 300))
-        )
+        renq = rng.randrange(3, 7)
+        # round_enqueued r's parents: seq range [2000 r, 2000 (r + 1))
+        pseq = 2000 * renq + rng.randrange(2000)
+        triples.add((renq, pseq, rng.randrange(1, 300)))
     rows = [
         (f"https://h.test/p/{i}", renq, pseq, srank, f"https://h.test/p/{i}")
         for i, (renq, pseq, srank) in enumerate(triples)
     ]
-    df = spark.createDataFrame(rows, FRONTIER_SCHEMA)
-    out, total, handle = assign_global_seq(df, PRIORITY_COLS, start=123)
-    got = sorted((r["seq"], r["url"]) for r in out.select("seq", "url").collect())
-    handle.unpersist()
+    # the parents' range [9000, 14000) spans two rounds; rounds 3-4
+    # below it clamp to bucket 0
+    parents, n_buckets = (9000, 14000), 8
+    df = spark.createDataFrame(rows, FRONTIER_SCHEMA).withColumn(
+        "seq_bucket", seq_bucket_col(*parents, n_buckets)
+    )
+    true_counts = Counter(seq_bucket(row[2], *parents, n_buckets) for row in rows)
+    assert len(true_counts) == n_buckets
     want = [
         (123 + i, row[0])
         for i, row in enumerate(sorted(rows, key=lambda row: row[1:4]))
     ]
-    assert total == 5000 and got == want
+    for counts in (None, dict(true_counts)):
+        out, total = assign_global_seq(df, 123, counts)
+        got = sorted((r["seq"], r["url"]) for r in out.select("seq", "url").collect())
+        assert total == 5000 and got == want
+    df.unpersist()
 
-    empty = spark.createDataFrame([], FRONTIER_SCHEMA)
-    out, total, handle = assign_global_seq(empty, PRIORITY_COLS, start=7)
+    empty = spark.createDataFrame([], FRONTIER_SCHEMA + ", seq_bucket int")
+    out, total = assign_global_seq(empty, 7)
     assert total == 0 and out.count() == 0
-    handle.unpersist()
+    empty.unpersist()
 
 
 # host1 has no sitemap: 1 seed, then throttled frontiers of 3 and 11
@@ -287,7 +316,7 @@ ADMISSION_SHAPES = {
     # fastround's own frontier: deferred rows and expansions meet there
     "fast-throttled": dict(budget=12, max_per_host_per_round=3),
     "probe-join": dict(base_url="https://host1.test", budget=50,
-                       fast_round_max=0, probe_broadcast_max=0),
+                       fast_round_max=0, PROBE_BROADCAST_MAX=0),
 }
 
 
@@ -296,25 +325,29 @@ def test_every_frontier_is_admitted_once(spark, small_corpus, tmp_path,
                                          monkeypatch, shape):
     """Every frontier snapshot holds distinct url_norm values, none of
     them in any earlier pages snapshot: the round that pops it applies
-    no dedup or seen check of its own. Unthrottled Spark rounds after
-    round 0 take the fused seq path under both probe strategies, so
-    assign_global_seq runs for round 0 only."""
+    no dedup or seen check of its own. Its parent_seq ranges per
+    round_enqueued are disjoint and increasing, so parent_seq buckets
+    order the whole priority triple. An unthrottled frontier write
+    publishes its bucket counts under both probe strategies, so the
+    ranker counts buckets itself for round 0 only; under a throttle it
+    counts them every round."""
     import wormpy_spark.plans.crawl as crawl_mod
     from wormpy_spark.sources.catalog import SnapshotCatalog
 
-    starts = []
+    calls = []  # (start, whether the ranker counted the buckets)
     stock = crawl_mod.assign_global_seq
 
-    def spy(df, order_cols=None, start=0, **kw):
-        starts.append(start)
-        return stock(df, order_cols, start=start, **kw)
+    def spy(frontier, start, counts=None):
+        calls.append((start, counts is None))
+        return stock(frontier, start, counts)
 
     monkeypatch.setattr(crawl_mod, "assign_global_seq", spy)
     tables = corpus_to_spark(spark, small_corpus)
     ckpt = str(tmp_path / "ckpt")
     res = run_crawl(
         spark, tables["web"],
-        CrawlConfig(**{**RESUME_BASE, **ADMISSION_SHAPES[shape]},
+        CrawlConfig(**{**RESUME_BASE, **_probe_cap(ADMISSION_SHAPES[shape],
+                                                   monkeypatch)},
                     checkpoint_dir=ckpt),
         sitemaps=tables["sitemaps"],
     )
@@ -330,23 +363,36 @@ def test_every_frontier_is_admitted_once(spark, small_corpus, tmp_path,
         }
         if "frontier" not in rec["tables"]:
             continue
-        urls = [
-            r["url_norm"]
-            for r in spark.read.parquet(rec["tables"]["frontier"]).collect()
-        ]
+        rows = spark.read.parquet(rec["tables"]["frontier"]).collect()
+        urls = [row["url_norm"] for row in rows]
         n_frontiers += 1
         assert len(urls) == len(set(urls)), f"round {rec['round']}: duplicates"
         assert not fetched & set(urls), f"round {rec['round']}: already fetched"
+        spans: dict[int, list[int]] = {}
+        for row in rows:
+            spans.setdefault(row["round_enqueued"], []).append(row["parent_seq"])
+        ordered = [spans[k] for k in sorted(spans)]
+        assert all(
+            max(a) < min(b) for a, b in zip(ordered, ordered[1:])
+        ), f"round {rec['round']}: parent_seq ranges overlap"
     assert n_frontiers > 1
 
     if shape in ("spark", "probe-join"):
-        assert starts == [0]
+        assert [start for start, counted in calls if counted] == [0]
+    if shape == "throttled":
+        assert len(calls) == res.rounds and all(c for _, c in calls)
 
 
 def test_resume_refuses_unadmitted_checkpoint(spark, small_corpus, tmp_path):
     """A checkpoint whose state lacks ``frontier_admitted`` was written
-    by an engine that filtered at pop time: resuming it is refused."""
+    by an engine that filtered at pop time, and one whose frontier lacks
+    ``seq_bucket`` by an engine that left it out of throttled frontiers:
+    resuming either is refused."""
+    import glob
     import json
+    import os
+
+    import pyarrow.parquet as pq
 
     from wormpy_spark.sources.catalog import SnapshotCatalog
 
@@ -361,6 +407,17 @@ def test_resume_refuses_unadmitted_checkpoint(spark, small_corpus, tmp_path):
     with open(catalog._manifest_path(), "w") as f:
         json.dump(manifest, f)
     with pytest.raises(ValueError, match="admission"):
+        run_crawl(spark, tables["web"], CrawlConfig(**cfg, resume=True),
+                  sitemaps=tables["sitemaps"])
+
+    manifest["state"]["frontier_admitted"] = True
+    with open(catalog._manifest_path(), "w") as f:
+        json.dump(manifest, f)
+    parts = glob.glob(os.path.join(manifest["tables"]["frontier"], "*.parquet"))
+    assert parts
+    for part in parts:
+        pq.write_table(pq.read_table(part).drop(["seq_bucket"]), part)
+    with pytest.raises(ValueError, match="seq_bucket"):
         run_crawl(spark, tables["web"], CrawlConfig(**cfg, resume=True),
                   sitemaps=tables["sitemaps"])
 
@@ -386,11 +443,11 @@ def test_prepared_compressed_web_parity(spark, small_corpus):
 
 def test_writer_columns_match_read_schemas(spark, small_corpus, monkeypatch):
     """The crawl re-reads its own snapshots with explicit schemas
-    (PAGES_SCHEMA, FRONTIER_SCHEMA_V2 [+ seq_bucket]), and an explicit
-    parquet read nulls a missing column and drops an extra one without
-    error. Pin every writer to those schemas so drift fails here: the
-    Spark round's pages and frontier writes (fused-seq path and the
-    deferral path without seq_bucket) and fastround's pyarrow writers."""
+    (PAGES_SCHEMA, FRONTIER_SCHEMA_V2), and an explicit parquet read
+    nulls a missing column and drops an extra one without error. Pin
+    every writer to those schemas so drift fails here: the Spark
+    round's pages and frontier writes (with and without a per-host
+    throttle: one column set) and fastround's pyarrow writers."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     from wormpy_spark.operators.fetch import PAGES_SCHEMA
@@ -424,10 +481,8 @@ def test_writer_columns_match_read_schemas(spark, small_corpus, monkeypatch):
 
     assert written["pages"]
     assert all(cols == pages_schema.names for cols in written["pages"])
-    variants = {tuple(cols) for cols in written["frontier"]}
-    assert variants == {
-        tuple(frontier_cols), tuple(frontier_cols + ["seq_bucket"])
-    }
+    assert written["frontier"]
+    assert all(cols == frontier_cols for cols in written["frontier"])
 
     assert from_arrow_schema(PAGES_ARROW_SCHEMA) == pages_schema
     assert from_arrow_schema(FRONTIER_ARROW_SCHEMA) == frontier_schema
@@ -499,19 +554,21 @@ def uninterrupted(spark, small_corpus):
         HANDOVER,
         dict(budget=50, fast_round_max=0),  # Spark rounds only
         dict(budget=12, max_per_host_per_round=3),  # fast rounds only
-        # probe semi-join at admission, fused seq in every later round
-        dict(budget=50, fast_round_max=0, probe_broadcast_max=0),
+        # probe semi-join at admission, published bucket counts in
+        # every later round
+        dict(budget=50, fast_round_max=0, PROBE_BROADCAST_MAX=0),
     ],
     ids=["handover", "spark", "throttled", "probe-join"],
 )
-def test_resume_at_every_round_boundary(spark, uninterrupted, tmp_path, cfg):
+def test_resume_at_every_round_boundary(spark, uninterrupted, tmp_path,
+                                        monkeypatch, cfg):
     """Stop after each committed round k (max_rounds=k), then resume:
     the result must equal the uninterrupted crawl in order, seen set,
     every page row and host_state. A resumed round never re-checks its
     frontier against seen, so this is the evidence that admission alone
     keeps seen exact across a restart."""
     tables, get = uninterrupted
-    cfg = {**RESUME_BASE, **cfg}
+    cfg = {**RESUME_BASE, **_probe_cap(cfg, monkeypatch)}
     n_rounds, ref = get(
         cfg["base_url"], cfg["budget"], cfg.get("max_per_host_per_round")
     )

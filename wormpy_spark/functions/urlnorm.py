@@ -116,11 +116,6 @@ def host_udf(urls: pd.Series) -> pd.Series:
     return urls.map(mapping)
 
 
-def url_hash_col(url_norm: Column) -> Column:
-    """64-bit hash for seen-set joins: built-in xxhash64 (JVM, codegen)."""
-    return F.xxhash64(url_norm)
-
-
 def media_extension_pred(url_col: Column) -> Column:
     """P7 as a pure column expression (JVM-side, no Python):
     last '.'-segment of the path, lowered, in the media list.
@@ -130,11 +125,6 @@ def media_extension_pred(url_col: Column) -> Column:
     path = F.coalesce(F.parse_url(url_col, F.lit("PATH")), F.lit(""))
     last = F.element_at(F.split(path, r"\."), -1)
     return F.coalesce(F.lower(last).isin(*MEDIA_EXTENSIONS), F.lit(False))
-
-
-def scope_prefix_pred(url_norm_col: Column, base_url_norm: str) -> Column:
-    """P4: string-prefix scope filter (scraper.py:73-75)."""
-    return url_norm_col.startswith(base_url_norm)
 
 
 def suspicious_pred(url_col: Column) -> Column:

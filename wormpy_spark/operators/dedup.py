@@ -47,12 +47,6 @@ def _shingles(text: str, n: int = 3) -> set[str]:
     return {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
 
 
-def _shingle_hash(s: str) -> int:
-    """Reference point for tests: hash of ONE shingle (must equal the
-    batch path below)."""
-    return int(_hash_shingle_batch([s])[0])
-
-
 def _hash_shingle_batch(shingles: list[str]) -> np.ndarray:
     """Vectorized shingle hashing: FNV-1a over utf-8 bytes (uint64
     wraparound) folded into [0, MERSENNE). One numpy Horner sweep over

@@ -14,32 +14,24 @@ url_norm order. BSP rounds therefore reproduce the reference's
 sequential pop order exactly (proof sketch in SURVEY.md §3.2).
 
 ``assign_global_seq`` turns that priority order into a dense global
-sequence WITHOUT a single-partition window: range-repartition on the
-priority, per-partition row_number, plus broadcast partition offsets —
-the standard scalable global-rank pattern (no driver collect of rows,
-no one-task sort at 10^10 scale).
+sequence WITHOUT a single-partition window. Seq is assigned in round
+order and seeds have parent_seq = -1, so every row of a later
+round_enqueued has a larger parent_seq than every row of an earlier
+one: range buckets of parent_seq (``seq_bucket``, stamped when the
+frontier is admitted) are monotone in the whole priority triple. Seq
+is then a per-bucket row_number plus driver-known bucket offsets — no
+driver collect of rows, no one-task sort at 10^10 scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.urlnorm import canonicalize_udf
 
 PRIORITY_COLS = ["round_enqueued", "parent_seq", "sibling_rank"]
 
-
-class _SeqCaches:
-    """Bundle of the two persisted DataFrames assign_global_seq takes;
-    callers release both with one unpersist()."""
-
-    def __init__(self, *dfs):
-        self._dfs = dfs
-
-    def unpersist(self):
-        for d in self._dfs:
-            d.unpersist()
 
 # url_norm rides the frontier: expansions are canonicalized when they
 # are discovered (expand_frontier), so no round ever re-canonicalizes
@@ -54,68 +46,61 @@ FRONTIER_SCHEMA = (
 
 # v2: admission-derived columns ride the frontier file so no round ever
 # re-derives them — host (a pandas-UDF urlparse pass over the engine's
-# biggest row stream), url_hash, host_shard are computed exactly once,
-# at admission (plans/crawl.py ``_admit``, fastround's pyarrow writer).
-# Every frontier the crawl writes is v2; only seeds are built as v1 rows,
-# and they pass admission before any round reads them.
-FRONTIER_SCHEMA_V2 = FRONTIER_SCHEMA + ", host string, url_hash long, host_shard int"
+# biggest row stream) and host_shard are computed exactly once, at
+# admission (plans/crawl.py ``_admit``, fastround's pyarrow writer),
+# with seq_bucket, the parent_seq range bucket the round's seq ranks
+# by. Every frontier the crawl writes is v2; only seeds are built as v1
+# rows, and they pass admission before any round reads them.
+FRONTIER_SCHEMA_V2 = FRONTIER_SCHEMA + ", host string, host_shard int, seq_bucket int"
+
+
+def seq_bucket(parent_seq: int, lo: int, hi: int, n_buckets: int) -> int:
+    """The bucket of ``parent_seq`` among ``n_buckets`` equal slices of
+    the parents' seq range [lo, hi); rows below ``lo`` (seeds, deferred
+    rows) clamp to bucket 0. Monotone in parent_seq."""
+    b = (parent_seq - lo) * n_buckets // max(hi - lo, 1)
+    return min(n_buckets - 1, max(0, b))
+
+
+def seq_bucket_col(lo: int, hi: int, n_buckets: int) -> Column:
+    """``seq_bucket`` as a column expression over ``parent_seq``, equal
+    to it row by row: the integer DIV keeps it exactly monotone."""
+    b = F.expr(
+        f"CAST(((parent_seq - {lo}L) * {n_buckets}L) DIV {max(hi - lo, 1)}L AS INT)"
+    )
+    return F.least(F.lit(n_buckets - 1), F.greatest(F.lit(0), b))
 
 
 def assign_global_seq(
-    df: DataFrame,
-    order_cols: list[str] | None = None,
-    start: int = 0,
-    seq_col: str = "seq",
-    n_partitions: int | None = None,
-) -> tuple[DataFrame, int, DataFrame]:
-    """Dense 0-based global sequence in (order_cols) order, offset by
-    ``start``. Scales: range partition → local rank → offset map.
-    ``order_cols`` must be a total order (the priority triple is unique
-    by construction). Returns (df_with_seq, row_count, cache_handle) —
-    the count is a free by-product of the offset computation.
+    frontier: DataFrame, start: int, counts: dict[int, int] | None = None
+) -> tuple[DataFrame, int]:
+    """Dense global sequence in priority order, offset by ``start``, over
+    a frontier stamped with ``seq_bucket``. Returns (frontier_with_seq,
+    row_count).
 
-    TWO caches are bundled into the handle:
-    - the INPUT is persisted because repartitionByRange's range
-      partitioner runs a separate SAMPLING job over its child — without
-      the cache every caller's upstream chain is computed twice per
-      call;
-    - the ranged output is persisted because repartitionByRange samples
-      its boundaries per execution (RDD-id-seeded), so without it the
-      counts job and the downstream job could place a boundary row in
-      different partitions, corrupting the offsets.
-    The counts collect materializes both caches; the caller must
-    unpersist the handle once downstream results are materialized."""
-    order_cols = order_cols or PRIORITY_COLS
-    spark = df.sparkSession
-    if n_partitions is None:
-        n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    src = df.persist()
-    ranged = src.repartitionByRange(
-        n_partitions, *[F.col(c) for c in order_cols]
-    )
-    ranged = ranged.withColumn("_pid", F.spark_partition_id()).persist()
-    counts = {r["_pid"]: r["cnt"] for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
+    ``counts``: the rows per bucket, when the frontier's write published
+    them — the offsets are then driver arithmetic and the bucket window
+    rides the caller's next job. Without them one groupBy collect counts
+    the buckets; ``frontier`` is persisted first so that job and the
+    caller's share one computation of it, and the caller unpersists it."""
+    if counts is None:
+        frontier = frontier.persist()
+        counts = {
+            row["seq_bucket"]: row["count"]
+            for row in frontier.groupBy("seq_bucket").count().collect()
+        }
     offsets: dict[int, int] = {}
     acc = start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    total = acc - start
-    handle = _SeqCaches(src, ranged)
+    for b in sorted(counts):
+        if counts[b]:
+            offsets[b] = acc
+            acc += counts[b]
     if not offsets:  # empty input — keep the schema, no rows
-        return ranged.drop("_pid").withColumn(seq_col, F.lit(0).cast("long")), 0, handle
-    mapping = F.create_map(
-        *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-    )
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    out = (
-        ranged.withColumn(
-            seq_col,
-            (mapping[F.col("_pid")] + F.row_number().over(w) - 1).cast("long"),
-        )
-        .drop("_pid")
-    )
-    return out, total, handle
+        return frontier.withColumn("seq", F.lit(0).cast("long")), 0
+    mapping = F.create_map(*[F.lit(x) for b_off in offsets.items() for x in b_off])
+    w = Window.partitionBy("seq_bucket").orderBy(*[F.col(c) for c in PRIORITY_COLS])
+    seq = mapping[F.col("seq_bucket")] + F.row_number().over(w) - 1
+    return frontier.withColumn("seq", seq.cast("long")), acc - start
 
 
 def dedup_within_round(df: DataFrame, key: str = "url_norm") -> DataFrame:

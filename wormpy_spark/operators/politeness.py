@@ -68,25 +68,6 @@ def backoff_debit(fetch_failed_first_attempt: bool) -> float:
     return INITIAL_RETRY_DELAY if fetch_failed_first_attempt else 0.0
 
 
-def schedule_host_batch(
-    seed: int,
-    host: str,
-    start_ix: int,
-    draws_per_row: np.ndarray,
-    debits: np.ndarray,
-) -> tuple[np.ndarray, int]:
-    """Vectorized per-host schedule for one round.
-
-    Returns (per-row simulated delay seconds, next attempt index)."""
-    delays = np.zeros(len(draws_per_row))
-    ix = start_ix
-    for i, (n, debit) in enumerate(zip(draws_per_row, debits)):
-        total = sum(politeness_delay(seed, host, ix + d) for d in range(int(n)))
-        delays[i] = total + debit
-        ix += int(n)
-    return delays, ix
-
-
 SCHEDULE_SCHEMA = (
     "host string, seq long, draws int, debit double, start_ix long, "
     "delay_s double, attempt_ix long"

@@ -209,31 +209,6 @@ APLSH_BANDS = 64
 APLSH_BITS_PER_BAND = 4
 
 
-def add_banded_signatures(
-    emb: DataFrame, dim: int, vec_col: str = "embedding", seed: int = 0xBA17D
-) -> DataFrame:
-    """256-bit hyperplane signature per vector, emitted as 64 4-bit
-    band values (one Arrow pass; bands become JVM join keys)."""
-    n_bits = APLSH_BANDS * APLSH_BITS_PER_BAND
-    rng = np.random.Generator(np.random.PCG64([seed, dim]))
-    planes = rng.standard_normal((n_bits, dim))
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vecs = np.stack(pdf[vec_col].map(lambda v: np.asarray(v, np.float64)))
-            bits = (vecs @ planes.T > 0).astype(np.int64)  # (n, 256)
-            bands = bits.reshape(len(pdf), APLSH_BANDS, APLSH_BITS_PER_BAND)
-            vals = (bands << np.arange(APLSH_BITS_PER_BAND)).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "bands": list(vals.astype(np.int32)),
-                }
-            )
-
-    return emb.mapInPandas(fn, "vec_id long, bands array<int>")
-
-
 def cosine_pairs_lsh(
     emb: DataFrame,
     threshold: float = 0.45,

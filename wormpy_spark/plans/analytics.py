@@ -1153,8 +1153,8 @@ GROUP BY g.doc_id
 # doc id (identical hex in both engines → identical sample on any
 # engine, append-stable within a stratum). ceil(n/10) via integer
 # (n+9) DIV 10 — no floats. One exchange on lang; a production run
-# with few giant strata two-phases the rank (per-partition pre-rank +
-# offset merge) the same way assign_global_seq does for the frontier.
+# with few giant strata splits each into ordered buckets and adds
+# driver-known bucket offsets, as assign_global_seq does for the frontier.
 STRAT_SAMPLE_SPARK = """
 WITH r AS (
   SELECT doc_id, lang,

@@ -6,18 +6,21 @@ seeds, each round's expansions and the resume rebuild all go through:
     candidates (in scope, P4: seeds filtered on the driver, expansions
                 by expand_frontier / the fetch kernel)
              → first-occurrence dedup by priority (J2 equivalence)
-             → host / url_hash / host_shard, derived once (v2 frontier)
+             → host / host_shard, derived once (v2 frontier)
              → ANTI JOIN seen (J1)
              → HEAD-model probe dropping suspicious image/* (P5/P6)
              → [robots filter — north_rule option]
-             → seq_bucket stamp + per-bucket counts (unthrottled only)
+             → seq_bucket: the range bucket of parent_seq over the
+               parents' seq range (every frontier; an unthrottled
+               write also publishes the per-bucket counts)
 
 Each round then pops its frontier as-is (one Catalyst-optimizable batch
 job over the whole frontier):
 
     frontier → [per-host throttle window — deferred rows are re-admitted
                 with the next round's expansions]
-             → global seq on (round, parent_seq, sibling_rank) (O1-O4)
+             → global seq on (round, parent_seq, sibling_rank) (O1-O4):
+               row_number within seq_bucket + bucket offsets
              → budget cut seq < B (P9/O7)
              → GET-model join vs web + one mapInArrow extract pass
              → expansions (J4/O4) → admission → next frontier
@@ -49,9 +52,10 @@ against the golden oracle in tests/test_golden.py):
 
 Scale posture: frontier/seen/pages are parquet snapshots (Iceberg when
 the jar is present — sources.catalog shim), re-read each round, so
-lineage never grows; the global sequence is the range-partition rank
-pattern (no one-task sort), or driver-known bucket offsets when the
-frontier write published its bucket counts; the seen anti-join
+lineage never grows; the global sequence is a per-seq_bucket rank
+plus bucket offsets (no one-task sort), known driver-side when the
+frontier write published its bucket counts and one groupBy collect
+otherwise; the seen anti-join
 broadcasts the seen keys while they are small and shuffles above
 operators.seen.BROADCAST_SEEN_MAX; hosts shard by
 pmod(xxhash64(host), n_host_shards) and AQE splits skewed joins at
@@ -86,6 +90,7 @@ from ..operators.frontier import (
     assign_global_seq,
     dedup_within_round,
     expand_frontier,
+    seq_bucket_col,
 )
 from ..operators.politeness import SCHEDULE_SCHEMA, make_schedule_fn
 from ..operators.robots import RobotsCache, robots_allows_udf
@@ -99,7 +104,11 @@ from .fastround import (
 )
 
 SEEN_SCHEMA = "url_hash long, url_norm string"
-HOST_STATE_SCHEMA = "host string, next_ix long, clock_s double, attempts long"
+
+# max suspicious-image rows collectable for the HEAD-probe skip set;
+# above it admission runs the probe semi-join instead. Read at call
+# time, so a test can set 0 to force the join path.
+PROBE_BROADCAST_MAX = 2_000_000
 
 
 @dataclass
@@ -113,10 +122,6 @@ class CrawlConfig:
     resume: bool = False
     max_rounds: int = 256
     n_host_shards: int = 64
-    # max suspicious-image rows collectable for the probe fast path
-    # (above this admission runs the probe semi-join instead); 0
-    # forces the join path (used by parity tests)
-    probe_broadcast_max: int = 2_000_000
     # production politeness throttle: at most k fetches per host per
     # round; excess rows are DEFERRED to the next round with their
     # priority preserved (not dropped). None = reference semantics
@@ -197,22 +202,21 @@ def prepare_fetch_table(
     # cold scan + driver collect per crawl (~3-5 s on a 500k-row
     # snapshot). On a cluster this is a sidecar of the bucketed-table
     # write. run_crawl falls back to computing it per-crawl for
-    # unprepared inputs, capped by config.probe_broadcast_max.
+    # unprepared inputs, capped by PROBE_BROADCAST_MAX.
     skip_rows = (
         prepared.filter(suspicious_pred(F.col("url_norm")))
         .filter(F.col("content_type").startswith("image/"))
         .select("url_norm")
-        .limit(2_000_001)
+        .limit(PROBE_BROADCAST_MAX + 1)
         .collect()
     )
-    if len(skip_rows) <= 2_000_000:
+    if len(skip_rows) <= PROBE_BROADCAST_MAX:
         # broadcast once here too: re-broadcasting ~100k strings per
         # crawl costs ~0.5 s of driver pickling that every crawl
         # against this snapshot would repay for no reason. The size is
-        # recorded so run_crawl can honor a smaller per-crawl
-        # probe_broadcast_max (round-5 ADVICE: a crawl configured with
-        # a tighter cap must fall back to the semi-join scale path, not
-        # silently get a bigger broadcast than it asked for).
+        # recorded so run_crawl honors a cap lowered after preparation
+        # (a crawl under a tighter cap must fall back to the semi-join
+        # scale path, not silently get a bigger broadcast).
         prepared._wormpy_probe_skip = spark.sparkContext.broadcast(
             frozenset(r["url_norm"] for r in skip_rows)
         )
@@ -257,24 +261,24 @@ def run_crawl(
     prepared_skip_size = getattr(web, "_wormpy_probe_skip_size", None)
     if (
         prepared_skip is not None
-        and config.probe_broadcast_max > 0
+        and PROBE_BROADCAST_MAX > 0
         and (
             prepared_skip_size is None
-            or prepared_skip_size <= config.probe_broadcast_max
+            or prepared_skip_size <= PROBE_BROADCAST_MAX
         )
     ):
         # snapshot-level skip set, computed AND broadcast once by
         # prepare_fetch_table — used only when it fits this crawl's cap
         probe_skip_bc = prepared_skip
-    elif config.probe_broadcast_max > 0:
+    elif PROBE_BROADCAST_MAX > 0:
         susp_rows = (
             probe.filter(suspicious_pred(F.col("url_norm")))
             .filter(F.col("_probe_ct").startswith("image/"))
             .select("url_norm")
-            .limit(config.probe_broadcast_max + 1)
+            .limit(PROBE_BROADCAST_MAX + 1)
             .collect()
         )
-        if len(susp_rows) <= config.probe_broadcast_max:
+        if len(susp_rows) <= PROBE_BROADCAST_MAX:
             probe_skip_bc = spark.sparkContext.broadcast(
                 frozenset(r["url_norm"] for r in susp_rows)
             )
@@ -330,25 +334,21 @@ def run_crawl(
             F.xxhash64("url_norm").alias("url_hash"), "url_norm"
         )
 
-    # loop-invariant expression trees, built once: Column/Window
-    # objects are immutable and reusable, and rebuilding the 32
-    # per-bucket observation metrics plus the bucket window costs a
-    # few hundred py4j round-trips per round otherwise
+    # loop-invariant expression trees, built once: Column objects are
+    # immutable and reusable, and rebuilding the per-bucket observation
+    # metrics costs a few hundred py4j round-trips per round otherwise
     bucket_metrics = [
         F.sum((F.col("seq_bucket") == i).cast("long")).alias(f"b{i}")
         for i in range(n_part)
     ]
-    bucket_window = Window.partitionBy("seq_bucket").orderBy(
-        *[F.col(c) for c in PRIORITY_COLS]
-    )
 
     def _admit(
         cand: DataFrame,
         seen: DataFrame,
         seen_count: int,
         probe_filter: bool,
-        parents: tuple[int, int] | None = None,
-    ) -> tuple[DataFrame, Observation | None]:
+        parents: tuple[int, int],
+    ) -> DataFrame:
         """The one admission every frontier row passes, once, so a round
         pops its frontier as-is (module docstring). ``cand`` is in scope
         (P4) and canonical already.
@@ -357,13 +357,10 @@ def run_crawl(
         fetch kernel already dropped the probe-skip URLs from
         ``discovered_norm`` (expansions under the skip-set fast path).
 
-        ``parents``: the seq range [lo, hi) of the candidates' parents.
-        Without a per-host throttle every candidate then shares
-        round_enqueued, so parent_seq alone orders the frontier: stamp
-        its deterministic range bucket (``seq_bucket``) and return an
-        Observation of the per-bucket counts, which rides the frontier
-        write. The next round knows its seq offsets driver-side and
-        assigns seq inside the fetch job: no standalone action."""
+        ``parents``: the seq range [lo, hi) of the candidates' parents,
+        bucketed into ``seq_bucket`` (operators/frontier.py): seeds and
+        a throttle's deferred rows fall below ``lo`` and clamp to
+        bucket 0, so the buckets follow the whole priority order."""
         # ``url`` is url_norm verbatim past admission: drop the copy
         # BEFORE the dedup exchange (the round's biggest shuffle — with
         # ~300 outlinks/page the raw candidate stream is ~50x its
@@ -371,7 +368,7 @@ def run_crawl(
         f = dedup_within_round(cand.drop("url"))                   # J2
         f = (
             f.withColumn("host", host_udf(F.col("url_norm")))
-            .withColumn("url_hash", F.xxhash64(F.col("url_norm")))
+            .withColumn("url_hash", F.xxhash64(F.col("url_norm")))  # J1 key
             .withColumn(
                 "host_shard",
                 F.pmod(
@@ -396,21 +393,12 @@ def run_crawl(
             )
         if robots_filter is not None:
             f = f.filter(robots_filter(F.col("url_norm")))
-        f = f.select(
+        return f.select(
             F.col("url_norm").alias("url"),
             "round_enqueued", "parent_seq", "sibling_rank",
-            "url_norm", "host", "url_hash", "host_shard",
+            "url_norm", "host", "host_shard",
+            seq_bucket_col(*parents, n_part).alias("seq_bucket"),
         )
-        if parents is None or config.max_per_host_per_round is not None:
-            return f, None
-        lo, hi = parents
-        # integer DIV keeps the bucket map exactly monotone in parent_seq
-        bucket = F.expr(
-            f"CAST(((parent_seq - {lo}L) * {n_part}L) DIV {max(hi - lo, 1)}L AS INT)"
-        )
-        bucket = F.least(F.lit(n_part - 1), F.greatest(F.lit(0), bucket))
-        obs = Observation()
-        return f.withColumn("seq_bucket", bucket).observe(obs, *bucket_metrics), obs
 
     if config.resume and catalog.latest_round() is not None:
         state = catalog.state()
@@ -434,6 +422,7 @@ def run_crawl(
         start_round = state["round"] + 1
         processed = state["processed"]
         sitemap_urls = state.get("sitemap_urls", [])
+        metrics_rows = state.get("metrics_rows", [])
         pending_round = state.get("expansion_pending")
         if pending_round is not None:
             # the final committed round deferred its expansion (its
@@ -442,17 +431,24 @@ def run_crawl(
             # pages snapshot — the same expansion and admission the
             # eager path would have run. Snapshot pages carry no
             # kernel-filtered discovered_norm, so the probe applies.
-            frontier, _ = _admit(
+            frontier = _admit(
                 expand_frontier(
                     catalog.read(spark, "pages"), base,
                     next_round=pending_round + 1,
                 ),
                 seen_from_pages(catalog.rounds()), processed,
                 probe_filter=True,
+                parents=(processed - metrics_rows[-1]["fetched"], processed),
             )
         else:
             frontier = catalog.read(spark, "frontier")
-        metrics_rows = state.get("metrics_rows", [])
+            if "seq_bucket" not in frontier.columns:
+                # written before every frontier carried its seq bucket
+                # (throttled rounds left it out)
+                raise ValueError(
+                    "the checkpoint's frontier has no seq_bucket column; "
+                    "start the crawl afresh"
+                )
         # resume always re-enters on the Spark path (frontier/seen are
         # snapshot-resident); tiny post-resume rounds still work, they
         # just do not take the driver shortcut
@@ -474,10 +470,11 @@ def run_crawl(
                 for i, u in enumerate(sitemap_urls)
             ]
             seed_rows = [row for row in seed_rows if row[4].startswith(base)]
-        # seeds meet an empty seen; a fast round 0 admits them itself
-        frontier, _ = _admit(
+        # seeds meet an empty seen; a fast round 0 admits them itself.
+        # Their parent_seq is -1: any parents range puts them in bucket 0
+        frontier = _admit(
             spark.createDataFrame(seed_rows, FRONTIER_SCHEMA),
-            _empty(spark, SEEN_SCHEMA), 0, probe_filter=True,
+            _empty(spark, SEEN_SCHEMA), 0, probe_filter=True, parents=(0, 1),
         )
         frontier_rows = seed_rows
         seen_set = set()
@@ -489,11 +486,14 @@ def run_crawl(
     # per round; the cache makes it O(delta): cached seen ∪ this
     # round's snapshot)
 
-    # Fused-seq state: the per-bucket counts of the current frontier,
-    # published by its write (``_admit``'s Observation, or fastround's
-    # driver-side counts). None for round 0 on seeds, the first resumed
-    # round and throttled rounds, which pop through assign_global_seq.
-    fused_counts: dict[int, int] | None = None
+    # The per-seq_bucket counts of the current frontier, published by
+    # an unthrottled frontier write (an Observation on the Spark write,
+    # fastround's driver-side counts): with them the round's seq needs
+    # no job of its own. None for round 0 on seeds, the first resumed
+    # round and throttled rounds (the throttle window changes what the
+    # write counted), which assign_global_seq counts itself.
+    counts: dict[int, int] | None = None
+    publish_counts = config.max_per_host_per_round is None
 
     def commit(r: int, tables: dict[str, str], **extra) -> None:
         """Publish round r's snapshots with the resume state."""
@@ -535,25 +535,9 @@ def run_crawl(
             pages_r_path = catalog.table_path("pages", r)
             write_pages_parquet(pages_r_path, fr.pages)
             frontier_path = catalog.table_path("frontier", r)
-            # fused-seq info, driver-side (mirrors _admit's
-            # Observation): fastround admission already applied probe/
-            # robots filters, so bucket counts here let a handover round
-            # take the fused path with zero standalone actions
-            fast_counts: dict[int, int] | None = None
-            seq_buckets = None
-            if config.max_per_host_per_round is None:
-                lo = processed
-                span = max(fr.due_count, 1)
-                seq_buckets = []
-                fast_counts = {}
-                for (_u, _renq, pseq, _srank, _un) in fr.frontier_next:
-                    b = (pseq - lo) * n_part // span
-                    b = 0 if b < 0 else (n_part - 1 if b >= n_part else b)
-                    seq_buckets.append(b)
-                    fast_counts[b] = fast_counts.get(b, 0) + 1
-            write_frontier_parquet(
+            fast_counts = write_frontier_parquet(
                 frontier_path, fr.frontier_next, config.n_host_shards,
-                seq_buckets,
+                (processed, processed + fr.due_count), n_part,
             )
             pages_rounds.append(r)
             processed += fr.due_count
@@ -579,66 +563,37 @@ def run_crawl(
                 frontier_rows = None
                 seen_set = None
                 frontier = spark.read.parquet(frontier_path)
-                fused_counts = fast_counts
+                counts = fast_counts if publish_counts else None
             r += 1
             continue
         frontier_rows = None
         seen_set = None
 
         # the frontier was admitted when it was written (_admit): pop it
-        # as-is. With published bucket counts (fused-seq) the offsets are
-        # driver arithmetic and the bucket-window seq assignment rides
-        # the fetch job itself; otherwise assign_global_seq ranks it.
+        # as-is, through the per-host throttle window if one is set
+        eligible = frontier
         deferred = None
-        seq_cache = None
-        if fused_counts is not None:
-            n_eligible = sum(fused_counts.values())
-            t_seq = time.time()
-            if n_eligible == 0:
-                break
-            offsets: dict[int, int] = {}
-            acc = processed
-            for pid in sorted(fused_counts):
-                if fused_counts[pid]:
-                    offsets[pid] = acc
-                    acc += fused_counts[pid]
-            mapping = F.create_map(
-                *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
+        if config.max_per_host_per_round is not None:
+            hw = Window.partitionBy("host").orderBy(
+                *[F.col(c) for c in PRIORITY_COLS]
             )
-            seqd = frontier.withColumn(
-                "seq",
-                (
-                    mapping[F.col("seq_bucket")]
-                    + F.row_number().over(bucket_window)
-                    - 1
-                ).cast("long"),
+            ranked = eligible.withColumn("_hr", F.row_number().over(hw))
+            deferred = (
+                ranked.filter(F.col("_hr") > config.max_per_host_per_round)
+                .select("url", "round_enqueued", "parent_seq", "sibling_rank",
+                        "url_norm")
             )
-        else:
-            eligible = frontier
-            if config.max_per_host_per_round is not None:
-                hw = Window.partitionBy("host").orderBy(
-                    *[F.col(c) for c in PRIORITY_COLS]
-                )
-                ranked = eligible.withColumn("_hr", F.row_number().over(hw))
-                deferred = (
-                    ranked.filter(F.col("_hr") > config.max_per_host_per_round)
-                    .select("url", "round_enqueued", "parent_seq", "sibling_rank",
-                            "url_norm")
-                )
-                eligible = ranked.filter(
-                    F.col("_hr") <= config.max_per_host_per_round
-                ).drop("_hr")
-            # the seq assignment persists its range-partitioned output;
-            # its count collect materializes the cache, and the fetch
-            # reuses it (see assign_global_seq)
-            sc.setJobDescription(f"crawl r{r}: global seq")
-            seqd, n_eligible, seq_cache = assign_global_seq(
-                eligible, PRIORITY_COLS, start=processed
-            )
-            t_seq = time.time()
-            if n_eligible == 0:
-                seq_cache.unpersist()
-                break
+            eligible = ranked.filter(
+                F.col("_hr") <= config.max_per_host_per_round
+            ).drop("_hr")
+        # with published counts the offsets are driver arithmetic and the
+        # bucket window rides the fetch job; otherwise one count job
+        sc.setJobDescription(f"crawl r{r}: global seq")
+        seqd, n_eligible = assign_global_seq(eligible, processed, counts)
+        t_seq = time.time()
+        if n_eligible == 0:
+            eligible.unpersist()
+            break
         due = seqd.filter(F.col("seq") < budget).withColumn(
             "round", F.lit(r).cast("int")
         )
@@ -646,7 +601,7 @@ def run_crawl(
 
         # only the columns the fetch kernel consumes cross the exchange
         # and the Arrow boundary (mapInPandas ships every input column):
-        # url/priority/url_hash/seq_bucket are dead past this point
+        # url/priority/seq_bucket are dead past this point
         due = due.select("url_norm", "seq", "round", "host", "host_shard")
 
         # GET-model fetch join + one Arrow extraction pass (S4-S7, F1-F3).
@@ -754,34 +709,30 @@ def run_crawl(
             cand = expand_frontier(pages_r, base, next_round=r + 1)
             if deferred is not None:
                 cand = deferred.unionByName(cand)
-            frontier_next, obs_f = _admit(
+            frontier_next = _admit(
                 cand, seen_next, processed_next,
                 probe_filter=probe_skip_bc is None,
                 parents=(processed, processed_next),
             )
+            if publish_counts:
+                obs_f = Observation()
+                frontier_next = frontier_next.observe(obs_f, *bucket_metrics)
             sc.setJobDescription(f"crawl r{r}: expand+admit+frontier-write")
             frontier_path = catalog.write_table("frontier", r, frontier_next)
-            # the writer's schema is known exactly (v2 + seq_bucket iff
-            # the fused-seq observation ran): an explicit schema skips
-            # the per-round footer/schema-inference job
-            frontier_schema = FRONTIER_SCHEMA_V2 + (
-                ", seq_bucket int" if obs_f is not None else ""
-            )
-            frontier = spark.read.schema(frontier_schema).parquet(frontier_path)
+            # the writer's schema is known exactly: an explicit schema
+            # skips the per-round footer/schema-inference job
+            frontier = spark.read.schema(FRONTIER_SCHEMA_V2).parquet(frontier_path)
             # the admission job above materialized seen_next; rotate the
             # incremental cache (unpersisting earlier frees the old
             # blocks the new cache's lineage just read)
             if seen_cache is not None:
                 seen_cache.unpersist()
             seen_cache = seen_next
-        fused_counts = None
+        counts = None
         if obs_f is not None:
             counts_row = obs_f.get  # free: rode the write job
-            fused_counts = {
-                i: int(counts_row[f"b{i}"] or 0) for i in range(n_part)
-            }
-        if seq_cache is not None:
-            seq_cache.unpersist()
+            counts = {i: int(counts_row[f"b{i}"] or 0) for i in range(n_part)}
+        eligible.unpersist()
         pages_r.unpersist()
         t_expand = time.time()
 

@@ -38,7 +38,8 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from collections import Counter
+from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -53,6 +54,7 @@ from ..operators.fetch import (
     PAGES_SCHEMA_EXPAND,
     make_fetch_extract,
 )
+from ..operators.frontier import seq_bucket
 
 PAGES_ARROW_SCHEMA = pa.schema(
     [
@@ -83,8 +85,8 @@ FRONTIER_ARROW_SCHEMA = pa.schema(
         # operators/frontier.py) — python-side xxhash64_str is
         # parity-tested against F.xxhash64
         ("host", pa.string()),
-        ("url_hash", pa.int64()),
         ("host_shard", pa.int32()),
+        ("seq_bucket", pa.int32()),
     ]
 )
 
@@ -103,14 +105,14 @@ def write_pages_parquet(path: str, rows: list[dict]) -> None:
 
 
 def write_frontier_parquet(
-    path: str, rows: list[tuple], n_host_shards: int = 64,
-    seq_buckets: list[int] | None = None,
-) -> None:
+    path: str, rows: list[tuple], n_host_shards: int,
+    parents: tuple[int, int], n_buckets: int,
+) -> dict[int, int]:
     """rows: (url, round_enqueued, parent_seq, sibling_rank, url_norm);
-    the v2 derived columns (host, url_hash, host_shard) are computed
-    here so the Spark loop never re-derives them. ``seq_buckets``
-    (parallel to rows) adds the fused-seq bucket column the Spark
-    loop's fused path consumes (see plans/crawl.py)."""
+    the v2 derived columns (host, host_shard, seq_bucket over the
+    parents' seq range ``parents``) are computed here so the Spark loop
+    never re-derives them. Returns the rows per seq_bucket, as
+    ``_admit``'s write publishes them (plans/crawl.py)."""
     os.makedirs(path, exist_ok=True)
     hosts = [get_domain(r[4]) for r in rows]
     cols: dict[str, list] = {
@@ -119,14 +121,11 @@ def write_frontier_parquet(
         )
     }
     cols["host"] = hosts
-    cols["url_hash"] = [xxhash64_str(r[4]) for r in rows]
     cols["host_shard"] = [pmod(xxhash64_str(h), n_host_shards) for h in hosts]
-    schema = FRONTIER_ARROW_SCHEMA
-    if seq_buckets is not None:
-        cols["seq_bucket"] = seq_buckets
-        schema = schema.append(pa.field("seq_bucket", pa.int32()))
-    table = pa.Table.from_pydict(cols, schema=schema)
+    cols["seq_bucket"] = [seq_bucket(r[2], *parents, n_buckets) for r in rows]
+    table = pa.Table.from_pydict(cols, schema=FRONTIER_ARROW_SCHEMA)
     pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+    return dict(Counter(cols["seq_bucket"]))
 
 
 @dataclass
