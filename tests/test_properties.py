@@ -11,6 +11,8 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 import pytest
 from hypothesis import given, settings
@@ -130,6 +132,59 @@ def test_host_throttle_mode(spark, small_corpus):
     order_capped = [r["url_norm"] for r in capped.order.collect()]
     # deferral preserves relative priority within the single host
     assert order_capped == order_free
+
+
+def _job_descriptions(spark) -> dict[int, str | None]:
+    """Job id → description of every job in the context's status store,
+    which Spark keeps whether or not the UI runs."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    out = {}
+    for job in sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        jsc.statusStore().jobsList(None)
+    ):
+        desc = job.description()
+        out[job.jobId()] = desc.get() if desc.isDefined() else None
+    return out
+
+
+def test_throttled_crawl_runs_no_seq_job(spark, small_corpus):
+    """A throttled frontier publishes its bucket counts like every
+    other frontier, so no round runs a job to count them, and a crawl
+    that drains before its budget stops on the published zero counts
+    without running a job in the round that finds them."""
+    import re
+
+    tables = corpus_to_spark(spark, small_corpus)
+    before = set(_job_descriptions(spark))
+    res = run_crawl(
+        spark, tables["web"],
+        CrawlConfig(base_url="https://host0.test", budget=50, politeness_seed=7,
+                    max_per_host_per_round=3, fast_round_max=0),
+        sitemaps=tables["sitemaps"],
+    )
+    assert res.processed < 50, "the crawl must drain before its budget"
+    labels = [d or "" for j, d in _job_descriptions(spark).items() if j not in before]
+    rounds = [int(m.group(1)) for d in labels if (m := re.match(r"crawl r(\d+)", d))]
+    assert rounds and max(rounds) < res.rounds
+    assert not [d for d in labels if "global seq" in d]
+
+
+def test_crawl_restores_caller_job_description(spark, small_corpus):
+    """The rounds label their jobs; the caller's own label (or none) is
+    back when the crawl returns, so the caller's next jobs, and the next
+    crawl's seeding jobs, do not carry the last round's label."""
+    sc = spark.sparkContext
+    tables = corpus_to_spark(spark, small_corpus)
+    cfg = CrawlConfig(base_url="https://host0.test", budget=5)
+    try:
+        for desc in ("caller label", None):
+            sc.setJobDescription(desc)
+            run_crawl(spark, tables["web"], cfg, sitemaps=tables["sitemaps"])
+            assert sc.getLocalProperty("spark.job.description") == desc
+    finally:
+        sc.setJobDescription(None)
 
 
 def test_shuffle_anti_join_parity(spark, small_corpus, monkeypatch):
@@ -258,11 +313,9 @@ def test_assign_global_seq_matches_sorted_reference(spark):
     round_enqueued values, each with its own disjoint, increasing
     parent_seq range — the shape every frontier has (seq is assigned in
     round order; a throttle's deferred rows sit below the newest
-    parents and clamp to bucket 0). Counting the buckets (counts=None)
-    and passing the true counts give the same seq; an empty input
-    yields no rows."""
+    parents and clamp to bucket 0), given the true bucket counts; an
+    empty input yields no rows."""
     import random
-    from collections import Counter
 
     from wormpy_spark.operators.frontier import (
         FRONTIER_SCHEMA,
@@ -294,16 +347,13 @@ def test_assign_global_seq_matches_sorted_reference(spark):
         (123 + i, row[0])
         for i, row in enumerate(sorted(rows, key=lambda row: row[1:4]))
     ]
-    for counts in (None, dict(true_counts)):
-        out, total = assign_global_seq(df, 123, counts)
-        got = sorted((r["seq"], r["url"]) for r in out.select("seq", "url").collect())
-        assert total == 5000 and got == want
-    df.unpersist()
+    out, total = assign_global_seq(df, 123, dict(true_counts))
+    got = sorted((r["seq"], r["url"]) for r in out.select("seq", "url").collect())
+    assert total == 5000 and got == want
 
     empty = spark.createDataFrame([], FRONTIER_SCHEMA + ", seq_bucket int")
-    out, total = assign_global_seq(empty, 7)
+    out, total = assign_global_seq(empty, 7, {})
     assert total == 0 and out.count() == 0
-    empty.unpersist()
 
 
 # host1 has no sitemap: 1 seed, then throttled frontiers of 3 and 11
@@ -327,18 +377,19 @@ def test_every_frontier_is_admitted_once(spark, small_corpus, tmp_path,
     them in any earlier pages snapshot: the round that pops it applies
     no dedup or seen check of its own. Its parent_seq ranges per
     round_enqueued are disjoint and increasing, so parent_seq buckets
-    order the whole priority triple. An unthrottled frontier write
-    publishes its bucket counts under both probe strategies, so the
-    ranker counts buckets itself for round 0 only; under a throttle it
-    counts them every round."""
+    order the whole priority triple. Under a throttle it holds at most
+    k unmarked rows per host, and none are marked without one. Every
+    frontier publishes its bucket counts — seeds, Spark and fastround
+    writes, under both probe strategies and the throttle — so the
+    ranker always receives them."""
     import wormpy_spark.plans.crawl as crawl_mod
     from wormpy_spark.sources.catalog import SnapshotCatalog
 
-    calls = []  # (start, whether the ranker counted the buckets)
+    calls = []  # (start, the counts the ranker received)
     stock = crawl_mod.assign_global_seq
 
-    def spy(frontier, start, counts=None):
-        calls.append((start, counts is None))
+    def spy(frontier, start, counts):
+        calls.append((start, counts))
         return stock(frontier, start, counts)
 
     monkeypatch.setattr(crawl_mod, "assign_global_seq", spy)
@@ -375,19 +426,28 @@ def test_every_frontier_is_admitted_once(spark, small_corpus, tmp_path,
         assert all(
             max(a) < min(b) for a, b in zip(ordered, ordered[1:])
         ), f"round {rec['round']}: parent_seq ranges overlap"
+        k = ADMISSION_SHAPES[shape].get("max_per_host_per_round")
+        if k is None:
+            assert not any(row["deferred"] for row in rows)
+        else:
+            unmarked = Counter(row["host"] for row in rows if not row["deferred"])
+            assert all(n <= k for n in unmarked.values()), (
+                f"round {rec['round']}: more than {k} unmarked rows per host"
+            )
     assert n_frontiers > 1
 
-    if shape in ("spark", "probe-join"):
-        assert [start for start, counted in calls if counted] == [0]
+    assert all(counts is not None for _, counts in calls)
     if shape == "throttled":
-        assert len(calls) == res.rounds and all(c for _, c in calls)
+        assert len(calls) == res.rounds
 
 
 def test_resume_refuses_unadmitted_checkpoint(spark, small_corpus, tmp_path):
     """A checkpoint whose state lacks ``frontier_admitted`` was written
-    by an engine that filtered at pop time, and one whose frontier lacks
-    ``seq_bucket`` by an engine that left it out of throttled frontiers:
-    resuming either is refused."""
+    by an engine that filtered at pop time, one whose frontier lacks
+    ``seq_bucket`` by an engine that left it out of throttled frontiers,
+    and one whose frontier lacks the ``deferred`` mark or whose state
+    lacks ``frontier_counts`` by an engine that throttled at pop time:
+    resuming any of them is refused."""
     import glob
     import json
     import os
@@ -413,13 +473,25 @@ def test_resume_refuses_unadmitted_checkpoint(spark, small_corpus, tmp_path):
     manifest["state"]["frontier_admitted"] = True
     with open(catalog._manifest_path(), "w") as f:
         json.dump(manifest, f)
-    parts = glob.glob(os.path.join(manifest["tables"]["frontier"], "*.parquet"))
-    assert parts
-    for part in parts:
-        pq.write_table(pq.read_table(part).drop(["seq_bucket"]), part)
-    with pytest.raises(ValueError, match="seq_bucket"):
+    counts = manifest["state"].pop("frontier_counts")
+    with open(catalog._manifest_path(), "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="frontier_counts"):
         run_crawl(spark, tables["web"], CrawlConfig(**cfg, resume=True),
                   sitemaps=tables["sitemaps"])
+
+    manifest["state"]["frontier_counts"] = counts
+    with open(catalog._manifest_path(), "w") as f:
+        json.dump(manifest, f)
+    parts = glob.glob(os.path.join(manifest["tables"]["frontier"], "*.parquet"))
+    assert parts
+    originals = {part: pq.read_table(part) for part in parts}
+    for column in ("seq_bucket", "deferred"):
+        for part, table in originals.items():
+            pq.write_table(table.drop([column]), part)
+        with pytest.raises(ValueError, match=column):
+            run_crawl(spark, tables["web"], CrawlConfig(**cfg, resume=True),
+                      sitemaps=tables["sitemaps"])
 
 
 def test_prepared_compressed_web_parity(spark, small_corpus):

@@ -19,8 +19,10 @@ order and seeds have parent_seq = -1, so every row of a later
 round_enqueued has a larger parent_seq than every row of an earlier
 one: range buckets of parent_seq (``seq_bucket``, stamped when the
 frontier is admitted) are monotone in the whole priority triple. Seq
-is then a per-bucket row_number plus driver-known bucket offsets — no
-driver collect of rows, no one-task sort at 10^10 scale.
+is then a per-bucket row_number plus bucket offsets from the counts
+every frontier publishes when it is written (over its rows not marked
+``deferred`` by a per-host throttle) — no job of its own, no driver
+collect of rows, no one-task sort at 10^10 scale.
 """
 
 from __future__ import annotations
@@ -49,9 +51,11 @@ FRONTIER_SCHEMA = (
 # biggest row stream) and host_shard are computed exactly once, at
 # admission (plans/crawl.py ``_admit``, fastround's pyarrow writer),
 # with seq_bucket, the parent_seq range bucket the round's seq ranks
-# by. Every frontier the crawl writes is v2; only seeds are built as v1
-# rows, and they pass admission before any round reads them.
-FRONTIER_SCHEMA_V2 = FRONTIER_SCHEMA + ", host string, host_shard int, seq_bucket int"
+# by, and deferred, the per-host throttle's mark (false on every row
+# without a throttle). Every frontier the crawl writes is v2; only seeds
+# are built as v1 rows, and they pass admission before any round reads
+# them.
+FRONTIER_SCHEMA_V2 = FRONTIER_SCHEMA + ", host string, host_shard int, seq_bucket int, deferred boolean"
 
 
 def seq_bucket(parent_seq: int, lo: int, hi: int, n_buckets: int) -> int:
@@ -72,23 +76,15 @@ def seq_bucket_col(lo: int, hi: int, n_buckets: int) -> Column:
 
 
 def assign_global_seq(
-    frontier: DataFrame, start: int, counts: dict[int, int] | None = None
+    frontier: DataFrame, start: int, counts: dict[int, int]
 ) -> tuple[DataFrame, int]:
     """Dense global sequence in priority order, offset by ``start``, over
     a frontier stamped with ``seq_bucket``. Returns (frontier_with_seq,
     row_count).
 
-    ``counts``: the rows per bucket, when the frontier's write published
-    them — the offsets are then driver arithmetic and the bucket window
-    rides the caller's next job. Without them one groupBy collect counts
-    the buckets; ``frontier`` is persisted first so that job and the
-    caller's share one computation of it, and the caller unpersists it."""
-    if counts is None:
-        frontier = frontier.persist()
-        counts = {
-            row["seq_bucket"]: row["count"]
-            for row in frontier.groupBy("seq_bucket").count().collect()
-        }
+    ``counts``: the rows per bucket, as the frontier's write published
+    them — the offsets are driver arithmetic and the bucket window
+    rides the caller's next job."""
     offsets: dict[int, int] = {}
     acc = start
     for b in sorted(counts):

@@ -11,16 +11,20 @@ seeds, each round's expansions and the resume rebuild all go through:
              → HEAD-model probe dropping suspicious image/* (P5/P6)
              → [robots filter — north_rule option]
              → seq_bucket: the range bucket of parent_seq over the
-               parents' seq range (every frontier; an unthrottled
-               write also publishes the per-bucket counts)
+               parents' seq range
+             → deferred: the per-host throttle's mark on rows past a
+               host's first k in priority order (false without one)
+             → write, publishing the unmarked rows' per-bucket counts
+               (also kept in the manifest state for resume)
 
 Each round then pops its frontier as-is (one Catalyst-optimizable batch
 job over the whole frontier):
 
-    frontier → [per-host throttle window — deferred rows are re-admitted
-                with the next round's expansions]
+    frontier → unmarked rows (the marked ones are re-admitted with the
+               next round's expansions)
              → global seq on (round, parent_seq, sibling_rank) (O1-O4):
-               row_number within seq_bucket + bucket offsets
+               row_number within seq_bucket + offsets from the
+               published counts (no job of its own)
              → budget cut seq < B (P9/O7)
              → GET-model join vs web + one mapInArrow extract pass
              → expansions (J4/O4) → admission → next frontier
@@ -53,9 +57,8 @@ against the golden oracle in tests/test_golden.py):
 Scale posture: frontier/seen/pages are parquet snapshots (Iceberg when
 the jar is present — sources.catalog shim), re-read each round, so
 lineage never grows; the global sequence is a per-seq_bucket rank
-plus bucket offsets (no one-task sort), known driver-side when the
-frontier write published its bucket counts and one groupBy collect
-otherwise; the seen anti-join
+plus bucket offsets (no one-task sort), driver arithmetic over the
+counts every frontier write publishes; the seen anti-join
 broadcasts the seen keys while they are small and shuffles above
 operators.seen.BROADCAST_SEEN_MAX; hosts shard by
 pmod(xxhash64(host), n_host_shards) and AQE splits skewed joins at
@@ -66,6 +69,7 @@ from __future__ import annotations
 
 import tempfile
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -123,8 +127,9 @@ class CrawlConfig:
     max_rounds: int = 256
     n_host_shards: int = 64
     # production politeness throttle: at most k fetches per host per
-    # round; excess rows are DEFERRED to the next round with their
-    # priority preserved (not dropped). None = reference semantics
+    # round; admission marks the excess rows ``deferred`` and they wait
+    # for the next round with their priority preserved (not dropped),
+    # re-admitted with its expansions. None = reference semantics
     # (golden runs) — the reference rate-limits wall-clock, never
     # reorders, so the throttle is opt-in (SURVEY.md §2.7-T1).
     max_per_host_per_round: int | None = None
@@ -312,35 +317,32 @@ def run_crawl(
     sitemap_urls: list[str] = []
     metrics_rows: list[dict] = []
 
-    def read_pages_snaps(paths: list[str]) -> DataFrame:
-        """Snapshot read with the known PAGES_SCHEMA — skips the
-        per-call footer/schema-inference job. Resumed crawls keep
-        inference: an old checkpoint may predate newer columns and the
-        explicit schema would null them instead of triggering the
-        documented backfill paths."""
-        if config.resume:
-            return spark.read.parquet(*paths)
-        return spark.read.schema(PAGES_SCHEMA).parquet(*paths)
-
     def seen_from_pages(rounds_list: list[int]) -> DataFrame:
         """The seen set IS the processed pages' keys (J3): read them
         column-pruned from the per-round pages snapshots instead of
         rewriting an ever-growing seen table every round (O(total)
-        write per round → O(delta))."""
+        write per round → O(delta)); the known schema skips the
+        footer/schema-inference job."""
         if not rounds_list:
             return _empty(spark, SEEN_SCHEMA)
         paths = [f"{catalog.root}/pages/snap-{rr:06d}" for rr in sorted(set(rounds_list))]
-        return read_pages_snaps(paths).select(
+        return spark.read.schema(PAGES_SCHEMA).parquet(*paths).select(
             F.xxhash64("url_norm").alias("url_hash"), "url_norm"
         )
 
     # loop-invariant expression trees, built once: Column objects are
     # immutable and reusable, and rebuilding the per-bucket observation
-    # metrics costs a few hundred py4j round-trips per round otherwise
+    # metrics costs a few hundred py4j round-trips per round otherwise.
+    # They count the rows a round pops: the unmarked ones
     bucket_metrics = [
-        F.sum((F.col("seq_bucket") == i).cast("long")).alias(f"b{i}")
+        F.sum(((F.col("seq_bucket") == i) & ~F.col("deferred")).cast("long"))
+        .alias(f"b{i}")
         for i in range(n_part)
     ]
+    defer_mark = F.lit(False) if config.max_per_host_per_round is None else (
+        F.row_number().over(Window.partitionBy("host").orderBy(*PRIORITY_COLS))
+        > config.max_per_host_per_round
+    )
 
     def _admit(
         cand: DataFrame,
@@ -360,7 +362,9 @@ def run_crawl(
         ``parents``: the seq range [lo, hi) of the candidates' parents,
         bucketed into ``seq_bucket`` (operators/frontier.py): seeds and
         a throttle's deferred rows fall below ``lo`` and clamp to
-        bucket 0, so the buckets follow the whole priority order."""
+        bucket 0, so the buckets follow the whole priority order.
+        ``deferred`` marks the rows past a host's first k in priority
+        order: the rows a pop-time window over this frontier would defer."""
         # ``url`` is url_norm verbatim past admission: drop the copy
         # BEFORE the dedup exchange (the round's biggest shuffle — with
         # ~300 outlinks/page the raw candidate stream is ~50x its
@@ -398,7 +402,32 @@ def run_crawl(
             "round_enqueued", "parent_seq", "sibling_rank",
             "url_norm", "host", "host_shard",
             seq_bucket_col(*parents, n_part).alias("seq_bucket"),
+            defer_mark.alias("deferred"),
         )
+
+    def write_frontier(r: int, frontier: DataFrame) -> tuple[DataFrame, str, dict[int, int]]:
+        """Write round r's admitted frontier. Returns it re-read with its
+        known schema, its path, and its unmarked rows per seq_bucket,
+        observed by the write job itself."""
+        obs = Observation()
+        path = catalog.write_table("frontier", r, frontier.observe(obs, *bucket_metrics))
+        counts_row = obs.get
+        counts = {i: int(counts_row[f"b{i}"] or 0) for i in range(n_part)}
+        return spark.read.schema(FRONTIER_SCHEMA_V2).parquet(path), path, counts
+
+    def fast_round(rows: list[tuple] | None) -> bool:
+        """Whether a round over ``rows`` runs on the driver fast path."""
+        return (
+            rows is not None
+            and config.fast_round_max > 0
+            and probe_skip_bc is not None
+            and len(rows) <= config.fast_round_max
+        )
+
+    # the current frontier's unmarked rows per seq_bucket, published by
+    # the write that made it: the round's seq runs no job of its own
+    counts: dict[int, int] = {}
+    frontier: DataFrame | None = None
 
     if config.resume and catalog.latest_round() is not None:
         state = catalog.state()
@@ -424,14 +453,27 @@ def run_crawl(
         sitemap_urls = state.get("sitemap_urls", [])
         metrics_rows = state.get("metrics_rows", [])
         pending_round = state.get("expansion_pending")
-        if pending_round is not None:
+        if pending_round is None:
+            frontier = catalog.read(spark, "frontier")
+            # older writers left seq_bucket out of throttled frontiers,
+            # and throttled at pop time without publishing counts
+            missing = [c for c in ("seq_bucket", "deferred") if c not in frontier.columns]
+            if "frontier_counts" not in state:
+                missing.append("frontier_counts")
+            if missing:
+                raise ValueError(
+                    f"the checkpoint lacks {', '.join(missing)}; start the crawl afresh"
+                )
+            # JSON keys are strings
+            counts = {int(b): n for b, n in state["frontier_counts"].items()}
+        elif processed < budget:
             # the final committed round deferred its expansion (its
-            # frontier would only ever be read by a resume like this
-            # one): rebuild it deterministically from the committed
-            # pages snapshot — the same expansion and admission the
-            # eager path would have run. Snapshot pages carry no
+            # frontier is read only by a resume like this one, with
+            # budget left): rebuild it deterministically from the committed
+            # pages snapshot — the same expansion, admission and write
+            # the eager path would have run. Snapshot pages carry no
             # kernel-filtered discovered_norm, so the probe applies.
-            frontier = _admit(
+            frontier, _, counts = write_frontier(pending_round, _admit(
                 expand_frontier(
                     catalog.read(spark, "pages"), base,
                     next_round=pending_round + 1,
@@ -439,16 +481,7 @@ def run_crawl(
                 seen_from_pages(catalog.rounds()), processed,
                 probe_filter=True,
                 parents=(processed - metrics_rows[-1]["fetched"], processed),
-            )
-        else:
-            frontier = catalog.read(spark, "frontier")
-            if "seq_bucket" not in frontier.columns:
-                # written before every frontier carried its seq bucket
-                # (throttled rounds left it out)
-                raise ValueError(
-                    "the checkpoint's frontier has no seq_bucket column; "
-                    "start the crawl afresh"
-                )
+            ))
         # resume always re-enters on the Spark path (frontier/seen are
         # snapshot-resident); tiny post-resume rounds still work, they
         # just do not take the driver shortcut
@@ -470,14 +503,18 @@ def run_crawl(
                 for i, u in enumerate(sitemap_urls)
             ]
             seed_rows = [row for row in seed_rows if row[4].startswith(base)]
-        # seeds meet an empty seen; a fast round 0 admits them itself.
-        # Their parent_seq is -1: any parents range puts them in bucket 0
-        frontier = _admit(
-            spark.createDataFrame(seed_rows, FRONTIER_SCHEMA),
-            _empty(spark, SEEN_SCHEMA), 0, probe_filter=True, parents=(0, 1),
-        )
         frontier_rows = seed_rows
         seen_set = set()
+        if not fast_round(seed_rows):
+            # a fast round 0 admits the seeds itself; here they meet an
+            # empty seen, parent_seq -1 puts them in bucket 0 for any
+            # parents range, and the driver counts the handful it collects
+            seed_frontier = _admit(
+                spark.createDataFrame(seed_rows, FRONTIER_SCHEMA),
+                _empty(spark, SEEN_SCHEMA), 0, probe_filter=True, parents=(0, 1),
+            ).collect()
+            counts = Counter(row["seq_bucket"] for row in seed_frontier if not row["deferred"])
+            frontier = spark.createDataFrame(seed_frontier, FRONTIER_SCHEMA_V2)
 
     pages_rounds: list[int] = catalog.rounds() if config.resume else []
     seen_cache = None  # persisted incremental seen set (guide §2.4: the
@@ -485,15 +522,6 @@ def run_crawl(
     # snapshot every round — an O(total-seen) parquet re-read + re-hash
     # per round; the cache makes it O(delta): cached seen ∪ this
     # round's snapshot)
-
-    # The per-seq_bucket counts of the current frontier, published by
-    # an unthrottled frontier write (an Observation on the Spark write,
-    # fastround's driver-side counts): with them the round's seq needs
-    # no job of its own. None for round 0 on seeds, the first resumed
-    # round and throttled rounds (the throttle window changes what the
-    # write counted), which assign_global_seq counts itself.
-    counts: dict[int, int] | None = None
-    publish_counts = config.max_per_host_per_round is None
 
     def commit(r: int, tables: dict[str, str], **extra) -> None:
         """Publish round r's snapshots with the resume state."""
@@ -510,253 +538,228 @@ def run_crawl(
         })
 
     sc = spark.sparkContext
+    # the rounds label their jobs; the caller's next jobs keep its own
+    caller_desc = sc.getLocalProperty("spark.job.description")
     r = start_round
-    while r < config.max_rounds and processed < budget:
-        t0 = time.time()
-        sc.setJobDescription(f"crawl r{r}")
+    try:
+        while r < config.max_rounds and processed < budget:
+            t0 = time.time()
+            sc.setJobDescription(f"crawl r{r}")
 
-        # ---- driver fast path: whole tiny round in Python, one Spark
-        # job (the web key lookup) — see plans/fastround.py ----
-        if (
-            frontier_rows is not None
-            and seen_set is not None
-            and config.fast_round_max > 0
-            and probe_skip_bc is not None
-            and len(frontier_rows) <= config.fast_round_max
-        ):
-            sc.setJobDescription(f"crawl r{r}: fast round")
-            fr = run_fast_round(
-                r, frontier_rows, seen_set, processed, budget, base,
-                config, web_fetch, probe_skip_bc.value, robots_cache_obj,
-                probe_skip_bc=probe_skip_bc,
-            )
-            if fr.n_eligible == 0:
+            # ---- driver fast path: whole tiny round in Python, one Spark
+            # job (the web key lookup) — see plans/fastround.py ----
+            if fast_round(frontier_rows):
+                sc.setJobDescription(f"crawl r{r}: fast round")
+                fr = run_fast_round(
+                    r, frontier_rows, seen_set, processed, budget, base,
+                    config, web_fetch, probe_skip_bc.value, robots_cache_obj,
+                    probe_skip_bc=probe_skip_bc,
+                )
+                if fr.n_eligible == 0:
+                    break
+                pages_r_path = catalog.table_path("pages", r)
+                write_pages_parquet(pages_r_path, fr.pages)
+                frontier_path = catalog.table_path("frontier", r)
+                counts = write_frontier_parquet(
+                    frontier_path, fr.frontier_next, config.n_host_shards,
+                    (processed, processed + fr.due_count), n_part,
+                    config.max_per_host_per_round,
+                )
+                pages_rounds.append(r)
+                processed += fr.due_count
+                metrics_rows.append(
+                    {
+                        "round": r,
+                        "frontier_size": fr.n_eligible,
+                        "fetched": fr.due_count,
+                        "errors": fr.n_errors,
+                        "processed_total": processed,
+                        "wall_s": time.time() - t0,
+                        "seq_s": fr.seq_s,
+                        "fetch_s": fr.fetch_s,
+                        "expand_s": fr.expand_s,
+                    }
+                )
+                commit(r, {"pages": pages_r_path, "frontier": frontier_path},
+                       frontier_counts=counts)
+                if len(fr.frontier_next) <= config.fast_round_max:
+                    frontier_rows = fr.frontier_next
+                else:
+                    # hand over to the Spark path: frontier + seen continue
+                    # from the snapshots just written
+                    frontier_rows = None
+                    seen_set = None
+                    frontier = spark.read.parquet(frontier_path)
+                r += 1
+                continue
+            frontier_rows = None
+            seen_set = None
+
+            # admitted and marked when written (_admit): pop the unmarked
+            # rows as-is; the marked ones join the next admission's candidates
+            eligible = frontier.filter(~F.col("deferred"))
+            deferred = None
+            if config.max_per_host_per_round is not None:
+                deferred = frontier.filter(F.col("deferred")).select(
+                    "url", "round_enqueued", "parent_seq", "sibling_rank", "url_norm"
+                )
+            seqd, n_eligible = assign_global_seq(eligible, processed, counts)
+            t_seq = time.time()
+            if n_eligible == 0:
                 break
-            pages_r_path = catalog.table_path("pages", r)
-            write_pages_parquet(pages_r_path, fr.pages)
-            frontier_path = catalog.table_path("frontier", r)
-            fast_counts = write_frontier_parquet(
-                frontier_path, fr.frontier_next, config.n_host_shards,
-                (processed, processed + fr.due_count), n_part,
+            due = seqd.filter(F.col("seq") < budget).withColumn(
+                "round", F.lit(r).cast("int")
             )
+            due_count = min(n_eligible, budget - processed)
+
+            # only the columns the fetch kernel consumes cross the exchange
+            # and the Arrow boundary (mapInPandas ships every input column):
+            # url/priority/seq_bucket are dead past this point
+            due = due.select("url_norm", "seq", "round", "host", "host_shard")
+
+            # GET-model fetch join + one Arrow extraction pass (S4-S7, F1-F3).
+            # Strategy by round size:
+            # - small rounds: broadcast-semi prune — broadcast the due KEYS
+            #   (tiny) to filter the cached web partitions, so page bodies
+            #   are never broadcast for rows not fetched this round (the
+            #   runtime-filter pattern; at cluster scale a bloom pushdown
+            #   into the bucketed web scan plays this role);
+            # - big rounds: co-partitioned hash join against the persisted
+            #   web cache — only the due keys are exchanged, the cached
+            #   body partitions stream in place.
+            if due_count <= 50_000:
+                web_small = web_fetch.join(
+                    F.broadcast(due.select("url_norm")), on="url_norm", how="left_semi"
+                )
+                joined = due.join(web_small, on="url_norm", how="left")
+            else:
+                # hint on the DUE side => ShuffledHashJoin BuildLeft: the
+                # hash relation is built from this round's (small) due keys
+                # and the persisted web partitions STREAM through the probe.
+                # The previous hint on the web side made the WEB the build
+                # side (LeftOuter defaults to BuildRight) — a multi-GB hash
+                # relation of page bodies rebuilt per round, with the GC to
+                # match (guide §3.1: check the build side in the plan).
+                joined = due.hint("shuffle_hash").join(web_fetch, on="url_norm", how="left")
+            obs = Observation(f"round_{r}")
+            # scope_base: the kernel also emits the pre-canonicalized
+            # expansion column (discovered_norm) so the expansion below is
+            # a shuffle-free posexplode — see operators/fetch.py
+            pages_out = joined.mapInArrow(
+                make_fetch_extract(
+                    config.discovery, scope_base=base,
+                    probe_skip_bc=probe_skip_bc,
+                ),
+                PAGES_SCHEMA_EXPAND,
+            ).observe(obs, F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"))
+            # persist BEFORE the (synchronous) snapshot write: the write job
+            # materializes the cache, and the expansion below reads the
+            # CACHED pages instead of re-reading the snapshot files —
+            # removes the per-round read-back listing job + re-scan.
+            # (An async write overlapping the expansion was tried and
+            # REVERTED: both jobs race to materialize the same cache, and
+            # the loser's tasks occupy task slots blocked on per-partition
+            # cache locks, starving the winner — measured net-slower at
+            # every parallelism level.)
+            pages_r = pages_out.persist()
+            # snapshots keep the exact PAGES_SCHEMA contract (sinks, resume,
+            # fastround parity): the expansion column lives only in the
+            # cached frame the expansion below consumes
+            sc.setJobDescription(f"crawl r{r}: fetch+extract+pages-write")
+            pages_r_path = catalog.write_table(
+                "pages", r, pages_r.drop("discovered_norm")
+            )
+            n_errors = int(obs.get["errors"] or 0)  # free: rides the write job
+            t_fetch = time.time()
+
+            # seen += processed rows (J3; error rows included, R2/R3) —
+            # derived from the pages snapshots, no separate table write.
+            # Incremental: cached seen-so-far ∪ THIS round's snapshot only;
+            # reading the delta from the just-written snapshot (not the
+            # pages cache) keeps the lineage rooted in parquet, so a cache
+            # eviction can never re-trigger the fetch kernel.
             pages_rounds.append(r)
-            processed += fr.due_count
+            delta = spark.read.schema(PAGES_SCHEMA).parquet(pages_r_path).select(
+                F.xxhash64("url_norm").alias("url_hash"), "url_norm"
+            )
+            if seen_cache is not None:
+                seen_next = seen_cache.unionByName(delta)
+            elif len(pages_rounds) > 1:
+                # first Spark round after fastround/resume: fold the earlier
+                # snapshots in once; every later round unions only its delta
+                seen_next = seen_from_pages(
+                    [rr for rr in pages_rounds if rr != r]
+                ).unionByName(delta)
+            else:
+                seen_next = delta
+            processed_next = processed + due_count
+            # After the crawl's LAST round (budget exhausted or max_rounds
+            # reached) the expansion would build a frontier no round ever
+            # consumes. Defer it: commit the pages snapshot with an
+            # expansion_pending flag; a resume rebuilds the frontier
+            # deterministically from that snapshot (same expansion, same
+            # admission), so resumability is unchanged while every
+            # non-resumed crawl saves a full expansion's work. Per-host
+            # deferred rows exist only in the next frontier and cannot be
+            # rebuilt from pages, so a max_rounds stop that has them still
+            # writes it.
+            final_round = processed_next >= budget or (
+                r + 1 >= config.max_rounds and deferred is None
+            )
+            if not final_round:
+                # materialized by the admission job below; the previous
+                # cache is released after the frontier write
+                seen_next = seen_next.persist()
+
+            # expansions → next frontier (J4/O4 → _admit). Under the
+            # throttle the deferred rows join the candidates BEFORE the
+            # dedup: they keep their original (earlier) priority, so the
+            # frontier stays globally first-wins
+            if final_round:
+                frontier_path = None
+            else:
+                cand = expand_frontier(pages_r, base, next_round=r + 1)
+                if deferred is not None:
+                    cand = deferred.unionByName(cand)
+                sc.setJobDescription(f"crawl r{r}: expand+admit+frontier-write")
+                frontier, frontier_path, counts = write_frontier(r, _admit(
+                    cand, seen_next, processed_next,
+                    probe_filter=probe_skip_bc is None,
+                    parents=(processed, processed_next),
+                ))
+                # the admission job above materialized seen_next; rotate the
+                # incremental cache (unpersisting earlier frees the old
+                # blocks the new cache's lineage just read)
+                if seen_cache is not None:
+                    seen_cache.unpersist()
+                seen_cache = seen_next
+            pages_r.unpersist()
+            t_expand = time.time()
+
+            processed = processed_next
             metrics_rows.append(
                 {
                     "round": r,
-                    "frontier_size": fr.n_eligible,
-                    "fetched": fr.due_count,
-                    "errors": fr.n_errors,
+                    "frontier_size": n_eligible,
+                    "fetched": due_count,
+                    "errors": n_errors,
                     "processed_total": processed,
                     "wall_s": time.time() - t0,
-                    "seq_s": fr.seq_s,
-                    "fetch_s": fr.fetch_s,
-                    "expand_s": fr.expand_s,
+                    # phase walls (driver-observed job boundaries)
+                    "seq_s": round(t_seq - t0, 2),
+                    "fetch_s": round(t_fetch - t_seq, 2),
+                    "expand_s": round(t_expand - t_fetch, 2),
                 }
             )
-            commit(r, {"pages": pages_r_path, "frontier": frontier_path})
-            if len(fr.frontier_next) <= config.fast_round_max:
-                frontier_rows = fr.frontier_next
+            if frontier_path is None:
+                commit(r, {"pages": pages_r_path}, expansion_pending=r)
             else:
-                # hand over to the Spark path: frontier + seen continue
-                # from the snapshots just written
-                frontier_rows = None
-                seen_set = None
-                frontier = spark.read.parquet(frontier_path)
-                counts = fast_counts if publish_counts else None
+                commit(r, {"pages": pages_r_path, "frontier": frontier_path},
+                       frontier_counts=counts)
+
             r += 1
-            continue
-        frontier_rows = None
-        seen_set = None
-
-        # the frontier was admitted when it was written (_admit): pop it
-        # as-is, through the per-host throttle window if one is set
-        eligible = frontier
-        deferred = None
-        if config.max_per_host_per_round is not None:
-            hw = Window.partitionBy("host").orderBy(
-                *[F.col(c) for c in PRIORITY_COLS]
-            )
-            ranked = eligible.withColumn("_hr", F.row_number().over(hw))
-            deferred = (
-                ranked.filter(F.col("_hr") > config.max_per_host_per_round)
-                .select("url", "round_enqueued", "parent_seq", "sibling_rank",
-                        "url_norm")
-            )
-            eligible = ranked.filter(
-                F.col("_hr") <= config.max_per_host_per_round
-            ).drop("_hr")
-        # with published counts the offsets are driver arithmetic and the
-        # bucket window rides the fetch job; otherwise one count job
-        sc.setJobDescription(f"crawl r{r}: global seq")
-        seqd, n_eligible = assign_global_seq(eligible, processed, counts)
-        t_seq = time.time()
-        if n_eligible == 0:
-            eligible.unpersist()
-            break
-        due = seqd.filter(F.col("seq") < budget).withColumn(
-            "round", F.lit(r).cast("int")
-        )
-        due_count = min(n_eligible, budget - processed)
-
-        # only the columns the fetch kernel consumes cross the exchange
-        # and the Arrow boundary (mapInPandas ships every input column):
-        # url/priority/seq_bucket are dead past this point
-        due = due.select("url_norm", "seq", "round", "host", "host_shard")
-
-        # GET-model fetch join + one Arrow extraction pass (S4-S7, F1-F3).
-        # Strategy by round size:
-        # - small rounds: broadcast-semi prune — broadcast the due KEYS
-        #   (tiny) to filter the cached web partitions, so page bodies
-        #   are never broadcast for rows not fetched this round (the
-        #   runtime-filter pattern; at cluster scale a bloom pushdown
-        #   into the bucketed web scan plays this role);
-        # - big rounds: co-partitioned hash join against the persisted
-        #   web cache — only the due keys are exchanged, the cached
-        #   body partitions stream in place.
-        if due_count <= 50_000:
-            web_small = web_fetch.join(
-                F.broadcast(due.select("url_norm")), on="url_norm", how="left_semi"
-            )
-            joined = due.join(web_small, on="url_norm", how="left")
-        else:
-            # hint on the DUE side => ShuffledHashJoin BuildLeft: the
-            # hash relation is built from this round's (small) due keys
-            # and the persisted web partitions STREAM through the probe.
-            # The previous hint on the web side made the WEB the build
-            # side (LeftOuter defaults to BuildRight) — a multi-GB hash
-            # relation of page bodies rebuilt per round, with the GC to
-            # match (guide §3.1: check the build side in the plan).
-            joined = due.hint("shuffle_hash").join(web_fetch, on="url_norm", how="left")
-        obs = Observation(f"round_{r}")
-        # scope_base: the kernel also emits the pre-canonicalized
-        # expansion column (discovered_norm) so the expansion below is
-        # a shuffle-free posexplode — see operators/fetch.py
-        pages_out = joined.mapInArrow(
-            make_fetch_extract(
-                config.discovery, scope_base=base,
-                probe_skip_bc=probe_skip_bc,
-            ),
-            PAGES_SCHEMA_EXPAND,
-        ).observe(obs, F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"))
-        # persist BEFORE the (synchronous) snapshot write: the write job
-        # materializes the cache, and the expansion below reads the
-        # CACHED pages instead of re-reading the snapshot files —
-        # removes the per-round read-back listing job + re-scan.
-        # (An async write overlapping the expansion was tried and
-        # REVERTED: both jobs race to materialize the same cache, and
-        # the loser's tasks occupy task slots blocked on per-partition
-        # cache locks, starving the winner — measured net-slower at
-        # every parallelism level.)
-        pages_r = pages_out.persist()
-        # snapshots keep the exact PAGES_SCHEMA contract (sinks, resume,
-        # fastround parity): the expansion column lives only in the
-        # cached frame the expansion below consumes
-        sc.setJobDescription(f"crawl r{r}: fetch+extract+pages-write")
-        pages_r_path = catalog.write_table(
-            "pages", r, pages_r.drop("discovered_norm")
-        )
-        n_errors = int(obs.get["errors"] or 0)  # free: rides the write job
-        t_fetch = time.time()
-
-        # seen += processed rows (J3; error rows included, R2/R3) —
-        # derived from the pages snapshots, no separate table write.
-        # Incremental: cached seen-so-far ∪ THIS round's snapshot only;
-        # reading the delta from the just-written snapshot (not the
-        # pages cache) keeps the lineage rooted in parquet, so a cache
-        # eviction can never re-trigger the fetch kernel.
-        pages_rounds.append(r)
-        delta = spark.read.schema(PAGES_SCHEMA).parquet(pages_r_path).select(
-            F.xxhash64("url_norm").alias("url_hash"), "url_norm"
-        )
-        if seen_cache is not None:
-            seen_next = seen_cache.unionByName(delta)
-        elif len(pages_rounds) > 1:
-            # first Spark round after fastround/resume: fold the earlier
-            # snapshots in once; every later round unions only its delta
-            seen_next = seen_from_pages(
-                [rr for rr in pages_rounds if rr != r]
-            ).unionByName(delta)
-        else:
-            seen_next = delta
-        processed_next = processed + due_count
-        # After the crawl's LAST round (budget exhausted or max_rounds
-        # reached) the expansion would build a frontier no round ever
-        # consumes. Defer it: commit the pages snapshot with an
-        # expansion_pending flag; a resume rebuilds the frontier
-        # deterministically from that snapshot (same expansion, same
-        # admission), so resumability is unchanged while every
-        # non-resumed crawl saves a full expansion's work. Per-host
-        # deferred rows exist only in the next frontier and cannot be
-        # rebuilt from pages, so a max_rounds stop that has them still
-        # writes it.
-        final_round = processed_next >= budget or (
-            r + 1 >= config.max_rounds and deferred is None
-        )
-        if not final_round:
-            # materialized by the admission job below; the previous
-            # cache is released after the frontier write
-            seen_next = seen_next.persist()
-
-        # expansions → next frontier (J4/O4 → _admit). Under the
-        # throttle the deferred rows join the candidates BEFORE the
-        # dedup: they keep their original (earlier) priority, so the
-        # frontier stays globally first-wins
-        obs_f = None
-        if final_round:
-            frontier_path = None
-        else:
-            cand = expand_frontier(pages_r, base, next_round=r + 1)
-            if deferred is not None:
-                cand = deferred.unionByName(cand)
-            frontier_next = _admit(
-                cand, seen_next, processed_next,
-                probe_filter=probe_skip_bc is None,
-                parents=(processed, processed_next),
-            )
-            if publish_counts:
-                obs_f = Observation()
-                frontier_next = frontier_next.observe(obs_f, *bucket_metrics)
-            sc.setJobDescription(f"crawl r{r}: expand+admit+frontier-write")
-            frontier_path = catalog.write_table("frontier", r, frontier_next)
-            # the writer's schema is known exactly: an explicit schema
-            # skips the per-round footer/schema-inference job
-            frontier = spark.read.schema(FRONTIER_SCHEMA_V2).parquet(frontier_path)
-            # the admission job above materialized seen_next; rotate the
-            # incremental cache (unpersisting earlier frees the old
-            # blocks the new cache's lineage just read)
-            if seen_cache is not None:
-                seen_cache.unpersist()
-            seen_cache = seen_next
-        counts = None
-        if obs_f is not None:
-            counts_row = obs_f.get  # free: rode the write job
-            counts = {i: int(counts_row[f"b{i}"] or 0) for i in range(n_part)}
-        eligible.unpersist()
-        pages_r.unpersist()
-        t_expand = time.time()
-
-        processed = processed_next
-        metrics_rows.append(
-            {
-                "round": r,
-                "frontier_size": n_eligible,
-                "fetched": due_count,
-                "errors": n_errors,
-                "processed_total": processed,
-                "wall_s": time.time() - t0,
-                # phase walls (driver-observed job boundaries)
-                "seq_s": round(t_seq - t0, 2),
-                "fetch_s": round(t_fetch - t_seq, 2),
-                "expand_s": round(t_expand - t_fetch, 2),
-            }
-        )
-        if frontier_path is None:
-            commit(r, {"pages": pages_r_path}, expansion_pending=r)
-        else:
-            commit(r, {"pages": pages_r_path, "frontier": frontier_path})
-
-        r += 1
+    finally:
+        sc.setJobDescription(caller_desc)
 
     if not prepared:
         web_fetch.unpersist()
@@ -770,8 +773,8 @@ def run_crawl(
 
     # assemble results across rounds
     if pages_rounds:
-        pages = read_pages_snaps(
-            [f"{catalog.root}/pages/snap-{rr:06d}" for rr in sorted(set(pages_rounds))]
+        pages = spark.read.schema(PAGES_SCHEMA).parquet(
+            *[f"{catalog.root}/pages/snap-{rr:06d}" for rr in sorted(set(pages_rounds))]
         )
     else:
         pages = _empty(spark, PAGES_SCHEMA)

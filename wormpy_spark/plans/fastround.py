@@ -87,6 +87,7 @@ FRONTIER_ARROW_SCHEMA = pa.schema(
         ("host", pa.string()),
         ("host_shard", pa.int32()),
         ("seq_bucket", pa.int32()),
+        ("deferred", pa.bool_()),
     ]
 )
 
@@ -104,14 +105,31 @@ def write_pages_parquet(path: str, rows: list[dict]) -> None:
     pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
 
+def throttle_marks(rows: list[tuple], max_per_host: int | None) -> list[bool]:
+    """The per-host throttle over FRONTIER_SCHEMA tuples in priority
+    order: True on each row past its host's first ``max_per_host``, all
+    False without a throttle — the ``deferred`` mark ``_admit`` stamps
+    with a row_number window (plans/crawl.py)."""
+    if max_per_host is None:
+        return [False] * len(rows)
+    taken: Counter = Counter()
+    marks = []
+    for row in rows:
+        host = get_domain(row[4])
+        taken[host] += 1
+        marks.append(taken[host] > max_per_host)
+    return marks
+
+
 def write_frontier_parquet(
     path: str, rows: list[tuple], n_host_shards: int,
-    parents: tuple[int, int], n_buckets: int,
+    parents: tuple[int, int], n_buckets: int, max_per_host: int | None,
 ) -> dict[int, int]:
-    """rows: (url, round_enqueued, parent_seq, sibling_rank, url_norm);
-    the v2 derived columns (host, host_shard, seq_bucket over the
-    parents' seq range ``parents``) are computed here so the Spark loop
-    never re-derives them. Returns the rows per seq_bucket, as
+    """rows: (url, round_enqueued, parent_seq, sibling_rank, url_norm)
+    in priority order; the v2 derived columns (host, host_shard,
+    seq_bucket over the parents' seq range ``parents``, the throttle's
+    ``deferred`` mark) are computed here so the Spark loop never
+    re-derives them. Returns the unmarked rows per seq_bucket, as
     ``_admit``'s write publishes them (plans/crawl.py)."""
     os.makedirs(path, exist_ok=True)
     hosts = [get_domain(r[4]) for r in rows]
@@ -123,15 +141,16 @@ def write_frontier_parquet(
     cols["host"] = hosts
     cols["host_shard"] = [pmod(xxhash64_str(h), n_host_shards) for h in hosts]
     cols["seq_bucket"] = [seq_bucket(r[2], *parents, n_buckets) for r in rows]
+    cols["deferred"] = throttle_marks(rows, max_per_host)
     table = pa.Table.from_pydict(cols, schema=FRONTIER_ARROW_SCHEMA)
     pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-    return dict(Counter(cols["seq_bucket"]))
+    return dict(Counter(b for b, d in zip(cols["seq_bucket"], cols["deferred"]) if not d))
 
 
 @dataclass
 class FastRound:
     pages: list[dict]
-    frontier_next: list[tuple]  # FRONTIER_SCHEMA column order
+    frontier_next: list[tuple]  # FRONTIER_SCHEMA tuples in priority order
     n_eligible: int
     due_count: int
     n_errors: int
@@ -163,9 +182,8 @@ def run_fast_round(
     # P4 scope, then J2 first-occurrence-by-priority; J1 ran when the
     # rows were admitted (seeds meet an empty seen_set)
     work = sorted(
-        (renq, pseq, srank, url, un)
-        for (url, renq, pseq, srank, un) in frontier_rows
-        if un.startswith(base)
+        (row for row in frontier_rows if row[4].startswith(base)),
+        key=lambda row: row[1:4],
     )
     in_round: set[str] = set()
     eligible: list[tuple] = []
@@ -181,16 +199,9 @@ def run_fast_round(
             continue
         eligible.append(row)
 
-    deferred: list[tuple] = []
-    if config.max_per_host_per_round is not None:
-        counts: dict[str, int] = {}
-        kept = []
-        for row in eligible:  # priority order ⇒ rank within host
-            host = get_domain(row[4])
-            c = counts.get(host, 0) + 1
-            counts[host] = c
-            (kept if c <= config.max_per_host_per_round else deferred).append(row)
-        eligible = kept
+    marks = throttle_marks(eligible, config.max_per_host_per_round)
+    deferred = [row for row, m in zip(eligible, marks) if m]
+    eligible = [row for row, m in zip(eligible, marks) if not m]
 
     n_eligible = len(eligible)
     t_seq = time.time()
@@ -262,6 +273,7 @@ def run_fast_round(
     # gets a seq on either path, so pages/order/seen are identical. The
     # pop-time checks above admit the seeds, and are identities for
     # rows admitted here.
+    # deferred rows (round_enqueued <= r) sort before every expansion
     frontier_next: list[tuple] = list(deferred)
     if config.discovery:
         best: dict[str, tuple] = {}
@@ -283,26 +295,24 @@ def run_fast_round(
                     }
                 )
             for pos, nn in enumerate(per_parent):
-                cand = (r + 1, p["seq"], pos + 1, nn, nn)
+                cand = (nn, r + 1, p["seq"], pos + 1, nn)
                 prev = best.get(nn)
-                if prev is None or cand[:3] < prev[:3]:
+                if prev is None or cand[1:4] < prev[1:4]:
                     best[nn] = cand
         # a URL still deferred keeps its earlier-priority deferred copy:
         # a Spark round pops a handed-over frontier without a J2 pass
         deferred_urls = {row[4] for row in deferred}
         admitted = sorted(
-            c
-            for un, c in best.items()
-            if un not in seen_set
-            and un not in deferred_urls
-            and (robots_cache is None or robots_cache.allows(un))
+            (
+                c
+                for un, c in best.items()
+                if un not in seen_set
+                and un not in deferred_urls
+                and (robots_cache is None or robots_cache.allows(un))
+            ),
+            key=lambda row: row[1:4],
         )
         frontier_next += admitted
-    # back to FRONTIER_SCHEMA column order
-    frontier_next = [
-        (url, renq, pseq, srank, un)
-        for (renq, pseq, srank, url, un) in frontier_next
-    ]
     t_expand = time.time()
 
     return FastRound(

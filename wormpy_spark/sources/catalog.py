@@ -90,16 +90,6 @@ class SnapshotCatalog:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, self._manifest_path())
 
-    def commit_round(
-        self,
-        round_id: int,
-        tables: dict[str, DataFrame],
-        state: dict,
-    ) -> None:
-        """Convenience: stage all tables then commit."""
-        paths = {name: self.write_table(name, round_id, df) for name, df in tables.items()}
-        self.commit(round_id, paths, state)
-
     def rounds(self) -> list[int]:
         m = self.read_manifest()
         return [] if m is None else [h["round"] for h in m["history"]]
