@@ -153,10 +153,12 @@ def test_throttled_crawl_runs_no_seq_job(spark, small_corpus):
     """A throttled frontier publishes its bucket counts like every
     other frontier, so no round runs a job to count them, and a crawl
     that drains before its budget stops on the published zero counts
-    without running a job in the round that finds them."""
+    without running a job in the round that finds them. Seeding runs no
+    job of its own either: the seeds are admitted on the driver."""
     import re
 
     tables = corpus_to_spark(spark, small_corpus)
+    caller = spark.sparkContext.getLocalProperty("spark.job.description")
     before = set(_job_descriptions(spark))
     res = run_crawl(
         spark, tables["web"],
@@ -165,10 +167,16 @@ def test_throttled_crawl_runs_no_seq_job(spark, small_corpus):
         sitemaps=tables["sitemaps"],
     )
     assert res.processed < 50, "the crawl must drain before its budget"
-    labels = [d or "" for j, d in _job_descriptions(spark).items() if j not in before]
+    descs = [d for j, d in _job_descriptions(spark).items() if j not in before]
+    labels = [d or "" for d in descs]
     rounds = [int(m.group(1)) for d in labels if (m := re.match(r"crawl r(\d+)", d))]
     assert rounds and max(rounds) < res.rounds
     assert not [d for d in labels if "global seq" in d]
+    # the caller's jobs: the 2 sitemap lookups (probe URLs, then the
+    # sub-sitemaps) and preparing the unprepared web table, whose
+    # materializing count runs 4 jobs (one per AQE stage) and whose
+    # probe skip-set collect 1. No seed is suspicious: no probe lookup
+    assert sum(d == caller for d in descs) == 2 + 5
 
 
 def test_crawl_restores_caller_job_description(spark, small_corpus):
@@ -240,10 +248,27 @@ def _probe_cap(cfg: dict, monkeypatch) -> dict:
 
 def test_probe_fast_and_join_paths_agree(spark, small_corpus, monkeypatch):
     """P5/P6 probe: the broadcast skip-set fast path and the per-round
-    semi-join scale path must produce identical crawls."""
+    semi-join scale path must produce identical crawls. So must a crawl
+    seeded with a suspicious URL, on either round kind and under either
+    strategy: the seeds are admitted once, on the driver, so an image/*
+    seed is skipped and never gets a seq, and a text/html one is
+    fetched."""
     import wormpy_spark.plans.crawl as crawl_mod
 
     tables = corpus_to_spark(spark, small_corpus)
+    image = "https://host0.test/gallery/pic5.jpg"
+    html = "https://host0.test/print/page2.jpg"
+    types = {
+        r["url_norm"]: r["content_type"]
+        for r in tables["web"].filter(F.col("url_norm").isin(image, html)).collect()
+    }
+    assert types == {image: "image/jpeg", html: "text/html"}
+    # Spark round 0, then a fast one; the semi-join strategy is added below
+    seeded = {
+        b: [_full_outputs(spark, tables, base_url=b, fast_round_max=0)[:3],
+            _full_outputs(spark, tables, base_url=b)[:3]]
+        for b in (image, html)
+    }
     # fast_round_max=0: compare the two SPARK probe strategies (the
     # driver fast path has its own skip-set check, tested separately)
     base_cfg = dict(base_url="https://host0.test", budget=50, politeness_seed=7,
@@ -258,6 +283,13 @@ def test_probe_fast_and_join_paths_agree(spark, small_corpus, monkeypatch):
     assert [r["url_norm"] for r in fast.order.collect()] == [
         r["url_norm"] for r in joined.order.collect()
     ]
+    for b, outputs in seeded.items():
+        outputs.append(_full_outputs(spark, tables, base_url=b)[:3])
+        assert outputs[0] == outputs[1] == outputs[2], b
+    order, seen, _ = seeded[image][0]
+    assert order == [] and seen == []
+    order, seen, _ = seeded[html][0]
+    assert order[0] == (0, html) and html in seen
 
 
 def _full_outputs(spark, tables, base_url="https://host0.test", **cfg_kwargs):

@@ -53,7 +53,8 @@ FRONTIER_SCHEMA = (
 # with seq_bucket, the parent_seq range bucket the round's seq ranks
 # by, and deferred, the per-host throttle's mark (false on every row
 # without a throttle). Every frontier the crawl writes is v2; only seeds
-# are built as v1 rows, and they pass admission before any round reads
+# are built as v1 rows, and they are admitted on the driver (fastround's
+# ``admit_seeds``, then its v2 table builder) before any round reads
 # them.
 FRONTIER_SCHEMA_V2 = FRONTIER_SCHEMA + ", host string, host_shard int, seq_bucket int, deferred boolean"
 

@@ -1,10 +1,12 @@
 """The BSP crawl driver loop (T4; SURVEY.md §3.2 engine lifecycle).
 
-Every frontier is written ADMITTED by one step, ``_admit``, which the
-seeds, each round's expansions and the resume rebuild all go through:
+Every frontier is written ADMITTED, once. The seeds are admitted on
+the driver before round 0 of either kind (fastround's ``admit_seeds``:
+scope, first occurrence, the probe and robots over a handful of rows;
+they meet an empty seen). Each Spark round's expansions and the resume
+rebuild go through one step, ``_admit``:
 
-    candidates (in scope, P4: seeds filtered on the driver, expansions
-                by expand_frontier / the fetch kernel)
+    candidates (in scope, P4: expand_frontier / the fetch kernel)
              → first-occurrence dedup by priority (J2 equivalence)
              → host / host_shard, derived once (v2 frontier)
              → ANTI JOIN seen (J1)
@@ -48,9 +50,9 @@ against the golden oracle in tests/test_golden.py):
   (a dupe admitted mid-round is pop-skipped later either way);
 - J1 runs once per URL, at admission: every frontier row was anti-
   joined against seen when its frontier was written (``_admit``, or
-  fastround's driver seen_set; seeds meet an empty seen), and seen has
-  grown since only by rows fetched from EARLIER frontiers, so a round
-  never re-checks its own frontier. Probe-skipped and robots-disallowed
+  fastround's driver seen_set; the seeds, admitted on the driver, meet
+  an empty seen), and seen has grown since only by rows fetched from
+  EARLIER frontiers, so a round never re-checks its own frontier. Probe-skipped and robots-disallowed
   URLs never get a seq on either side, so filtering them at admission
   instead of pop changes no output.
 
@@ -69,10 +71,8 @@ from __future__ import annotations
 
 import tempfile
 import time
-from collections import Counter
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -88,7 +88,6 @@ from ..operators.fetch import (
     make_fetch_extract,
 )
 from ..operators.frontier import (
-    FRONTIER_SCHEMA,
     FRONTIER_SCHEMA_V2,
     PRIORITY_COLS,
     assign_global_seq,
@@ -102,6 +101,8 @@ from ..operators.seen import anti_join_seen
 from ..sources.catalog import SnapshotCatalog
 from ..sources import sitemap
 from .fastround import (
+    admit_seeds,
+    frontier_table,
     run_fast_round,
     write_frontier_parquet,
     write_pages_parquet,
@@ -168,7 +169,9 @@ def prepare_fetch_table(
     table — data loading, done once, amortized across every crawl that
     follows (and excluded from steady-state throughput the same way
     the table write itself is). The returned handle is marked so
-    run_crawl skips its own per-crawl preparation.
+    run_crawl does not prepare it again; run_crawl prepares an
+    unprepared web itself (``compress_bodies=False``) and unpersists it
+    after the crawl.
 
     ``compress_bodies``: store page bodies zlib-compressed in the
     pinned table (like the encoded column chunks of a real columnar
@@ -206,8 +209,7 @@ def prepare_fetch_table(
     # every crawl against this snapshot reuses it instead of paying a
     # cold scan + driver collect per crawl (~3-5 s on a 500k-row
     # snapshot). On a cluster this is a sidecar of the bucketed-table
-    # write. run_crawl falls back to computing it per-crawl for
-    # unprepared inputs, capped by PROBE_BROADCAST_MAX.
+    # write.
     skip_rows = (
         prepared.filter(suspicious_pred(F.col("url_norm")))
         .filter(F.col("content_type").startswith("image/"))
@@ -250,69 +252,33 @@ def run_crawl(
         robots_cache_obj = cache
         robots_filter = robots_allows_udf(spark.sparkContext.broadcast(cache))
 
+    # fetch side prepared ONCE: hash-partitioned on the join key and
+    # persisted, so every round's fetch join exchanges only the (tiny)
+    # due side — page BODIES cross a shuffle exactly once per crawl,
+    # not once per round (the dominant memory-bandwidth cost measured
+    # in round-1 event logs). Callers may prepare it once up front with
+    # prepare_fetch_table() and reuse it across crawls; an unprepared
+    # web is prepared here and released after the crawl.
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    prepared = getattr(web, "_wormpy_prepared", False)
+    if not prepared:
+        web = prepare_fetch_table(spark, web, compress_bodies=False)
+    web_fetch = web.drop("url", "host", "links")
+
     # narrow projection used by the HEAD-model probe (column pruning:
     # the probe scan reads only url_norm + content_type)
     probe = web.select("url_norm", F.col("content_type").alias("_probe_ct"))
 
     # HEAD-probe fast path: suspicious URLs (media extensions / query
     # strings) are the only ones that consult a content type, and only
-    # "image/*" skips (P5/P6). Collect the suspicious slice's content
-    # types ONCE and broadcast the skip SET — this replaces a per-round
-    # full probe scan + two broadcast-join jobs with one JVM isin-style
-    # lookup. Gated: above the cap the per-round semi-join path below
-    # stays (at 10^10 scale the probe is a bucketed lookup table).
+    # "image/*" skips (P5/P6). prepare_fetch_table collected the
+    # suspicious slice's skip SET once and broadcast it; used only when
+    # it fits this crawl's cap (a cap lowered after preparation must
+    # fall back to the per-round semi-join scale path in ``_admit``).
+    skip_size = getattr(web, "_wormpy_probe_skip_size", None)
     probe_skip_bc = None
-    prepared_skip = getattr(web, "_wormpy_probe_skip", None)
-    prepared_skip_size = getattr(web, "_wormpy_probe_skip_size", None)
-    if (
-        prepared_skip is not None
-        and PROBE_BROADCAST_MAX > 0
-        and (
-            prepared_skip_size is None
-            or prepared_skip_size <= PROBE_BROADCAST_MAX
-        )
-    ):
-        # snapshot-level skip set, computed AND broadcast once by
-        # prepare_fetch_table — used only when it fits this crawl's cap
-        probe_skip_bc = prepared_skip
-    elif PROBE_BROADCAST_MAX > 0:
-        susp_rows = (
-            probe.filter(suspicious_pred(F.col("url_norm")))
-            .filter(F.col("_probe_ct").startswith("image/"))
-            .select("url_norm")
-            .limit(PROBE_BROADCAST_MAX + 1)
-            .collect()
-        )
-        if len(susp_rows) <= PROBE_BROADCAST_MAX:
-            probe_skip_bc = spark.sparkContext.broadcast(
-                frozenset(r["url_norm"] for r in susp_rows)
-            )
-        del susp_rows
-
-    if probe_skip_bc is not None:
-        from pyspark.sql.functions import pandas_udf as _pandas_udf
-
-        @_pandas_udf("boolean")
-        def _probe_skips(urls: pd.Series) -> pd.Series:
-            return urls.isin(probe_skip_bc.value)
-
-    # fetch side prepared ONCE: hash-partitioned on the join key and
-    # persisted, so every round's fetch join exchanges only the (tiny)
-    # due side — page BODIES cross a shuffle exactly once per crawl,
-    # not once per round (the dominant memory-bandwidth cost measured
-    # in round-1 event logs). On a cluster this is the bucketed-table
-    # layout of the web snapshot; callers may prepare it once up front
-    # with prepare_fetch_table() and reuse it across crawls.
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    prepared = getattr(web, "_wormpy_prepared", False)
-    if prepared:
-        web_fetch = web.drop("url", "host", "links")
-    else:
-        web_fetch = (
-            web.drop("url", "host", "links")
-            .repartition(n_part, "url_norm")
-            .persist()
-        )
+    if PROBE_BROADCAST_MAX > 0 and skip_size is not None and skip_size <= PROBE_BROADCAST_MAX:
+        probe_skip_bc = web._wormpy_probe_skip
 
     sitemap_urls: list[str] = []
     metrics_rows: list[dict] = []
@@ -351,18 +317,20 @@ def run_crawl(
         probe_filter: bool,
         parents: tuple[int, int],
     ) -> DataFrame:
-        """The one admission every frontier row passes, once, so a round
-        pops its frontier as-is (module docstring). ``cand`` is in scope
-        (P4) and canonical already.
+        """The one admission every expansion passes, once, so a round
+        pops its frontier as-is (module docstring); the seeds are
+        admitted on the driver instead (``admit_seeds``). ``cand`` is in
+        scope (P4) and canonical already.
 
-        ``probe_filter``: apply the P5/P6 probe here. Off only where the
-        fetch kernel already dropped the probe-skip URLs from
-        ``discovered_norm`` (expansions under the skip-set fast path).
+        ``probe_filter``: apply the P5/P6 probe here, as a semi-join
+        against the probe table. Off only where the fetch kernel already
+        dropped the probe-skip URLs from ``discovered_norm`` (expansions
+        under the skip-set fast path); on for the resume rebuild.
 
         ``parents``: the seq range [lo, hi) of the candidates' parents,
-        bucketed into ``seq_bucket`` (operators/frontier.py): seeds and
-        a throttle's deferred rows fall below ``lo`` and clamp to
-        bucket 0, so the buckets follow the whole priority order.
+        bucketed into ``seq_bucket`` (operators/frontier.py): a
+        throttle's deferred rows fall below ``lo`` and clamp to bucket
+        0, so the buckets follow the whole priority order.
         ``deferred`` marks the rows past a host's first k in priority
         order: the rows a pop-time window over this frontier would defer."""
         # ``url`` is url_norm verbatim past admission: drop the copy
@@ -381,11 +349,8 @@ def run_crawl(
             )
         )
         f = anti_join_seen(f, seen, seen_count)                     # J1
-        if probe_filter and probe_skip_bc is not None:
-            # the skip set holds suspicious URLs only (P5/P6)
-            f = f.filter(~_probe_skips(F.col("url_norm")))
-        elif probe_filter:
-            # scale path: semi-prune the probe table by the (small)
+        if probe_filter:
+            # P5/P6: semi-prune the probe table by the (small)
             # suspicious key set first — otherwise the planner
             # broadcasts the full probe projection
             susp = f.filter(suspicious_pred(F.col("url_norm"))).select("url_norm")
@@ -503,18 +468,16 @@ def run_crawl(
                 for i, u in enumerate(sitemap_urls)
             ]
             seed_rows = [row for row in seed_rows if row[4].startswith(base)]
-        frontier_rows = seed_rows
+        # admitted once, here, whatever kind round 0 is
+        frontier_rows = admit_seeds(seed_rows, web, robots_cache_obj)
         seen_set = set()
-        if not fast_round(seed_rows):
-            # a fast round 0 admits the seeds itself; here they meet an
-            # empty seen, parent_seq -1 puts them in bucket 0 for any
-            # parents range, and the driver counts the handful it collects
-            seed_frontier = _admit(
-                spark.createDataFrame(seed_rows, FRONTIER_SCHEMA),
-                _empty(spark, SEEN_SCHEMA), 0, probe_filter=True, parents=(0, 1),
-            ).collect()
-            counts = Counter(row["seq_bucket"] for row in seed_frontier if not row["deferred"])
-            frontier = spark.createDataFrame(seed_frontier, FRONTIER_SCHEMA_V2)
+        if not fast_round(frontier_rows):
+            # parent_seq -1 puts every seed in bucket 0 for any parents range
+            table, counts = frontier_table(
+                frontier_rows, config.n_host_shards, (0, 1), n_part,
+                config.max_per_host_per_round,
+            )
+            frontier = spark.createDataFrame(table, FRONTIER_SCHEMA_V2)
 
     pages_rounds: list[int] = catalog.rounds() if config.resume else []
     seen_cache = None  # persisted incremental seen set (guide §2.4: the
@@ -552,19 +515,19 @@ def run_crawl(
                 sc.setJobDescription(f"crawl r{r}: fast round")
                 fr = run_fast_round(
                     r, frontier_rows, seen_set, processed, budget, base,
-                    config, web_fetch, probe_skip_bc.value, robots_cache_obj,
-                    probe_skip_bc=probe_skip_bc,
+                    config, web_fetch, robots_cache_obj, probe_skip_bc,
                 )
                 if fr.n_eligible == 0:
                     break
                 pages_r_path = catalog.table_path("pages", r)
                 write_pages_parquet(pages_r_path, fr.pages)
                 frontier_path = catalog.table_path("frontier", r)
-                counts = write_frontier_parquet(
-                    frontier_path, fr.frontier_next, config.n_host_shards,
+                table, counts = frontier_table(
+                    fr.frontier_next, config.n_host_shards,
                     (processed, processed + fr.due_count), n_part,
                     config.max_per_host_per_round,
                 )
+                write_frontier_parquet(frontier_path, table)
                 pages_rounds.append(r)
                 processed += fr.due_count
                 metrics_rows.append(
@@ -589,7 +552,7 @@ def run_crawl(
                     # from the snapshots just written
                     frontier_rows = None
                     seen_set = None
-                    frontier = spark.read.parquet(frontier_path)
+                    frontier = spark.read.schema(FRONTIER_SCHEMA_V2).parquet(frontier_path)
                 r += 1
                 continue
             frontier_rows = None
@@ -762,7 +725,7 @@ def run_crawl(
         sc.setJobDescription(caller_desc)
 
     if not prepared:
-        web_fetch.unpersist()
+        web.unpersist()
     if seen_cache is not None:
         seen_cache.unpersist()
 

@@ -14,19 +14,22 @@ everything else is plain Python over a few hundred rows.
 Parity obligations (tested: tests/test_golden.py runs entirely through
 this path with default config, and test_properties.py asserts
 fast-vs-Spark equality including a mid-crawl transition):
-- identical filter-chain semantics (scope → in-round first-occurrence
-  dedup → probe skip → robots → per-host deferral → global seq →
-  budget cut, with the seen check at admission) — same pure predicates
-  the Spark path's column expressions mirror;
+- identical admission: the seeds are admitted once on the driver
+  (``admit_seeds``) whatever the round kind, and each expansion here
+  passes scope and the probe skip in the fetch kernel, then first-
+  occurrence dedup, the seen check and robots below — the pure
+  predicates the Spark path's ``_admit`` column expressions mirror. A
+  round pops its rows as-is: per-host deferral → seq → budget cut;
 - identical pages rows: the very same ``make_fetch_extract`` Arrow
   kernel produces them;
 - bit-identical ``host_shard``: pure-Python XXH64 (functions.xxhash)
   matches Spark's ``xxhash64``, so the per-partition lineage column
   of snapshots written here equals the Spark path's;
 - snapshot-compatible parquet: pyarrow writes the exact PAGES_SCHEMA /
-  FRONTIER_SCHEMA arrow types, so Spark unions fast-round and
+  FRONTIER_SCHEMA_V2 arrow types, so Spark unions fast-round and
   Spark-round snapshot files transparently (resume, seen derivation,
-  final assembly are unchanged).
+  final assembly are unchanged); the same v2 table (``frontier_table``)
+  is a Spark round 0's seed frontier.
 
 At 10^10-URL scale this is the standard driver-side tail/head
 optimization: rounds 0-1 of ANY crawl are tiny regardless of corpus
@@ -47,13 +50,9 @@ from pyspark.sql import functions as F
 
 import pandas as pd
 
-from ..functions.urlnorm import get_domain, is_suspicious_url, normalize_url
+from ..functions.urlnorm import get_domain, is_suspicious_url
 from ..functions.xxhash import pmod, xxhash64_str
-from ..operators.fetch import (
-    PAGES_SCHEMA,
-    PAGES_SCHEMA_EXPAND,
-    make_fetch_extract,
-)
+from ..operators.fetch import PAGES_SCHEMA_EXPAND, make_fetch_extract
 from ..operators.frontier import seq_bucket
 
 PAGES_ARROW_SCHEMA = pa.schema(
@@ -105,6 +104,34 @@ def write_pages_parquet(path: str, rows: list[dict]) -> None:
     pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
 
+def admit_seeds(rows: list[tuple], web, robots_cache) -> list[tuple]:
+    """The seeds' one admission, on the driver, before round 0 of either
+    kind. ``rows``: FRONTIER_SCHEMA tuples, canonical and in scope (P4).
+    Applies first occurrence by priority (J2), the P5/P6 probe and the
+    robots cache; seen is empty (J1). A suspicious seed is skipped when
+    its content type in ``web`` is image/*: one literal-IN lookup, run
+    only when some seed is suspicious. Returns the admitted rows in
+    priority order, ``url`` = url_norm as ``_admit`` writes it."""
+    firsts: dict[str, tuple] = {}
+    for row in sorted(rows, key=lambda row: row[1:4]):
+        firsts.setdefault(row[4], row)
+    suspicious = [un for un in firsts if is_suspicious_url(un)]
+    skipped = set()
+    if suspicious:
+        skipped = {
+            r["url_norm"]
+            for r in web.filter(F.col("url_norm").isin(suspicious))
+            .filter(F.col("content_type").startswith("image/"))
+            .select("url_norm")
+            .collect()
+        }
+    return [
+        (un, *row[1:4], un)
+        for un, row in firsts.items()
+        if un not in skipped and (robots_cache is None or robots_cache.allows(un))
+    ]
+
+
 def throttle_marks(rows: list[tuple], max_per_host: int | None) -> list[bool]:
     """The per-host throttle over FRONTIER_SCHEMA tuples in priority
     order: True on each row past its host's first ``max_per_host``, all
@@ -121,17 +148,17 @@ def throttle_marks(rows: list[tuple], max_per_host: int | None) -> list[bool]:
     return marks
 
 
-def write_frontier_parquet(
-    path: str, rows: list[tuple], n_host_shards: int,
+def frontier_table(
+    rows: list[tuple], n_host_shards: int,
     parents: tuple[int, int], n_buckets: int, max_per_host: int | None,
-) -> dict[int, int]:
+) -> tuple[pa.Table, dict[int, int]]:
     """rows: (url, round_enqueued, parent_seq, sibling_rank, url_norm)
-    in priority order; the v2 derived columns (host, host_shard,
-    seq_bucket over the parents' seq range ``parents``, the throttle's
-    ``deferred`` mark) are computed here so the Spark loop never
-    re-derives them. Returns the unmarked rows per seq_bucket, as
-    ``_admit``'s write publishes them (plans/crawl.py)."""
-    os.makedirs(path, exist_ok=True)
+    in priority order, as a FRONTIER_SCHEMA_V2 table: the derived
+    columns (host, host_shard, seq_bucket over the parents' seq range
+    ``parents``, the throttle's ``deferred`` mark) are computed here so
+    the Spark loop never re-derives them. Also returns the unmarked rows
+    per seq_bucket, as ``_admit``'s write publishes them
+    (plans/crawl.py)."""
     hosts = [get_domain(r[4]) for r in rows]
     cols: dict[str, list] = {
         name: [r[i] for r in rows] for i, name in enumerate(
@@ -142,9 +169,13 @@ def write_frontier_parquet(
     cols["host_shard"] = [pmod(xxhash64_str(h), n_host_shards) for h in hosts]
     cols["seq_bucket"] = [seq_bucket(r[2], *parents, n_buckets) for r in rows]
     cols["deferred"] = throttle_marks(rows, max_per_host)
-    table = pa.Table.from_pydict(cols, schema=FRONTIER_ARROW_SCHEMA)
+    counts = Counter(b for b, d in zip(cols["seq_bucket"], cols["deferred"]) if not d)
+    return pa.Table.from_pydict(cols, schema=FRONTIER_ARROW_SCHEMA), dict(counts)
+
+
+def write_frontier_parquet(path: str, table: pa.Table) -> None:
+    os.makedirs(path, exist_ok=True)
     pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-    return dict(Counter(b for b, d in zip(cols["seq_bucket"], cols["deferred"]) if not d))
 
 
 @dataclass
@@ -168,40 +199,21 @@ def run_fast_round(
     base: str,
     config,
     web_fetch,
-    probe_skip: frozenset,
     robots_cache,
-    probe_skip_bc=None,
+    probe_skip_bc,
 ) -> FastRound:
     """One crawl round over a driver-resident frontier.
 
-    ``frontier_rows``: (url, round_enqueued, parent_seq, sibling_rank,
-    url_norm) tuples. Mutates ``seen_set`` with this round's processed
-    keys (J3), exactly as the Spark path's seen derivation would.
+    ``frontier_rows``: admitted (url, round_enqueued, parent_seq,
+    sibling_rank, url_norm) tuples in priority order — the seeds
+    (``admit_seeds``) or a previous fast round's ``frontier_next``.
+    Mutates ``seen_set`` with this round's processed keys (J3), exactly
+    as the Spark path's seen derivation would.
     """
     t0 = time.time()
-    # P4 scope, then J2 first-occurrence-by-priority; J1 ran when the
-    # rows were admitted (seeds meet an empty seen_set)
-    work = sorted(
-        (row for row in frontier_rows if row[4].startswith(base)),
-        key=lambda row: row[1:4],
-    )
-    in_round: set[str] = set()
-    eligible: list[tuple] = []
-    for row in work:
-        un = row[4]
-        if un in in_round:
-            continue
-        in_round.add(un)
-        # P5/P6: suspicious URLs consult the probe; image/* skipped
-        if is_suspicious_url(un) and un in probe_skip:
-            continue
-        if robots_cache is not None and not robots_cache.allows(un):
-            continue
-        eligible.append(row)
-
-    marks = throttle_marks(eligible, config.max_per_host_per_round)
-    deferred = [row for row, m in zip(eligible, marks) if m]
-    eligible = [row for row, m in zip(eligible, marks) if not m]
+    marks = throttle_marks(frontier_rows, config.max_per_host_per_round)
+    deferred = [row for row, m in zip(frontier_rows, marks) if m]
+    eligible = [row for row, m in zip(frontier_rows, marks) if not m]
 
     n_eligible = len(eligible)
     t_seq = time.time()
@@ -247,15 +259,10 @@ def run_fast_round(
     # iterates ready-made lists instead of running ~links-many
     # normalize_url calls single-threaded (measured 2-3 s of driver-
     # only wall in round 1 at every parallelism level).
-    if config.discovery and probe_skip_bc is not None:
-        kernel = make_fetch_extract(
-            config.discovery, scope_base=base, probe_skip_bc=probe_skip_bc
-        )
-        out_schema = PAGES_SCHEMA_EXPAND
-    else:
-        kernel = make_fetch_extract(config.discovery)
-        out_schema = PAGES_SCHEMA
-    page_rows = joined.mapInArrow(kernel, out_schema).collect()
+    kernel = make_fetch_extract(
+        config.discovery, scope_base=base, probe_skip_bc=probe_skip_bc
+    )
+    page_rows = joined.mapInArrow(kernel, PAGES_SCHEMA_EXPAND).collect()
     pages = sorted(
         (row.asDict(recursive=True) for row in page_rows),
         key=lambda p: p["seq"],
@@ -270,31 +277,17 @@ def run_fast_round(
     # J4/O4 expansion → J2 global first-occurrence → J1 admission.
     # The probe-skip (P5/P6) and robots filters apply at ADMISSION, as
     # in the Spark path (plans/crawl.py ``_admit``): a dropped URL never
-    # gets a seq on either path, so pages/order/seen are identical. The
-    # pop-time checks above admit the seeds, and are identities for
-    # rows admitted here.
+    # gets a seq on either path, so pages/order/seen are identical.
     # deferred rows (round_enqueued <= r) sort before every expansion
     frontier_next: list[tuple] = list(deferred)
     if config.discovery:
         best: dict[str, tuple] = {}
         for p in pages:
-            if p["error"] is not None or not p["discovered_urls"]:
+            if p["error"] is not None:
                 continue
-            if "discovered_norm" in p:
-                # kernel-computed per-parent set: already normalized,
-                # scope-filtered, probe-skipped, distinct and sorted —
-                # byte-identical to the fallback below by construction
-                # (same normalize_url, same filters, same sort)
-                per_parent = p["discovered_norm"]
-            else:
-                per_parent = sorted(
-                    {
-                        nn
-                        for nn in (normalize_url(l) for l in p["discovered_urls"])
-                        if nn.startswith(base) and nn not in probe_skip
-                    }
-                )
-            for pos, nn in enumerate(per_parent):
+            # the kernel's per-parent set: normalized, scope-filtered,
+            # probe-skipped, distinct and sorted
+            for pos, nn in enumerate(p["discovered_norm"]):
                 cand = (nn, r + 1, p["seq"], pos + 1, nn)
                 prev = best.get(nn)
                 if prev is None or cand[1:4] < prev[1:4]:
