@@ -15,7 +15,7 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from wormpy_spark.fixtures.spark_tables import corpus_to_spark
@@ -341,17 +341,19 @@ def test_driver_fast_path_equals_spark_path(spark, small_corpus, monkeypatch):
 
 def test_assign_global_seq_matches_sorted_reference(spark):
     """The dense global sequence equals a plain Python sort of the
-    priority triple, offset by ``start``, over rows that span several
-    round_enqueued values, each with its own disjoint, increasing
-    parent_seq range — the shape every frontier has (seq is assigned in
-    round order; a throttle's deferred rows sit below the newest
-    parents and clamp to bucket 0), given the true bucket counts; an
-    empty input yields no rows."""
+    (round_enqueued, parent_seq, sibling_rank) triple the packed
+    priority encodes, offset by ``start``, over rows that span several
+    rounds, each with its own disjoint, increasing parent_seq range —
+    the shape every frontier has (seq is assigned in round order; a
+    throttle's deferred rows sit below the newest parents and clamp to
+    bucket 0), given the true bucket counts; an empty input yields no
+    rows."""
     import random
 
     from wormpy_spark.operators.frontier import (
         FRONTIER_SCHEMA,
         assign_global_seq,
+        priority,
         seq_bucket,
         seq_bucket_col,
     )
@@ -360,32 +362,169 @@ def test_assign_global_seq_matches_sorted_reference(spark):
     triples = set()
     while len(triples) < 5000:
         renq = rng.randrange(3, 7)
-        # round_enqueued r's parents: seq range [2000 r, 2000 (r + 1))
+        # round r's parents: seq range [2000 r, 2000 (r + 1))
         pseq = 2000 * renq + rng.randrange(2000)
         triples.add((renq, pseq, rng.randrange(1, 300)))
-    rows = [
-        (f"https://h.test/p/{i}", renq, pseq, srank, f"https://h.test/p/{i}")
-        for i, (renq, pseq, srank) in enumerate(triples)
-    ]
+    by_url = {f"https://h.test/p/{i}": t for i, t in enumerate(triples)}
+    rows = [(url, priority(pseq, srank)) for url, (_, pseq, srank) in by_url.items()]
     # the parents' range [9000, 14000) spans two rounds; rounds 3-4
     # below it clamp to bucket 0
     parents, n_buckets = (9000, 14000), 8
     df = spark.createDataFrame(rows, FRONTIER_SCHEMA).withColumn(
         "seq_bucket", seq_bucket_col(*parents, n_buckets)
     )
-    true_counts = Counter(seq_bucket(row[2], *parents, n_buckets) for row in rows)
+    true_counts = Counter(seq_bucket(prio, *parents, n_buckets) for _, prio in rows)
     assert len(true_counts) == n_buckets
-    want = [
-        (123 + i, row[0])
-        for i, row in enumerate(sorted(rows, key=lambda row: row[1:4]))
-    ]
+    want = [(123 + i, url) for i, url in enumerate(sorted(by_url, key=by_url.get))]
     out, total = assign_global_seq(df, 123, dict(true_counts))
-    got = sorted((r["seq"], r["url"]) for r in out.select("seq", "url").collect())
+    got = sorted((r["seq"], r["url_norm"]) for r in out.select("seq", "url_norm").collect())
     assert total == 5000 and got == want
 
     empty = spark.createDataFrame([], FRONTIER_SCHEMA + ", seq_bucket int")
     out, total = assign_global_seq(empty, 7, {})
     assert total == 0 and out.count() == 0
+
+
+parent_seqs = st.one_of(st.sampled_from([-1, 2**35 - 2]), st.integers(-1, 2**35 - 2))
+sibling_ranks = st.one_of(st.sampled_from([0, 2**28 - 1]), st.integers(0, 2**28 - 1))
+
+
+@given(st.lists(st.tuples(parent_seqs, sibling_ranks), min_size=1, max_size=40))
+@example([(-1, 0), (-1, 2**28 - 1), (0, 0), (2**35 - 2, 0), (2**35 - 2, 2**28 - 1)])
+@settings(max_examples=25, deadline=None)
+def test_priority_orders_like_the_pair(spark, pairs):
+    """The packed priority is a non-negative BIGINT that orders exactly
+    like ``(parent_seq, sibling_rank)`` over the whole fixed split, its
+    boundaries included, and the Column twin equals it row by row."""
+    from wormpy_spark.operators.frontier import (
+        SEQ_LIMIT,
+        SIBLING_LIMIT,
+        priority,
+        priority_col,
+    )
+
+    assert (SEQ_LIMIT, SIBLING_LIMIT) == (2**35, 2**28)
+    distinct = sorted(set(pairs))
+    packed = [priority(*pair) for pair in distinct]
+    assert packed == sorted(set(packed)), "not strictly monotone in the pair"
+    assert 0 <= packed[0] and packed[-1] < 2**63
+    df = spark.createDataFrame(pairs, "parent_seq long, sibling_rank long")
+    got = df.select(
+        "parent_seq", "sibling_rank",
+        priority_col(F.col("parent_seq"), F.col("sibling_rank")).alias("p"),
+    ).collect()
+    assert [tuple(r) for r in got] == [(*pair, priority(*pair)) for pair in pairs]
+
+
+def test_dedup_within_round_is_a_hash_aggregate(spark):
+    """The candidate dedup is a min over one BIGINT: a HashAggregate
+    (with a map-side partial aggregate), never a SortAggregate."""
+    from wormpy_spark.operators.frontier import FRONTIER_SCHEMA, dedup_within_round
+
+    rows = [("https://h.test/a", 9), ("https://h.test/b", 4), ("https://h.test/a", 5)]
+    out = dedup_within_round(spark.createDataFrame(rows, FRONTIER_SCHEMA))
+    assert sorted(map(tuple, out.collect())) == [("https://h.test/a", 5), ("https://h.test/b", 4)]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
+
+
+def test_expand_frontier_paths_agree(spark, small_corpus):
+    """The fetch kernel's pre-canonicalized ``discovered_norm`` and the
+    canonicalize-UDF path over ``discovered_urls`` (which the resume
+    rebuild takes over snapshot pages) expand a small_corpus due set to
+    the same ``(url_norm, priority)`` rows."""
+    from pyspark.sql import Window
+
+    from wormpy_spark.operators.fetch import PAGES_SCHEMA_EXPAND, make_fetch_extract
+    from wormpy_spark.operators.frontier import expand_frontier
+
+    base = normalize_url("https://host0.test")
+    web = corpus_to_spark(spark, small_corpus)["web"]
+    due = (
+        web.select("url_norm", "host")
+        .withColumn("seq", F.row_number().over(Window.orderBy("url_norm")) - 1)
+        .withColumn("round", F.lit(0))
+        .withColumn("host_shard", F.lit(0))
+    )
+    pages = due.join(web.drop("url", "host", "links"), on="url_norm", how="left").mapInArrow(
+        make_fetch_extract(True, scope_base=base), PAGES_SCHEMA_EXPAND
+    ).persist()
+    try:
+        fast = sorted(map(tuple, expand_frontier(pages, base).collect()))
+        slow = sorted(map(tuple, expand_frontier(pages.drop("discovered_norm"), base).collect()))
+    finally:
+        pages.unpersist()
+    assert len(fast) > 20 and len({url for url, _ in fast}) < len(fast)
+    assert fast == slow
+
+
+def _kernel_batch(n_links: int):
+    """One joined (frontier ⋈ web) row for the fetch kernel: an HTML
+    page past the dynamic-content threshold with ``n_links`` in-scope
+    links."""
+    import pyarrow as pa
+
+    links = "".join(f'<a href="/p/{i}">p{i}</a>' for i in range(n_links))
+    body = f"<html><body><p>{'wormpy ' * 100}</p>{links}</body></html>"
+    return pa.RecordBatch.from_pydict({
+        "url_norm": ["https://host0.test"], "seq": [0], "round": [0],
+        "host": ["host0.test"], "host_shard": [0], "status": [200],
+        "content_type": ["text/html"], "body": [body.encode()],
+    })
+
+
+def test_fetch_kernel_refuses_more_siblings_than_priority_holds(monkeypatch):
+    """A page whose in-scope expansion set reaches SIBLING_LIMIT entries
+    raises in the fetch kernel (every expansion, Spark or fast, and the
+    resume rebuild's pages pass it) instead of wrapping into the
+    parent's bits of the priority."""
+    import wormpy_spark.operators.fetch as fetch_mod
+
+    monkeypatch.setattr(fetch_mod, "SIBLING_LIMIT", 4)
+    kernel = fetch_mod.make_fetch_extract(True, scope_base="https://host0.test")
+    (out,) = list(kernel(iter([_kernel_batch(3)])))
+    assert len(out.column("discovered_norm")[0]) == 3
+    with pytest.raises(ValueError, match="4 in-scope links"):
+        list(kernel(iter([_kernel_batch(4)])))
+
+
+def test_seeding_refuses_more_seeds_than_priority_holds(spark, small_corpus, monkeypatch):
+    """A crawl whose seeds (the base plus the sitemap URLs) reach
+    SIBLING_LIMIT raises before round 0."""
+    import wormpy_spark.plans.crawl as crawl_mod
+    from wormpy_spark.plans.crawl import prepare_fetch_table
+    from wormpy_spark.sources import sitemap
+
+    monkeypatch.setattr(crawl_mod, "SIBLING_LIMIT", 3)
+    monkeypatch.setattr(sitemap, "sitemap_urls", lambda sitemaps, base: [f"{base}/a", f"{base}/b"])
+    tables = corpus_to_spark(spark, small_corpus)
+    web = prepare_fetch_table(spark, tables["web"])
+    try:
+        with pytest.raises(ValueError, match="3 seeds"):
+            run_crawl(spark, web, CrawlConfig(base_url="https://host0.test"),
+                      sitemaps=tables["sitemaps"])
+    finally:
+        web.unpersist()
+
+
+@pytest.mark.parametrize(
+    "field, bad, ok",
+    [
+        ("max_per_host_per_round", 0, 1),
+        ("budget", -1, 0),
+        ("budget", 2**35, 2**35 - 1),
+        ("fast_round_max", -1, 0),
+        ("max_rounds", 0, 1),
+    ],
+)
+def test_crawl_config_refuses_out_of_range(field, bad, ok):
+    """CrawlConfig refuses, at construction, a value that would end the
+    crawl silently (a zero throttle defers every row, so round 0 finds
+    no eligible row) or overflow the frontier's priority; the boundary
+    value is accepted."""
+    CrawlConfig(base_url="https://host0.test", **{field: ok})
+    with pytest.raises(ValueError, match=field):
+        CrawlConfig(base_url="https://host0.test", **{field: bad})
 
 
 # host1 has no sitemap: 1 seed, then throttled frontiers of 3 and 11
@@ -407,14 +546,16 @@ def test_every_frontier_is_admitted_once(spark, small_corpus, tmp_path,
                                          monkeypatch, shape):
     """Every frontier snapshot holds distinct url_norm values, none of
     them in any earlier pages snapshot: the round that pops it applies
-    no dedup or seen check of its own. Its parent_seq ranges per
-    round_enqueued are disjoint and increasing, so parent_seq buckets
-    order the whole priority triple. Under a throttle it holds at most
+    no dedup or seen check of its own. In priority order, the round in
+    which each row's parent was fetched (seeds: -1) never decreases, so
+    parent_seq buckets follow the order the rows were enqueued in.
+    Under a throttle it holds at most
     k unmarked rows per host, and none are marked without one. Every
     frontier publishes its bucket counts — seeds, Spark and fastround
     writes, under both probe strategies and the throttle — so the
     ranker always receives them."""
     import wormpy_spark.plans.crawl as crawl_mod
+    from wormpy_spark.operators.frontier import SIBLING_BITS
     from wormpy_spark.sources.catalog import SnapshotCatalog
 
     calls = []  # (start, the counts the ranker received)
@@ -438,12 +579,12 @@ def test_every_frontier_is_admitted_once(spark, small_corpus, tmp_path,
 
     history = SnapshotCatalog(ckpt).read_manifest()["history"]
     fetched: set[str] = set()
+    fetch_round = {-1: -1}  # seq → the round that fetched it; seeds' parent
     n_frontiers = 0
     for rec in history:
-        fetched |= {
-            r["url_norm"]
-            for r in spark.read.parquet(rec["tables"]["pages"]).collect()
-        }
+        pages = spark.read.parquet(rec["tables"]["pages"]).collect()
+        fetched |= {r["url_norm"] for r in pages}
+        fetch_round.update((r["seq"], rec["round"]) for r in pages)
         if "frontier" not in rec["tables"]:
             continue
         rows = spark.read.parquet(rec["tables"]["frontier"]).collect()
@@ -451,13 +592,13 @@ def test_every_frontier_is_admitted_once(spark, small_corpus, tmp_path,
         n_frontiers += 1
         assert len(urls) == len(set(urls)), f"round {rec['round']}: duplicates"
         assert not fetched & set(urls), f"round {rec['round']}: already fetched"
-        spans: dict[int, list[int]] = {}
-        for row in rows:
-            spans.setdefault(row["round_enqueued"], []).append(row["parent_seq"])
-        ordered = [spans[k] for k in sorted(spans)]
-        assert all(
-            max(a) < min(b) for a, b in zip(ordered, ordered[1:])
-        ), f"round {rec['round']}: parent_seq ranges overlap"
+        parent_rounds = [
+            fetch_round[(prio >> SIBLING_BITS) - 1]
+            for prio in sorted(row["priority"] for row in rows)
+        ]
+        assert parent_rounds == sorted(parent_rounds), (
+            f"round {rec['round']}: enqueue rounds out of priority order"
+        )
         k = ADMISSION_SHAPES[shape].get("max_per_host_per_round")
         if k is None:
             assert not any(row["deferred"] for row in rows)
@@ -476,10 +617,12 @@ def test_every_frontier_is_admitted_once(spark, small_corpus, tmp_path,
 def test_resume_refuses_unadmitted_checkpoint(spark, small_corpus, tmp_path):
     """A checkpoint whose state lacks ``frontier_admitted`` was written
     by an engine that filtered at pop time, one whose frontier lacks
-    ``seq_bucket`` by an engine that left it out of throttled frontiers,
-    and one whose frontier lacks the ``deferred`` mark or whose state
-    lacks ``frontier_counts`` by an engine that throttled at pop time:
-    resuming any of them is refused."""
+    ``priority`` by an engine that kept the unpacked priority triple,
+    one whose frontier lacks ``seq_bucket`` by an engine that left it
+    out of throttled frontiers, and one whose frontier lacks the
+    ``deferred`` mark or whose state lacks ``frontier_counts`` by an
+    engine that throttled at pop time: resuming any of them is
+    refused."""
     import glob
     import json
     import os
@@ -518,7 +661,7 @@ def test_resume_refuses_unadmitted_checkpoint(spark, small_corpus, tmp_path):
     parts = glob.glob(os.path.join(manifest["tables"]["frontier"], "*.parquet"))
     assert parts
     originals = {part: pq.read_table(part) for part in parts}
-    for column in ("seq_bucket", "deferred"):
+    for column in ("priority", "seq_bucket", "deferred"):
         for part, table in originals.items():
             pq.write_table(table.drop([column]), part)
         with pytest.raises(ValueError, match=column):

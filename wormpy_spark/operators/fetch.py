@@ -46,6 +46,7 @@ from ..functions.extract import (
 )
 from ..functions.urlnorm import resolve_link
 from ..functions.urlnorm import is_pdf_path
+from ..operators.frontier import SIBLING_LIMIT
 from ..operators.politeness import MAX_RETRIES, politeness_delay
 
 SCRAPER_ID = 1
@@ -244,11 +245,13 @@ def make_fetch_extract(
     ``scope_base``: when set, each row additionally carries
     ``discovered_norm`` — sorted({normalize(l)}) restricted to the
     scope prefix, the reference's per-parent expansion set
-    (scraper.py:99-102; identical to plans/fastround.py:218-224) —
-    and the output schema is PAGES_SCHEMA_EXPAND. Normalization is
-    memoized per task: link batches repeat nav/boilerplate URLs
-    heavily, so unique-then-map cuts urlparse calls 10-30x (same trick
-    as functions.urlnorm.canonicalize_udf).
+    (scraper.py:99-102), which both round kinds expand — and the
+    output schema is PAGES_SCHEMA_EXPAND. A page whose set reaches
+    ``SIBLING_LIMIT`` entries raises: its sibling ranks would not fit
+    the frontier's packed priority (operators/frontier.py).
+    Normalization is memoized per task: link batches repeat
+    nav/boilerplate URLs heavily, so unique-then-map cuts urlparse
+    calls 10-30x (same trick as functions.urlnorm.canonicalize_udf).
 
     ``probe_skip_bc``: broadcast frozenset of probe-skip URLs (the
     suspicious image/* set, P5/P6). When given, those URLs are dropped
@@ -301,7 +304,7 @@ def make_fetch_extract(
             if scope_base is not None:
                 for o in rows:
                     links = o["discovered_urls"] or []
-                    o["discovered_norm"] = sorted(
+                    o["discovered_norm"] = found = sorted(
                         {
                             n
                             for n in (_norm(l) for l in links)
@@ -309,6 +312,13 @@ def make_fetch_extract(
                             and (skip is None or n not in skip)
                         }
                     )
+                    if len(found) >= SIBLING_LIMIT:
+                        # sibling ranks run 1..len: one more would spill
+                        # into the parent bits of the frontier's priority
+                        raise ValueError(
+                            f"{o['url_norm']}: {len(found)} in-scope links; a "
+                            f"page may expand to at most {SIBLING_LIMIT - 1}"
+                        )
             arrays = [
                 pa.array([o[name] for o in rows], type=typ)
                 for name, typ in fields

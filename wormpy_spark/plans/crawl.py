@@ -24,7 +24,8 @@ job over the whole frontier):
 
     frontier → unmarked rows (the marked ones are re-admitted with the
                next round's expansions)
-             → global seq on (round, parent_seq, sibling_rank) (O1-O4):
+             → global seq in priority order (O1-O4; the packed
+               (parent_seq, sibling_rank) of operators/frontier.py):
                row_number within seq_bucket + offsets from the
                published counts (no job of its own)
              → budget cut seq < B (P9/O7)
@@ -89,10 +90,12 @@ from ..operators.fetch import (
 )
 from ..operators.frontier import (
     FRONTIER_SCHEMA_V2,
-    PRIORITY_COLS,
+    SEQ_LIMIT,
+    SIBLING_LIMIT,
     assign_global_seq,
     dedup_within_round,
     expand_frontier,
+    priority,
     seq_bucket_col,
 )
 from ..operators.politeness import SCHEDULE_SCHEMA, make_schedule_fn
@@ -107,8 +110,6 @@ from .fastround import (
     write_frontier_parquet,
     write_pages_parquet,
 )
-
-SEEN_SCHEMA = "url_hash long, url_norm string"
 
 # max suspicious-image rows collectable for the HEAD-probe skip set;
 # above it admission runs the probe semi-join instead. Read at call
@@ -135,10 +136,23 @@ class CrawlConfig:
     # reorders, so the throttle is opt-in (SURVEY.md §2.7-T1).
     max_per_host_per_round: int | None = None
     # frontiers at or below this row count run the whole round driver-
-    # side (plans/fastround.py) — one Spark job instead of ~4, killing
-    # the fixed per-round scheduling floor for the tiny head/tail
-    # rounds every crawl has. 0 disables (parity tests compare paths).
+    # side (plans/fastround.py): one Spark job, not a Spark round's
+    # several, for the tiny head/tail rounds every crawl has. 0
+    # disables (parity tests compare paths).
     fast_round_max: int = 4096
+
+    def __post_init__(self):
+        # a zero throttle defers every row and an empty round ends the
+        # crawl, so a bad value would end it silently after round 0
+        if self.max_per_host_per_round is not None and self.max_per_host_per_round < 1:
+            raise ValueError("max_per_host_per_round must be at least 1 (or None)")
+        if not 0 <= self.budget < SEQ_LIMIT:
+            # seq < budget must fit the frontier's packed priority
+            raise ValueError(f"budget must be in [0, {SEQ_LIMIT})")
+        if self.fast_round_max < 0:
+            raise ValueError("fast_round_max must be at least 0")
+        if self.max_rounds < 1:
+            raise ValueError("max_rounds must be at least 1")
 
 
 @dataclass
@@ -283,16 +297,21 @@ def run_crawl(
     sitemap_urls: list[str] = []
     metrics_rows: list[dict] = []
 
+    def read_pages(rounds_list: list[int]) -> DataFrame:
+        """The pages snapshots of ``rounds_list``, read with their known
+        schema (no footer/schema-inference job)."""
+        if not rounds_list:
+            return _empty(spark, PAGES_SCHEMA)
+        return spark.read.schema(PAGES_SCHEMA).parquet(
+            *[catalog.table_path("pages", rr) for rr in sorted(set(rounds_list))]
+        )
+
     def seen_from_pages(rounds_list: list[int]) -> DataFrame:
         """The seen set IS the processed pages' keys (J3): read them
         column-pruned from the per-round pages snapshots instead of
         rewriting an ever-growing seen table every round (O(total)
-        write per round → O(delta)); the known schema skips the
-        footer/schema-inference job."""
-        if not rounds_list:
-            return _empty(spark, SEEN_SCHEMA)
-        paths = [f"{catalog.root}/pages/snap-{rr:06d}" for rr in sorted(set(rounds_list))]
-        return spark.read.schema(PAGES_SCHEMA).parquet(*paths).select(
+        write per round → O(delta))."""
+        return read_pages(rounds_list).select(
             F.xxhash64("url_norm").alias("url_hash"), "url_norm"
         )
 
@@ -306,7 +325,7 @@ def run_crawl(
         for i in range(n_part)
     ]
     defer_mark = F.lit(False) if config.max_per_host_per_round is None else (
-        F.row_number().over(Window.partitionBy("host").orderBy(*PRIORITY_COLS))
+        F.row_number().over(Window.partitionBy("host").orderBy("priority"))
         > config.max_per_host_per_round
     )
 
@@ -319,8 +338,8 @@ def run_crawl(
     ) -> DataFrame:
         """The one admission every expansion passes, once, so a round
         pops its frontier as-is (module docstring); the seeds are
-        admitted on the driver instead (``admit_seeds``). ``cand`` is in
-        scope (P4) and canonical already.
+        admitted on the driver instead (``admit_seeds``). ``cand``:
+        ``(url_norm, priority)`` rows, in scope (P4) and canonical.
 
         ``probe_filter``: apply the P5/P6 probe here, as a semi-join
         against the probe table. Off only where the fetch kernel already
@@ -333,11 +352,7 @@ def run_crawl(
         0, so the buckets follow the whole priority order.
         ``deferred`` marks the rows past a host's first k in priority
         order: the rows a pop-time window over this frontier would defer."""
-        # ``url`` is url_norm verbatim past admission: drop the copy
-        # BEFORE the dedup exchange (the round's biggest shuffle — with
-        # ~300 outlinks/page the raw candidate stream is ~50x its
-        # distinct set) and re-alias it at the end
-        f = dedup_within_round(cand.drop("url"))                   # J2
+        f = dedup_within_round(cand)                                # J2
         f = (
             f.withColumn("host", host_udf(F.col("url_norm")))
             .withColumn("url_hash", F.xxhash64(F.col("url_norm")))  # J1 key
@@ -363,9 +378,7 @@ def run_crawl(
         if robots_filter is not None:
             f = f.filter(robots_filter(F.col("url_norm")))
         return f.select(
-            F.col("url_norm").alias("url"),
-            "round_enqueued", "parent_seq", "sibling_rank",
-            "url_norm", "host", "host_shard",
+            "url_norm", "priority", "host", "host_shard",
             seq_bucket_col(*parents, n_part).alias("seq_bucket"),
             defer_mark.alias("deferred"),
         )
@@ -420,9 +433,10 @@ def run_crawl(
         pending_round = state.get("expansion_pending")
         if pending_round is None:
             frontier = catalog.read(spark, "frontier")
-            # older writers left seq_bucket out of throttled frontiers,
-            # and throttled at pop time without publishing counts
-            missing = [c for c in ("seq_bucket", "deferred") if c not in frontier.columns]
+            # older writers packed no priority, left seq_bucket out of
+            # throttled frontiers, and throttled at pop time without
+            # publishing counts
+            missing = [c for c in ("priority", "seq_bucket", "deferred") if c not in frontier.columns]
             if "frontier_counts" not in state:
                 missing.append("frontier_counts")
             if missing:
@@ -439,10 +453,7 @@ def run_crawl(
             # the eager path would have run. Snapshot pages carry no
             # kernel-filtered discovered_norm, so the probe applies.
             frontier, _, counts = write_frontier(pending_round, _admit(
-                expand_frontier(
-                    catalog.read(spark, "pages"), base,
-                    next_round=pending_round + 1,
-                ),
+                expand_frontier(catalog.read(spark, "pages"), base),
                 seen_from_pages(catalog.rounds()), processed,
                 probe_filter=True,
                 parents=(processed - metrics_rows[-1]["fetched"], processed),
@@ -455,19 +466,24 @@ def run_crawl(
     else:
         start_round = 0
         processed = 0
-        seed_rows = [(base, 0, -1, 0, base)]
+        seed_rows = [(base, priority(-1, 0))]
         if config.discovery and sitemaps is not None:
             sitemap_urls = sitemap.sitemap_urls(sitemaps, base)
+            if len(sitemap_urls) + 1 >= SIBLING_LIMIT:
+                raise ValueError(
+                    f"{len(sitemap_urls) + 1} seeds; a crawl may seed at "
+                    f"most {SIBLING_LIMIT - 1}"
+                )
             # sorted(set(...)) seeding order (sitemap_parser.py:22,
             # main.py:52-58): base first, then sitemap URLs by rank.
             # Seeds are the only rows canonicalized and scope-filtered
             # (P4) here (driver-side, handful of rows); expansions
             # arrive pre-canonicalized and in scope.
             seed_rows += [
-                (u, 0, -1, i + 1, normalize_url(u))
+                (normalize_url(u), priority(-1, i + 1))
                 for i, u in enumerate(sitemap_urls)
             ]
-            seed_rows = [row for row in seed_rows if row[4].startswith(base)]
+            seed_rows = [row for row in seed_rows if row[0].startswith(base)]
         # admitted once, here, whatever kind round 0 is
         frontier_rows = admit_seeds(seed_rows, web, robots_cache_obj)
         seen_set = set()
@@ -563,9 +579,7 @@ def run_crawl(
             eligible = frontier.filter(~F.col("deferred"))
             deferred = None
             if config.max_per_host_per_round is not None:
-                deferred = frontier.filter(F.col("deferred")).select(
-                    "url", "round_enqueued", "parent_seq", "sibling_rank", "url_norm"
-                )
+                deferred = frontier.filter(F.col("deferred")).select("url_norm", "priority")
             seqd, n_eligible = assign_global_seq(eligible, processed, counts)
             t_seq = time.time()
             if n_eligible == 0:
@@ -577,7 +591,7 @@ def run_crawl(
 
             # only the columns the fetch kernel consumes cross the exchange
             # and the Arrow boundary (mapInPandas ships every input column):
-            # url/priority/seq_bucket are dead past this point
+            # priority/seq_bucket are dead past this point
             due = due.select("url_norm", "seq", "round", "host", "host_shard")
 
             # GET-model fetch join + one Arrow extraction pass (S4-S7, F1-F3).
@@ -642,19 +656,12 @@ def run_crawl(
             # pages cache) keeps the lineage rooted in parquet, so a cache
             # eviction can never re-trigger the fetch kernel.
             pages_rounds.append(r)
-            delta = spark.read.schema(PAGES_SCHEMA).parquet(pages_r_path).select(
-                F.xxhash64("url_norm").alias("url_hash"), "url_norm"
-            )
             if seen_cache is not None:
-                seen_next = seen_cache.unionByName(delta)
-            elif len(pages_rounds) > 1:
-                # first Spark round after fastround/resume: fold the earlier
-                # snapshots in once; every later round unions only its delta
-                seen_next = seen_from_pages(
-                    [rr for rr in pages_rounds if rr != r]
-                ).unionByName(delta)
+                seen_next = seen_cache.unionByName(seen_from_pages([r]))
             else:
-                seen_next = delta
+                # first Spark round (after fastround/resume too): fold every
+                # snapshot in once; every later round unions only its delta
+                seen_next = seen_from_pages(pages_rounds)
             processed_next = processed + due_count
             # After the crawl's LAST round (budget exhausted or max_rounds
             # reached) the expansion would build a frontier no round ever
@@ -681,7 +688,7 @@ def run_crawl(
             if final_round:
                 frontier_path = None
             else:
-                cand = expand_frontier(pages_r, base, next_round=r + 1)
+                cand = expand_frontier(pages_r, base)
                 if deferred is not None:
                     cand = deferred.unionByName(cand)
                 sc.setJobDescription(f"crawl r{r}: expand+admit+frontier-write")
@@ -732,15 +739,10 @@ def run_crawl(
     # the loop may end while still in fast mode (seen_set-resident):
     # the authoritative seen set is always derivable from the pages
     # snapshots, for fast and Spark rounds alike
-    seen = seen_from_pages(sorted(set(pages_rounds)))
+    seen = seen_from_pages(pages_rounds)
 
     # assemble results across rounds
-    if pages_rounds:
-        pages = spark.read.schema(PAGES_SCHEMA).parquet(
-            *[f"{catalog.root}/pages/snap-{rr:06d}" for rr in sorted(set(pages_rounds))]
-        )
-    else:
-        pages = _empty(spark, PAGES_SCHEMA)
+    pages = read_pages(pages_rounds)
     order = pages.select("seq", "url_norm", "round").orderBy("seq")
 
     # politeness clocks (T1/T2) — derived ONCE from the pages snapshots

@@ -2,14 +2,14 @@
 
 A BSP crawl's first rounds are tiny (the seed round fetches 1 URL, the
 second a few hundred) yet each pays the same fixed per-round cost as an
-80k-URL round: ~4 blocking Spark actions of job-scheduling / Python-
-worker / parquet-commit latency (~6s/round measured — the dominant
-serial term in the N→4N scaling analysis, BENCH/BASELINE.md). When the
-whole frontier fits in the driver's hand (≤ CrawlConfig.fast_round_max
-rows), this module executes the ENTIRE round driver-side — one Spark
-job remains (the broadcast-semi web lookup + the same Arrow extraction
-kernel the Spark path runs, returning only the small extracted rows),
-everything else is plain Python over a few hundred rows.
+80k-URL round: several blocking Spark jobs of job-scheduling / Python-
+worker / parquet-commit latency (the fetch, the pages write, the
+expansion's admission and frontier write). When the whole frontier
+fits in the driver's hand (≤ CrawlConfig.fast_round_max rows), this
+module executes the ENTIRE round driver-side — one Spark job remains
+(the broadcast-semi web lookup + the same Arrow extraction kernel the
+Spark path runs, returning only the small extracted rows), everything
+else is plain Python over a few hundred rows.
 
 Parity obligations (tested: tests/test_golden.py runs entirely through
 this path with default config, and test_properties.py asserts
@@ -53,7 +53,7 @@ import pandas as pd
 from ..functions.urlnorm import get_domain, is_suspicious_url
 from ..functions.xxhash import pmod, xxhash64_str
 from ..operators.fetch import PAGES_SCHEMA_EXPAND, make_fetch_extract
-from ..operators.frontier import seq_bucket
+from ..operators.frontier import priority, seq_bucket
 
 PAGES_ARROW_SCHEMA = pa.schema(
     [
@@ -75,11 +75,8 @@ PAGES_ARROW_SCHEMA = pa.schema(
 
 FRONTIER_ARROW_SCHEMA = pa.schema(
     [
-        ("url", pa.string()),
-        ("round_enqueued", pa.int32()),
-        ("parent_seq", pa.int64()),
-        ("sibling_rank", pa.int32()),
         ("url_norm", pa.string()),
+        ("priority", pa.int64()),
         # FRONTIER_SCHEMA_V2 admission-derived columns (see
         # operators/frontier.py) — python-side xxhash64_str is
         # parity-tested against F.xxhash64
@@ -106,15 +103,15 @@ def write_pages_parquet(path: str, rows: list[dict]) -> None:
 
 def admit_seeds(rows: list[tuple], web, robots_cache) -> list[tuple]:
     """The seeds' one admission, on the driver, before round 0 of either
-    kind. ``rows``: FRONTIER_SCHEMA tuples, canonical and in scope (P4).
-    Applies first occurrence by priority (J2), the P5/P6 probe and the
-    robots cache; seen is empty (J1). A suspicious seed is skipped when
-    its content type in ``web`` is image/*: one literal-IN lookup, run
-    only when some seed is suspicious. Returns the admitted rows in
-    priority order, ``url`` = url_norm as ``_admit`` writes it."""
-    firsts: dict[str, tuple] = {}
-    for row in sorted(rows, key=lambda row: row[1:4]):
-        firsts.setdefault(row[4], row)
+    kind. ``rows``: FRONTIER_SCHEMA ``(url_norm, priority)`` tuples,
+    canonical and in scope (P4). Applies first occurrence by priority
+    (J2), the P5/P6 probe and the robots cache; seen is empty (J1). A
+    suspicious seed is skipped when its content type in ``web`` is
+    image/*: one literal-IN lookup, run only when some seed is
+    suspicious. Returns the admitted rows in priority order."""
+    firsts: dict[str, int] = {}
+    for un, prio in sorted(rows, key=lambda row: row[1]):
+        firsts.setdefault(un, prio)
     suspicious = [un for un in firsts if is_suspicious_url(un)]
     skipped = set()
     if suspicious:
@@ -126,23 +123,23 @@ def admit_seeds(rows: list[tuple], web, robots_cache) -> list[tuple]:
             .collect()
         }
     return [
-        (un, *row[1:4], un)
-        for un, row in firsts.items()
+        (un, prio)
+        for un, prio in firsts.items()
         if un not in skipped and (robots_cache is None or robots_cache.allows(un))
     ]
 
 
 def throttle_marks(rows: list[tuple], max_per_host: int | None) -> list[bool]:
-    """The per-host throttle over FRONTIER_SCHEMA tuples in priority
-    order: True on each row past its host's first ``max_per_host``, all
-    False without a throttle — the ``deferred`` mark ``_admit`` stamps
-    with a row_number window (plans/crawl.py)."""
+    """The per-host throttle over ``(url_norm, priority)`` tuples in
+    priority order: True on each row past its host's first
+    ``max_per_host``, all False without a throttle — the ``deferred``
+    mark ``_admit`` stamps with a row_number window (plans/crawl.py)."""
     if max_per_host is None:
         return [False] * len(rows)
     taken: Counter = Counter()
     marks = []
-    for row in rows:
-        host = get_domain(row[4])
+    for un, _ in rows:
+        host = get_domain(un)
         taken[host] += 1
         marks.append(taken[host] > max_per_host)
     return marks
@@ -152,23 +149,21 @@ def frontier_table(
     rows: list[tuple], n_host_shards: int,
     parents: tuple[int, int], n_buckets: int, max_per_host: int | None,
 ) -> tuple[pa.Table, dict[int, int]]:
-    """rows: (url, round_enqueued, parent_seq, sibling_rank, url_norm)
-    in priority order, as a FRONTIER_SCHEMA_V2 table: the derived
-    columns (host, host_shard, seq_bucket over the parents' seq range
-    ``parents``, the throttle's ``deferred`` mark) are computed here so
-    the Spark loop never re-derives them. Also returns the unmarked rows
-    per seq_bucket, as ``_admit``'s write publishes them
-    (plans/crawl.py)."""
-    hosts = [get_domain(r[4]) for r in rows]
+    """rows: ``(url_norm, priority)`` in priority order, as a
+    FRONTIER_SCHEMA_V2 table: the derived columns (host, host_shard,
+    seq_bucket over the parents' seq range ``parents``, the throttle's
+    ``deferred`` mark) are computed here so the Spark loop never
+    re-derives them. Also returns the unmarked rows per seq_bucket, as
+    ``_admit``'s write publishes them (plans/crawl.py)."""
+    hosts = [get_domain(un) for un, _ in rows]
     cols: dict[str, list] = {
-        name: [r[i] for r in rows] for i, name in enumerate(
-            ("url", "round_enqueued", "parent_seq", "sibling_rank", "url_norm")
-        )
+        "url_norm": [un for un, _ in rows],
+        "priority": [prio for _, prio in rows],
+        "host": hosts,
+        "host_shard": [pmod(xxhash64_str(h), n_host_shards) for h in hosts],
+        "seq_bucket": [seq_bucket(prio, *parents, n_buckets) for _, prio in rows],
+        "deferred": throttle_marks(rows, max_per_host),
     }
-    cols["host"] = hosts
-    cols["host_shard"] = [pmod(xxhash64_str(h), n_host_shards) for h in hosts]
-    cols["seq_bucket"] = [seq_bucket(r[2], *parents, n_buckets) for r in rows]
-    cols["deferred"] = throttle_marks(rows, max_per_host)
     counts = Counter(b for b, d in zip(cols["seq_bucket"], cols["deferred"]) if not d)
     return pa.Table.from_pydict(cols, schema=FRONTIER_ARROW_SCHEMA), dict(counts)
 
@@ -181,7 +176,7 @@ def write_frontier_parquet(path: str, table: pa.Table) -> None:
 @dataclass
 class FastRound:
     pages: list[dict]
-    frontier_next: list[tuple]  # FRONTIER_SCHEMA tuples in priority order
+    frontier_next: list[tuple]  # (url_norm, priority) in priority order
     n_eligible: int
     due_count: int
     n_errors: int
@@ -204,9 +199,9 @@ def run_fast_round(
 ) -> FastRound:
     """One crawl round over a driver-resident frontier.
 
-    ``frontier_rows``: admitted (url, round_enqueued, parent_seq,
-    sibling_rank, url_norm) tuples in priority order — the seeds
-    (``admit_seeds``) or a previous fast round's ``frontier_next``.
+    ``frontier_rows``: admitted ``(url_norm, priority)`` tuples in
+    priority order — the seeds (``admit_seeds``) or a previous fast
+    round's ``frontier_next``.
     Mutates ``seen_set`` with this round's processed keys (J3), exactly
     as the Spark path's seen derivation would.
     """
@@ -231,10 +226,10 @@ def run_fast_round(
     spark = web_fetch.sparkSession
     due_pdf = pd.DataFrame(
         {
-            "url_norm": [row[4] for row in due],
+            "url_norm": [un for un, _ in due],
             "seq": range(processed, processed + due_count),
             "round": r,
-            "host": [get_domain(row[4]) for row in due],
+            "host": [get_domain(un) for un, _ in due],
         }
     )
     due_pdf["host_shard"] = [
@@ -278,34 +273,30 @@ def run_fast_round(
     # The probe-skip (P5/P6) and robots filters apply at ADMISSION, as
     # in the Spark path (plans/crawl.py ``_admit``): a dropped URL never
     # gets a seq on either path, so pages/order/seen are identical.
-    # deferred rows (round_enqueued <= r) sort before every expansion
+    # deferred rows (earlier parents) sort before every expansion
     frontier_next: list[tuple] = list(deferred)
     if config.discovery:
-        best: dict[str, tuple] = {}
+        # pages run in seq order and each page's set is sorted, so the
+        # first occurrence of a URL has its least priority, and the
+        # dict's insertion order is priority order
+        best: dict[str, int] = {}
         for p in pages:
             if p["error"] is not None:
                 continue
             # the kernel's per-parent set: normalized, scope-filtered,
             # probe-skipped, distinct and sorted
             for pos, nn in enumerate(p["discovered_norm"]):
-                cand = (nn, r + 1, p["seq"], pos + 1, nn)
-                prev = best.get(nn)
-                if prev is None or cand[1:4] < prev[1:4]:
-                    best[nn] = cand
+                best.setdefault(nn, priority(p["seq"], pos + 1))
         # a URL still deferred keeps its earlier-priority deferred copy:
         # a Spark round pops a handed-over frontier without a J2 pass
-        deferred_urls = {row[4] for row in deferred}
-        admitted = sorted(
-            (
-                c
-                for un, c in best.items()
-                if un not in seen_set
-                and un not in deferred_urls
-                and (robots_cache is None or robots_cache.allows(un))
-            ),
-            key=lambda row: row[1:4],
-        )
-        frontier_next += admitted
+        deferred_urls = {un for un, _ in deferred}
+        frontier_next += [
+            (un, prio)
+            for un, prio in best.items()
+            if un not in seen_set
+            and un not in deferred_urls
+            and (robots_cache is None or robots_cache.allows(un))
+        ]
     t_expand = time.time()
 
     return FastRound(
