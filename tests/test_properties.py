@@ -338,6 +338,18 @@ def test_driver_fast_path_equals_spark_path(spark, small_corpus, monkeypatch):
     assert len(mixed[3]) > len(fast_rounds), "no Spark round ran"
     assert mixed == throttled_spark
 
+    # every page's lineage shard is Spark's hash of its host, whichever
+    # kind of round fetched it
+    for outputs in (spark_path, all_fast, mixed):
+        pages = list(outputs[2].values())
+        want = {
+            r["host"]: r["shard"]
+            for r in spark.createDataFrame([(p["host"],) for p in pages], "host string")
+            .select("host", F.pmod(F.xxhash64("host"), F.lit(64)).alias("shard"))
+            .collect()
+        }
+        assert [p["host_shard"] for p in pages] == [want[p["host"]] for p in pages]
+
 
 def test_assign_global_seq_matches_sorted_reference(spark):
     """The dense global sequence equals a plain Python sort of the
@@ -507,6 +519,40 @@ def test_seeding_refuses_more_seeds_than_priority_holds(spark, small_corpus, mon
         web.unpersist()
 
 
+@pytest.mark.parametrize("failure", ["seeding", "round-1 commit"])
+def test_crawl_releases_its_caches_when_it_raises(spark, small_corpus,
+                                                   monkeypatch, failure):
+    """A crawl that raises, before round 0 or mid-crawl, leaves no
+    cached table behind in the session: not the web it prepared itself,
+    nor its seen or pages caches."""
+    import wormpy_spark.plans.crawl as crawl_mod
+    from wormpy_spark.sources import sitemap
+    from wormpy_spark.sources.catalog import SnapshotCatalog
+
+    if failure == "seeding":
+        monkeypatch.setattr(crawl_mod, "SIBLING_LIMIT", 3)
+        monkeypatch.setattr(sitemap, "sitemap_urls",
+                            lambda sitemaps, base: [f"{base}/a", f"{base}/b"])
+        match, cfg = "3 seeds", {}
+    else:
+        stock = SnapshotCatalog.commit
+
+        def failing_commit(self, round_id, *args, **kwargs):
+            if round_id == 1:
+                raise RuntimeError("commit failed")
+            return stock(self, round_id, *args, **kwargs)
+
+        monkeypatch.setattr(SnapshotCatalog, "commit", failing_commit)
+        match, cfg = "commit failed", {"fast_round_max": 0}
+    tables = corpus_to_spark(spark, small_corpus)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises((ValueError, RuntimeError), match=match):
+        run_crawl(spark, tables["web"], CrawlConfig(base_url="https://host0.test", **cfg),
+                  sitemaps=tables["sitemaps"])
+    assert persistent().size() == before
+
+
 @pytest.mark.parametrize(
     "field, bad, ok",
     [
@@ -621,8 +667,9 @@ def test_resume_refuses_unadmitted_checkpoint(spark, small_corpus, tmp_path):
     one whose frontier lacks ``seq_bucket`` by an engine that left it
     out of throttled frontiers, and one whose frontier lacks the
     ``deferred`` mark or whose state lacks ``frontier_counts`` by an
-    engine that throttled at pop time: resuming any of them is
-    refused."""
+    engine that throttled at pop time, and one recorded with another
+    host shard count, whose pages' ``host_shard`` values would mix two
+    counts: resuming any of them is refused."""
     import glob
     import json
     import os
@@ -667,6 +714,15 @@ def test_resume_refuses_unadmitted_checkpoint(spark, small_corpus, tmp_path):
         with pytest.raises(ValueError, match=column):
             run_crawl(spark, tables["web"], CrawlConfig(**cfg, resume=True),
                       sitemaps=tables["sitemaps"])
+
+    for part, table in originals.items():
+        pq.write_table(table, part)
+    manifest["state"]["n_host_shards"] = 32
+    with open(catalog._manifest_path(), "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="n_host_shards=32"):
+        run_crawl(spark, tables["web"], CrawlConfig(**cfg, resume=True),
+                  sitemaps=tables["sitemaps"])
 
 
 def test_prepared_compressed_web_parity(spark, small_corpus):

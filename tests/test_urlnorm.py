@@ -5,11 +5,14 @@ twins of each predicate."""
 
 from __future__ import annotations
 
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from wormpy_spark.functions.extract import extract_links, extract_text
 from wormpy_spark.functions.urlnorm import (
     canonicalize_udf,
+    domain_col,
     get_domain,
     is_image_file_extension,
     is_suspicious_url,
@@ -125,25 +128,28 @@ def test_spark_predicate_parity(spark):
         assert row["media"] == is_image_file_extension(urlparse(row["url"]).path)
 
 
-# --- pure-Python XXH64 must equal Spark's xxhash64 (fast-path sharding) --------
-def test_xxhash64_spark_parity(spark):
-    import random
-    import string
-
-    from wormpy_spark.functions.xxhash import pmod, xxhash64_str
-
-    random.seed(1234)
-    samples = ["", "a", "host0.test", "https://host0.test/p/1",
-               "ünïcødé-✓", "x" * 31, "y" * 32, "z" * 100]
-    samples += [
-        "".join(random.choices(string.printable, k=random.randint(0, 200)))
-        for _ in range(60)
-    ]
-    df = spark.createDataFrame([(s,) for s in samples], "s string").select(
-        "s",
-        F.xxhash64("s").alias("h"),
-        F.pmod(F.xxhash64("s"), F.lit(64)).alias("m"),
-    )
-    for r in df.collect():
-        assert xxhash64_str(r["s"]) == r["h"], repr(r["s"])
-        assert pmod(xxhash64_str(r["s"]), 64) == r["m"], repr(r["s"])
+# --- P2's column twin: the host admission derives, JVM-side ----------------
+@given(st.lists(st.text(), max_size=30))
+@example([
+    "host0.test/p/1",                    # no scheme
+    "https://host0.test:8080/p",         # a port
+    "https://user:pw@host0.test/p",      # userinfo
+    "https:///p", "https://",            # an empty netloc
+    "https://host0.test//p", "https:////p",  # a // path
+    "https://hôst.test/ünï/✓",           # non-ASCII
+])
+@settings(max_examples=30, deadline=None)
+def test_domain_col_matches_get_domain(spark, texts):
+    """Over normalize_url of arbitrary text, the column expression
+    equals get_domain (urlparse's netloc, port included) row by row;
+    inputs urlparse itself rejects are left out."""
+    urls = []
+    for t in texts:
+        try:
+            u = normalize_url(t)
+            urls.append((u, get_domain(u)))
+        except ValueError:
+            pass
+    df = spark.createDataFrame([(u,) for u, _ in urls], "u string")
+    got = [r["h"] for r in df.select(domain_col(F.col("u")).alias("h")).collect()]
+    assert got == [h for _, h in urls]

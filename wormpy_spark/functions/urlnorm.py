@@ -107,13 +107,12 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(mapping)
 
 
-@pandas_udf(StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    """P2: netloc incl. port — Spark's parse_url drops the port, so the
-    reference's netloc semantics require this UDF. Batch-memoized."""
-    uniq = pd.Series(urls.dropna().unique())
-    mapping = dict(zip(uniq, uniq.map(lambda u: urlparse(u).netloc)))
-    return urls.map(mapping)
+def domain_col(url_norm_col: Column) -> Column:
+    """P2 as a column expression (JVM-side, no Python): get_domain of a
+    CANONICAL url (normalize_url output). Its netloc, port included
+    (Spark's parse_url drops the port), runs from the first "://" to
+    the next "/"."""
+    return F.regexp_extract(url_norm_col, r"^[^:]*://([^/]*)", 1)
 
 
 def media_extension_pred(url_col: Column) -> Column:

@@ -35,6 +35,8 @@ import zlib
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from ..functions.extract import (
     DYNAMIC_THRESHOLD,
@@ -58,6 +60,17 @@ PAGES_SCHEMA = (
     "attempts int, fetch_failed_first boolean"
 )
 
+# Per-partition lineage (north_rule): each page row names the host
+# shard that fetched it. Derived once per round, where the round builds
+# the due rows it hands to the fetch kernel (plans/crawl.py, fastround).
+HOST_SHARDS = 64
+
+
+def host_shard_col() -> Column:
+    """``host_shard`` of a due row: its ``host`` hashed into HOST_SHARDS."""
+    return F.pmod(F.xxhash64("host"), F.lit(HOST_SHARDS)).cast("int").alias("host_shard")
+
+
 # Crawl-internal variant: adds the pre-canonicalized expansion column
 # (scope-filtered, normalized, per-parent distinct+sorted — exactly the
 # per_parent set the reference builds at scraper.py:99-102). Computing
@@ -72,7 +85,7 @@ PAGES_SCHEMA_EXPAND = PAGES_SCHEMA + ", discovered_norm array<string>"
 # Arrow field layout matching PAGES_SCHEMA — the kernel yields
 # RecordBatches built column-wise with these exact types (mapInArrow
 # validates the schema; map values are nullable: title may be None).
-def _pages_arrow_fields(expand: bool):
+def pages_arrow_fields(expand: bool):
     import pyarrow as pa
 
     fields = [
@@ -275,7 +288,7 @@ def make_fetch_extract(
 
     from ..functions.urlnorm import normalize_url
 
-    fields = _pages_arrow_fields(expand=scope_base is not None)
+    fields = pages_arrow_fields(expand=scope_base is not None)
     names = [n for n, _ in fields]
     out_schema = pa.schema(fields)
 

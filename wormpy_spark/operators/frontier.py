@@ -63,16 +63,17 @@ def priority_col(parent_seq: Column, sibling_rank: Column) -> Column:
 FRONTIER_SCHEMA = "url_norm string, priority long"
 
 # v2: admission-derived columns ride the frontier file so no round ever
-# re-derives them — host (a pandas-UDF urlparse pass over the engine's
-# biggest row stream) and host_shard are computed exactly once, at
-# admission (plans/crawl.py ``_admit``, fastround's pyarrow writer),
-# with seq_bucket, the parent_seq range bucket the round's seq ranks
-# by, and deferred, the per-host throttle's mark (false on every row
-# without a throttle). Every frontier the crawl writes is v2; only seeds
-# are built as v1 rows, and they are admitted on the driver (fastround's
+# re-derives them — host (every page row carries it, and the throttle
+# window partitions on it) is computed exactly once, at admission
+# (plans/crawl.py ``_admit``, fastround's pyarrow writer), with
+# seq_bucket, the parent_seq range bucket the round's seq ranks by, and
+# deferred, the per-host throttle's mark (false on every row without a
+# throttle). Every frontier the crawl writes is v2; only seeds are
+# built as v1 rows, and they are admitted on the driver (fastround's
 # ``admit_seeds``, then its v2 table builder) before any round reads
-# them.
-FRONTIER_SCHEMA_V2 = FRONTIER_SCHEMA + ", host string, host_shard int, seq_bucket int, deferred boolean"
+# them. A page's host_shard is not stored here: each round derives it
+# over its due rows (operators/fetch.py ``host_shard_col``).
+FRONTIER_SCHEMA_V2 = FRONTIER_SCHEMA + ", host string, seq_bucket int, deferred boolean"
 
 
 def seq_bucket(prio: int, lo: int, hi: int, n_buckets: int) -> int:

@@ -8,7 +8,7 @@ rebuild go through one step, ``_admit``:
 
     candidates (in scope, P4: expand_frontier / the fetch kernel)
              → first-occurrence dedup by priority (J2 equivalence)
-             → host / host_shard, derived once (v2 frontier)
+             → host, derived once (v2 frontier)
              → ANTI JOIN seen (J1)
              → HEAD-model probe dropping suspicious image/* (P5/P6)
              → [robots filter — north_rule option]
@@ -63,8 +63,7 @@ lineage never grows; the global sequence is a per-seq_bucket rank
 plus bucket offsets (no one-task sort), driver arithmetic over the
 counts every frontier write publishes; the seen anti-join
 broadcasts the seen keys while they are small and shuffles above
-operators.seen.BROADCAST_SEEN_MAX; hosts shard by
-pmod(xxhash64(host), n_host_shards) and AQE splits skewed joins at
+operators.seen.BROADCAST_SEEN_MAX; AQE splits skewed joins at
 runtime.
 """
 
@@ -77,15 +76,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.urlnorm import (
-    host_udf,
-    normalize_url,
-    suspicious_pred,
-)
+from ..functions.urlnorm import domain_col, normalize_url, suspicious_pred
 from ..operators.fetch import (
+    HOST_SHARDS,
     PAGES_SCHEMA,
     PAGES_SCHEMA_EXPAND,
     deflate_bodies,
+    host_shard_col,
     make_fetch_extract,
 )
 from ..operators.frontier import (
@@ -127,7 +124,6 @@ class CrawlConfig:
     checkpoint_dir: str | None = None
     resume: bool = False
     max_rounds: int = 256
-    n_host_shards: int = 64
     # production politeness throttle: at most k fetches per host per
     # round; admission marks the excess rows ``deferred`` and they wait
     # for the next round with their priority preserved (not dropped),
@@ -354,14 +350,8 @@ def run_crawl(
         order: the rows a pop-time window over this frontier would defer."""
         f = dedup_within_round(cand)                                # J2
         f = (
-            f.withColumn("host", host_udf(F.col("url_norm")))
+            f.withColumn("host", domain_col(F.col("url_norm")))
             .withColumn("url_hash", F.xxhash64(F.col("url_norm")))  # J1 key
-            .withColumn(
-                "host_shard",
-                F.pmod(
-                    F.xxhash64(F.col("host")), F.lit(config.n_host_shards)
-                ).cast("int"),
-            )
         )
         f = anti_join_seen(f, seen, seen_count)                     # J1
         if probe_filter:
@@ -378,7 +368,7 @@ def run_crawl(
         if robots_filter is not None:
             f = f.filter(robots_filter(F.col("url_norm")))
         return f.select(
-            "url_norm", "priority", "host", "host_shard",
+            "url_norm", "priority", "host",
             seq_bucket_col(*parents, n_part).alias("seq_bucket"),
             defer_mark.alias("deferred"),
         )
@@ -407,100 +397,13 @@ def run_crawl(
     counts: dict[int, int] = {}
     frontier: DataFrame | None = None
 
-    if config.resume and catalog.latest_round() is not None:
-        state = catalog.state()
-        assert state["base"] == base, "resume with a different base URL"
-        ck_shards = state.get("n_host_shards")
-        if ck_shards is not None and ck_shards != config.n_host_shards:
-            # pages and frontier rows written before the resume carry
-            # host_shard under the old count; mixing counts would give
-            # one host two shard ids — refuse rather than corrupt
-            raise ValueError(
-                f"resume with n_host_shards={config.n_host_shards} but the "
-                f"checkpoint was written with {ck_shards}; use the same value"
-            )
-        if not state.get("frontier_admitted"):
-            # older writers left the probe/robots filters and J2 to pop
-            # time, and wrote v1 frontiers; no round re-applies them now
-            raise ValueError(
-                "the checkpoint's frontier was not admitted by this "
-                "engine's admission step; start the crawl afresh"
-            )
-        start_round = state["round"] + 1
-        processed = state["processed"]
-        sitemap_urls = state.get("sitemap_urls", [])
-        metrics_rows = state.get("metrics_rows", [])
-        pending_round = state.get("expansion_pending")
-        if pending_round is None:
-            frontier = catalog.read(spark, "frontier")
-            # older writers packed no priority, left seq_bucket out of
-            # throttled frontiers, and throttled at pop time without
-            # publishing counts
-            missing = [c for c in ("priority", "seq_bucket", "deferred") if c not in frontier.columns]
-            if "frontier_counts" not in state:
-                missing.append("frontier_counts")
-            if missing:
-                raise ValueError(
-                    f"the checkpoint lacks {', '.join(missing)}; start the crawl afresh"
-                )
-            # JSON keys are strings
-            counts = {int(b): n for b, n in state["frontier_counts"].items()}
-        elif processed < budget:
-            # the final committed round deferred its expansion (its
-            # frontier is read only by a resume like this one, with
-            # budget left): rebuild it deterministically from the committed
-            # pages snapshot — the same expansion, admission and write
-            # the eager path would have run. Snapshot pages carry no
-            # kernel-filtered discovered_norm, so the probe applies.
-            frontier, _, counts = write_frontier(pending_round, _admit(
-                expand_frontier(catalog.read(spark, "pages"), base),
-                seen_from_pages(catalog.rounds()), processed,
-                probe_filter=True,
-                parents=(processed - metrics_rows[-1]["fetched"], processed),
-            ))
-        # resume always re-enters on the Spark path (frontier/seen are
-        # snapshot-resident); tiny post-resume rounds still work, they
-        # just do not take the driver shortcut
-        frontier_rows = None
-        seen_set = None
-    else:
-        start_round = 0
-        processed = 0
-        seed_rows = [(base, priority(-1, 0))]
-        if config.discovery and sitemaps is not None:
-            sitemap_urls = sitemap.sitemap_urls(sitemaps, base)
-            if len(sitemap_urls) + 1 >= SIBLING_LIMIT:
-                raise ValueError(
-                    f"{len(sitemap_urls) + 1} seeds; a crawl may seed at "
-                    f"most {SIBLING_LIMIT - 1}"
-                )
-            # sorted(set(...)) seeding order (sitemap_parser.py:22,
-            # main.py:52-58): base first, then sitemap URLs by rank.
-            # Seeds are the only rows canonicalized and scope-filtered
-            # (P4) here (driver-side, handful of rows); expansions
-            # arrive pre-canonicalized and in scope.
-            seed_rows += [
-                (normalize_url(u), priority(-1, i + 1))
-                for i, u in enumerate(sitemap_urls)
-            ]
-            seed_rows = [row for row in seed_rows if row[0].startswith(base)]
-        # admitted once, here, whatever kind round 0 is
-        frontier_rows = admit_seeds(seed_rows, web, robots_cache_obj)
-        seen_set = set()
-        if not fast_round(frontier_rows):
-            # parent_seq -1 puts every seed in bucket 0 for any parents range
-            table, counts = frontier_table(
-                frontier_rows, config.n_host_shards, (0, 1), n_part,
-                config.max_per_host_per_round,
-            )
-            frontier = spark.createDataFrame(table, FRONTIER_SCHEMA_V2)
-
     pages_rounds: list[int] = catalog.rounds() if config.resume else []
     seen_cache = None  # persisted incremental seen set (guide §2.4: the
     # admission anti-join's seen side was re-derived from EVERY pages
     # snapshot every round — an O(total-seen) parquet re-read + re-hash
     # per round; the cache makes it O(delta): cached seen ∪ this
     # round's snapshot)
+    pages_r = seen_next = None  # the in-flight round's caches
 
     def commit(r: int, tables: dict[str, str], **extra) -> None:
         """Publish round r's snapshots with the resume state."""
@@ -511,7 +414,7 @@ def run_crawl(
             "budget": budget,
             "sitemap_urls": sitemap_urls,
             "metrics_rows": metrics_rows,
-            "n_host_shards": config.n_host_shards,
+            "n_host_shards": HOST_SHARDS,
             "frontier_admitted": True,
             **extra,
         })
@@ -519,8 +422,96 @@ def run_crawl(
     sc = spark.sparkContext
     # the rounds label their jobs; the caller's next jobs keep its own
     caller_desc = sc.getLocalProperty("spark.job.description")
-    r = start_round
     try:
+        if config.resume and catalog.latest_round() is not None:
+            state = catalog.state()
+            assert state["base"] == base, "resume with a different base URL"
+            ck_shards = state.get("n_host_shards")
+            if ck_shards is not None and ck_shards != HOST_SHARDS:
+                # pages written before the resume carry host_shard under the
+                # old count; mixing counts would give one host two shard
+                # ids — refuse rather than corrupt
+                raise ValueError(
+                    f"the checkpoint was written with n_host_shards={ck_shards}, "
+                    f"but this engine shards hosts by {HOST_SHARDS}; start the "
+                    "crawl afresh"
+                )
+            if not state.get("frontier_admitted"):
+                # older writers left the probe/robots filters and J2 to pop
+                # time, and wrote v1 frontiers; no round re-applies them now
+                raise ValueError(
+                    "the checkpoint's frontier was not admitted by this "
+                    "engine's admission step; start the crawl afresh"
+                )
+            start_round = state["round"] + 1
+            processed = state["processed"]
+            sitemap_urls = state.get("sitemap_urls", [])
+            metrics_rows = state.get("metrics_rows", [])
+            pending_round = state.get("expansion_pending")
+            if pending_round is None:
+                frontier = catalog.read(spark, "frontier")
+                # older writers packed no priority, left seq_bucket out of
+                # throttled frontiers, and throttled at pop time without
+                # publishing counts
+                missing = [c for c in ("priority", "seq_bucket", "deferred") if c not in frontier.columns]
+                if "frontier_counts" not in state:
+                    missing.append("frontier_counts")
+                if missing:
+                    raise ValueError(
+                        f"the checkpoint lacks {', '.join(missing)}; start the crawl afresh"
+                    )
+                # JSON keys are strings
+                counts = {int(b): n for b, n in state["frontier_counts"].items()}
+            elif processed < budget:
+                # the final committed round deferred its expansion (its
+                # frontier is read only by a resume like this one, with
+                # budget left): rebuild it deterministically from the committed
+                # pages snapshot — the same expansion, admission and write
+                # the eager path would have run. Snapshot pages carry no
+                # kernel-filtered discovered_norm, so the probe applies.
+                frontier, _, counts = write_frontier(pending_round, _admit(
+                    expand_frontier(catalog.read(spark, "pages"), base),
+                    seen_from_pages(catalog.rounds()), processed,
+                    probe_filter=True,
+                    parents=(processed - metrics_rows[-1]["fetched"], processed),
+                ))
+            # resume always re-enters on the Spark path (frontier/seen are
+            # snapshot-resident); tiny post-resume rounds still work, they
+            # just do not take the driver shortcut
+            frontier_rows = None
+            seen_set = None
+        else:
+            start_round = 0
+            processed = 0
+            seed_rows = [(base, priority(-1, 0))]
+            if config.discovery and sitemaps is not None:
+                sitemap_urls = sitemap.sitemap_urls(sitemaps, base)
+                if len(sitemap_urls) + 1 >= SIBLING_LIMIT:
+                    raise ValueError(
+                        f"{len(sitemap_urls) + 1} seeds; a crawl may seed at "
+                        f"most {SIBLING_LIMIT - 1}"
+                    )
+                # sorted(set(...)) seeding order (sitemap_parser.py:22,
+                # main.py:52-58): base first, then sitemap URLs by rank.
+                # Seeds are the only rows canonicalized and scope-filtered
+                # (P4) here (driver-side, handful of rows); expansions
+                # arrive pre-canonicalized and in scope.
+                seed_rows += [
+                    (normalize_url(u), priority(-1, i + 1))
+                    for i, u in enumerate(sitemap_urls)
+                ]
+                seed_rows = [row for row in seed_rows if row[0].startswith(base)]
+            # admitted once, here, whatever kind round 0 is
+            frontier_rows = admit_seeds(seed_rows, web, robots_cache_obj)
+            seen_set = set()
+            if not fast_round(frontier_rows):
+                # parent_seq -1 puts every seed in bucket 0 for any parents range
+                table, counts = frontier_table(
+                    frontier_rows, (0, 1), n_part, config.max_per_host_per_round,
+                )
+                frontier = spark.createDataFrame(table, FRONTIER_SCHEMA_V2)
+
+        r = start_round
         while r < config.max_rounds and processed < budget:
             t0 = time.time()
             sc.setJobDescription(f"crawl r{r}")
@@ -539,9 +530,8 @@ def run_crawl(
                 write_pages_parquet(pages_r_path, fr.pages)
                 frontier_path = catalog.table_path("frontier", r)
                 table, counts = frontier_table(
-                    fr.frontier_next, config.n_host_shards,
-                    (processed, processed + fr.due_count), n_part,
-                    config.max_per_host_per_round,
+                    fr.frontier_next, (processed, processed + fr.due_count),
+                    n_part, config.max_per_host_per_round,
                 )
                 write_frontier_parquet(frontier_path, table)
                 pages_rounds.append(r)
@@ -591,8 +581,9 @@ def run_crawl(
 
             # only the columns the fetch kernel consumes cross the exchange
             # and the Arrow boundary (mapInPandas ships every input column):
-            # priority/seq_bucket are dead past this point
-            due = due.select("url_norm", "seq", "round", "host", "host_shard")
+            # priority/seq_bucket are dead past this point, and the pages'
+            # host_shard lineage is derived here, over the due rows only
+            due = due.select("url_norm", "seq", "round", "host", host_shard_col())
 
             # GET-model fetch join + one Arrow extraction pass (S4-S7, F1-F3).
             # Strategy by round size:
@@ -730,11 +721,10 @@ def run_crawl(
             r += 1
     finally:
         sc.setJobDescription(caller_desc)
-
-    if not prepared:
-        web.unpersist()
-    if seen_cache is not None:
-        seen_cache.unpersist()
+        # however the crawl ends: the results below read only snapshots
+        for cached in (pages_r, seen_next, seen_cache, None if prepared else web):
+            if cached is not None:
+                cached.unpersist()
 
     # the loop may end while still in fast mode (seen_set-resident):
     # the authoritative seen set is always derivable from the pages

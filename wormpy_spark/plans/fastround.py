@@ -22,9 +22,8 @@ fast-vs-Spark equality including a mid-crawl transition):
   round pops its rows as-is: per-host deferral → seq → budget cut;
 - identical pages rows: the very same ``make_fetch_extract`` Arrow
   kernel produces them;
-- bit-identical ``host_shard``: pure-Python XXH64 (functions.xxhash)
-  matches Spark's ``xxhash64``, so the per-partition lineage column
-  of snapshots written here equals the Spark path's;
+- identical ``host_shard``: the due rows take it from the same JVM
+  column (operators/fetch.py ``host_shard_col``) as the Spark path's;
 - snapshot-compatible parquet: pyarrow writes the exact PAGES_SCHEMA /
   FRONTIER_SCHEMA_V2 arrow types, so Spark unions fast-round and
   Spark-round snapshot files transparently (resume, seen derivation,
@@ -51,37 +50,23 @@ from pyspark.sql import functions as F
 import pandas as pd
 
 from ..functions.urlnorm import get_domain, is_suspicious_url
-from ..functions.xxhash import pmod, xxhash64_str
-from ..operators.fetch import PAGES_SCHEMA_EXPAND, make_fetch_extract
+from ..operators.fetch import (
+    PAGES_SCHEMA_EXPAND,
+    pages_arrow_fields,
+    host_shard_col,
+    make_fetch_extract,
+)
 from ..operators.frontier import priority, seq_bucket
 
-PAGES_ARROW_SCHEMA = pa.schema(
-    [
-        ("seq", pa.int64()),
-        ("round", pa.int32()),
-        ("url_norm", pa.string()),
-        ("host", pa.string()),
-        ("host_shard", pa.int32()),
-        ("content_type", pa.string()),
-        ("text", pa.string()),
-        ("metadata", pa.map_(pa.string(), pa.string())),
-        ("discovered_urls", pa.list_(pa.string())),
-        ("error", pa.string()),
-        ("image_id", pa.string()),
-        ("attempts", pa.int32()),
-        ("fetch_failed_first", pa.bool_()),
-    ]
-)
+PAGES_ARROW_SCHEMA = pa.schema(pages_arrow_fields(expand=False))
 
 FRONTIER_ARROW_SCHEMA = pa.schema(
     [
         ("url_norm", pa.string()),
         ("priority", pa.int64()),
         # FRONTIER_SCHEMA_V2 admission-derived columns (see
-        # operators/frontier.py) — python-side xxhash64_str is
-        # parity-tested against F.xxhash64
+        # operators/frontier.py)
         ("host", pa.string()),
-        ("host_shard", pa.int32()),
         ("seq_bucket", pa.int32()),
         ("deferred", pa.bool_()),
     ]
@@ -146,21 +131,19 @@ def throttle_marks(rows: list[tuple], max_per_host: int | None) -> list[bool]:
 
 
 def frontier_table(
-    rows: list[tuple], n_host_shards: int,
-    parents: tuple[int, int], n_buckets: int, max_per_host: int | None,
+    rows: list[tuple], parents: tuple[int, int], n_buckets: int,
+    max_per_host: int | None,
 ) -> tuple[pa.Table, dict[int, int]]:
     """rows: ``(url_norm, priority)`` in priority order, as a
-    FRONTIER_SCHEMA_V2 table: the derived columns (host, host_shard,
-    seq_bucket over the parents' seq range ``parents``, the throttle's
-    ``deferred`` mark) are computed here so the Spark loop never
-    re-derives them. Also returns the unmarked rows per seq_bucket, as
-    ``_admit``'s write publishes them (plans/crawl.py)."""
-    hosts = [get_domain(un) for un, _ in rows]
+    FRONTIER_SCHEMA_V2 table: the derived columns (host, seq_bucket over
+    the parents' seq range ``parents``, the throttle's ``deferred``
+    mark) are computed here so the Spark loop never re-derives them.
+    Also returns the unmarked rows per seq_bucket, as ``_admit``'s write
+    publishes them (plans/crawl.py)."""
     cols: dict[str, list] = {
         "url_norm": [un for un, _ in rows],
         "priority": [prio for _, prio in rows],
-        "host": hosts,
-        "host_shard": [pmod(xxhash64_str(h), n_host_shards) for h in hosts],
+        "host": [get_domain(un) for un, _ in rows],
         "seq_bucket": [seq_bucket(prio, *parents, n_buckets) for _, prio in rows],
         "deferred": throttle_marks(rows, max_per_host),
     }
@@ -232,12 +215,9 @@ def run_fast_round(
             "host": [get_domain(un) for un, _ in due],
         }
     )
-    due_pdf["host_shard"] = [
-        pmod(xxhash64_str(h), config.n_host_shards) for h in due_pdf["host"]
-    ]
     due_df = spark.createDataFrame(
-        due_pdf, "url_norm string, seq long, round int, host string, host_shard int"
-    )
+        due_pdf, "url_norm string, seq long, round int, host string"
+    ).select("*", host_shard_col())
     # literal IN filter instead of a broadcast semi-join: the due keys
     # are already driver-resident (≤ fast_round_max) and a literal
     # predicate is eligible for the cache's batch-statistics pruning —

@@ -13,9 +13,10 @@ Layout:
     <root>/_manifest.json   {"round": r, "tables": {...}, "state": {...},
                              "history": [...]}
 
-Per-partition lineage (north_rule): every committed table carries the
-columns (round, host_shard) added by the crawl loop, so any partition
-file is traceable to the round and host shard that produced it.
+Per-partition lineage (north_rule): every pages snapshot carries the
+columns (round, host_shard) the crawl loop stamps on its due rows, so
+any pages row is traceable to the round and host shard that fetched
+it; a frontier snapshot is traceable to its round by its path.
 """
 
 from __future__ import annotations
